@@ -23,10 +23,16 @@ A from-scratch numpy implementation of the reference postings block layout
   - per-block competitive (freq, norm) impact skylines for block-max pruning
     (``CompetitiveImpactAccumulator.java:30-70``, ``Impact.java:20-26``).
 
-Encode/decode are array-at-a-time numpy (no per-row Python except the
-sequentially-dependent VInt-tail structure walk, bounded at <256 values per
-block). Round-trip identity is property-tested in tests/test_codec.py,
-mirroring ``BasePostingsFormatTestCase`` randomized round-trips.
+Encoding is array-at-a-time numpy, one term (``encode_postings``) or many
+terms (``encode_postings_batch``) per call. Decoding comes in two forms:
+``decode_block`` decodes one block, for the query paths, which read a few
+dozen blocks per query, and for ``check_index``, the independent scalar
+oracle. ``decode_blocks_batch`` decodes many blocks in one numpy pass, for
+the merge's cold-term re-gather, which reads tens of thousands of small
+tail blocks; its VInt-tail structure walk loops over posting ordinals
+(< 256), not over blocks. Round-trip identity and batch/scalar decode
+equality are property-tested in tests/test_codec.py, mirroring
+``BasePostingsFormatTestCase`` randomized round-trips.
 """
 
 from __future__ import annotations
@@ -90,13 +96,20 @@ def vint_decode(buf: np.ndarray) -> np.ndarray:
     b = np.asarray(buf, dtype=np.uint8)
     if b.size == 0:
         return np.zeros(0, dtype=np.uint64)
-    is_end = (b & 0x80) == 0
+    return _varints(b, (b & 0x80) == 0)[0]
+
+
+def _varints(b: np.ndarray, is_end: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Varint values of a non-empty uint8 buffer whose value-final bytes are
+    ``is_end`` -> (uint64 values, each value's first byte offset)."""
     ends = np.flatnonzero(is_end)
     starts = np.concatenate(([0], ends[:-1] + 1))
-    lengths = ends - starts + 1
-    pos = np.arange(b.size, dtype=np.int64) - np.repeat(starts, lengths)
-    contrib = (b.astype(np.uint64) & np.uint64(0x7F)) << (7 * pos).astype(np.uint64)
-    return np.add.reduceat(contrib, starts)
+    # byte ordinal within its value, capped at 9 (a uint64 needs <= 10
+    # bytes): longer junk runs then never shift by >= 64 bits
+    pos = np.minimum(
+        np.arange(b.size, dtype=np.int64) - np.repeat(starts, ends - starts + 1), 9)
+    contrib = (b & 0x7F).astype(np.uint64) << (7 * pos).astype(np.uint64)
+    return np.add.reduceat(contrib, starts), starts
 
 
 # ---------------------------------------------------------------- FOR packing
@@ -633,22 +646,122 @@ def encode_postings_batch(
     return out
 
 
-def decode_postings(blocks: list[dict]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Inverse of encode_postings over an ordered block list ->
-    (doc_ids, freqs, norm_bytes)."""
-    docs_all: list[np.ndarray] = []
-    freqs_all: list[np.ndarray] = []
-    norms_all: list[np.ndarray] = []
-    for blk in sorted(blocks, key=lambda x: x["block_id"]):
-        d, f, n = decode_block(blk["data"], blk["num_docs"], blk["first_doc"])
-        docs_all.append(d)
-        freqs_all.append(f)
-        norms_all.append(n)
-    if not docs_all:
+def decode_blocks_batch(
+    datas, num_docs, first_docs
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode MANY blocks in one numpy pass -> concatenated (doc_ids, freqs,
+    norm_bytes) int64 arrays in input block order; ``first_docs[i]`` is
+    block i's delta base (the ``prev_last_doc`` of ``decode_block``).
+
+    The inverse of ``encode_postings_batch`` and equal, block for block, to
+    ``decode_block``. VInt tail blocks (the bulk of a merge's cold-term
+    input: short lists from many segments) decode array-at-a-time:
+
+      - one varint pass over the concatenated tails, value ends forced at
+        each block's marker byte and last byte so no value spans blocks
+        (the norm bytes after a body parse as junk values, never read);
+      - the code/freq structure walk runs over posting ordinal k < 256 for
+        ALL blocks at once, the still-active blocks kept as a prefix by
+        sorting on num_docs;
+      - doc deltas by one segmented cumsum from each block's base;
+      - norms by one bit gather at each block's own width (<= 8, so a
+        value spans at most two bytes).
+
+    Full blocks (FOR or bitset doc section) keep the per-block path."""
+    datas = list(datas)
+    nd = np.asarray(num_docs, dtype=np.int64)
+    fd = np.asarray(first_docs, dtype=np.int64)
+    is_tail = np.fromiter(
+        (len(b) > 0 and b[0] == _TAIL_MARKER for b in datas), dtype=bool,
+        count=len(datas))
+    if is_tail.all():
+        return _decode_tails(datas, nd, fd)
+    out_end = np.cumsum(nd)
+    out_start = out_end - nd
+    total = int(out_end[-1])
+    docs = np.empty(total, dtype=np.int64)
+    freqs = np.empty(total, dtype=np.int64)
+    norms = np.empty(total, dtype=np.int64)
+    for j in np.flatnonzero(~is_tail).tolist():
+        lo, hi = int(out_start[j]), int(out_end[j])
+        docs[lo:hi], freqs[lo:hi], norms[lo:hi] = decode_block(
+            datas[j], int(nd[j]), int(fd[j]))
+    if is_tail.any():
+        rows = np.repeat(is_tail, nd)
+        docs[rows], freqs[rows], norms[rows] = _decode_tails(
+            [datas[j] for j in np.flatnonzero(is_tail).tolist()],
+            nd[is_tail], fd[is_tail])
+    return docs, freqs, norms
+
+
+def _decode_tails(
+    datas: list, nd: np.ndarray, fd: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``decode_blocks_batch`` over VInt tail blocks only."""
+    if not datas:
         z = np.zeros(0, dtype=np.int64)
         return z, z.copy(), z.copy()
-    return (
-        np.concatenate(docs_all),
-        np.concatenate(freqs_all),
-        np.concatenate(norms_all),
+    buf = np.frombuffer(b"".join(datas), dtype=np.uint8)
+    lens = np.fromiter(map(len, datas), dtype=np.int64, count=len(datas))
+    b_end = np.cumsum(lens)
+    b_start = b_end - lens
+
+    # ---- varints over the whole buffer, never spanning a block boundary
+    is_end = (buf & 0x80) == 0
+    is_end[b_start] = True
+    is_end[b_end - 1] = True
+    vals, v_start = _varints(buf, is_end)
+    step = 2 - (vals & np.uint64(1)).astype(np.int64)
+    body = np.searchsorted(v_start, b_start) + 1  # first value after the marker
+
+    # ---- code/freq walk: posting k of every block with num_docs > k
+    out_end = np.cumsum(nd)
+    out_start = out_end - nd
+    order = np.argsort(-nd, kind="stable")
+    o_body, o_out = body[order], out_start[order]
+    active = nd.size - np.searchsorted(np.sort(nd), np.arange(int(nd.max())),
+                                       side="right")
+    cur = np.zeros(nd.size, dtype=np.int64)
+    code_idx = np.empty(int(out_end[-1]), dtype=np.int64)
+    for k, m in enumerate(active.tolist()):
+        ci = o_body[:m] + cur[:m]
+        code_idx[o_out[:m] + k] = ci
+        cur[:m] += step[ci]
+    body_end = np.empty_like(cur)
+    body_end[order] = o_body + cur  # value index of each block's norm-width byte
+
+    codes = vals[code_idx]
+    deltas = (codes >> np.uint64(1)).astype(np.int64)
+    freqs = np.ones(code_idx.size, dtype=np.int64)
+    nf = (codes & np.uint64(1)) == 0
+    freqs[nf] = vals[code_idx[nf] + 1].astype(np.int64)
+    # segmented cumsum (int64 wraparound cancels in the subtraction)
+    cs = np.cumsum(deltas)
+    before = np.concatenate(([0], cs))[out_start]
+    docs = cs + np.repeat(fd - before, nd)
+
+    # ---- norms: FOR-unpack at each block's width via a two-byte gather
+    wn_at = v_start[body_end]
+    wn = buf[wn_at].astype(np.int64)
+    if (wn > 8).any():
+        raise ValueError("tail block norm width > 8")
+    ordinal = np.arange(code_idx.size, dtype=np.int64) - np.repeat(out_start, nd)
+    w = np.repeat(wn, nd)
+    bit = np.repeat((wn_at + 1) * 8, nd) + ordinal * w
+    # two zero pad bytes: a last block's width-0 norms point one past its end
+    padded = np.append(buf, np.zeros(2, dtype=np.uint8))
+    byte = bit >> 3
+    two = padded[byte].astype(np.int64) | (padded[byte + 1].astype(np.int64) << 8)
+    norms = (two >> (bit & 7)) & ((1 << w) - 1)
+    return docs, freqs, norms
+
+
+def decode_postings(blocks: list[dict]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Inverse of encode_postings over a term's block list ->
+    (doc_ids, freqs, norm_bytes)."""
+    blocks = sorted(blocks, key=lambda x: x["block_id"])
+    return decode_blocks_batch(
+        [b["data"] for b in blocks],
+        [b["num_docs"] for b in blocks],
+        [b["first_doc"] for b in blocks],
     )

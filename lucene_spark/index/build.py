@@ -1121,10 +1121,20 @@ def collection_stats(manifest: dict) -> tuple[int, int]:
     return doc_count, sum_ttf
 
 
+#: row schema of ``postings_local/`` and ``postings/`` (without their
+#: partition column); reading with it skips Spark's schema-inference job
+POSTINGS_SCHEMA = (
+    "term string, segment_id int, block_id int, first_doc long, last_doc long, "
+    "num_docs int, ttf long, data binary, "
+    "impact_freqs array<int>, impact_norms array<int>"
+)
+
+
 def read_postings_local(spark: SparkSession, index_dir: str) -> DataFrame:
     # drop the hive-partition column derived from segment=K dirs
     # (segment_id is stored explicitly in the rows)
-    return spark.read.parquet(os.path.join(index_dir, "postings_local")).drop("segment")
+    return (spark.read.schema(POSTINGS_SCHEMA)
+            .parquet(os.path.join(index_dir, "postings_local")).drop("segment"))
 
 
 def read_docmap(spark: SparkSession, index_dir: str) -> DataFrame:

@@ -22,6 +22,14 @@ remap:
        explicit skew-salting stage (SURVEY.md §7 R3). At 10^12 turns a
        stopword's posting list is ~10^11 entries; any design that funnels it
        through one task is dead on arrival.
+
+Spark jobs with positions off (7; counted by ``perfbench`` on local[4]):
+the term_dict partial aggregate, its range-partitioned final aggregate and
+its write; one collect of the hot-term list; the cold rows' merge-bucket
+shuffle; the re-gather (applyInPandas) unioned with the hot pass-through;
+the postings write. ``postings_local`` and ``term_dict`` are read with
+explicit schemas, so no schema-inference job runs. Positions, when indexed,
+add their own relayout jobs.
 """
 
 from __future__ import annotations
@@ -35,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucene_spark.index.build import (
+    POSTINGS_SCHEMA,
     IndexConfig,
     load_manifest,
     read_postings_local,
@@ -43,10 +52,8 @@ from lucene_spark.index.build import (
 
 MERGED_SEGMENT_ID = -1
 
-_POSTINGS_SCHEMA = (
-    "term string, segment_id int, block_id int, first_doc long, last_doc long, "
-    "num_docs int, ttf long, data binary, "
-    "impact_freqs array<int>, impact_norms array<int>"
+_TERM_DICT_SCHEMA = (
+    "term string, doc_freq long, total_term_freq long, num_blocks long"
 )
 
 
@@ -75,16 +82,19 @@ def merge_index(spark: SparkSession, index_dir: str) -> dict:
         .write.mode("overwrite")
         .parquet(td_path)
     )
-    term_dict = spark.read.parquet(td_path)
 
     # ---- 2. global postings
-    hot = config.hot_term_df
-    df_of_term = term_dict.select("term", "doc_freq")
-    tagged = local.join(F.broadcast(df_of_term.filter(F.col("doc_freq") >= hot)),
-                        on="term", how="left")
-    # (broadcast of the hot-term list: Zipf head is tiny by construction)
-    cold = tagged.filter(F.col("doc_freq").isNull()).drop("doc_freq")
-    hot_rows = tagged.filter(F.col("doc_freq").isNotNull()).drop("doc_freq")
+    # the hot-term list comes to the driver ONCE and tags rows as a literal
+    # set: it holds at most total postings / hot_term_df terms (the Zipf
+    # head). A broadcast join would run its broadcast once per side: the
+    # optimizer plans the hot side as an inner join, so they share no exchange.
+    hot_terms = [
+        r["term"] for r in read_term_dict(spark, index_dir)
+        .filter(F.col("doc_freq") >= config.hot_term_df).select("term").collect()
+    ]
+    is_hot = F.col("term").isin(hot_terms)
+    cold = local.filter(~is_hot)
+    hot_rows = local.filter(is_hot)
 
     # re-merge cold terms BUCKET-at-a-time: one pandas group per term would
     # mean one Arrow round-trip per term (tens of thousands); per-bucket
@@ -94,7 +104,7 @@ def merge_index(spark: SparkSession, index_dir: str) -> dict:
     merged_cold = (
         cold.withColumn("merge_bucket", term_bucket_col(n_buckets))
         .groupBy("merge_bucket")
-        .applyInPandas(_remerge_bucket, _POSTINGS_SCHEMA)
+        .applyInPandas(_remerge_bucket, POSTINGS_SCHEMA)
     )
 
     buckets = config.term_buckets
@@ -143,7 +153,7 @@ def _remerge_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     and re-block with the vectorized batch encoder, no docID remap
     (contrast ``DocIDMerger.java:73-99``).
     """
-    from lucene_spark.functions.codec import decode_block, encode_postings_batch
+    from lucene_spark.functions.codec import decode_blocks_batch, encode_postings_batch
 
     if not len(pdf):
         return pd.DataFrame(
@@ -151,22 +161,11 @@ def _remerge_bucket(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
                      "num_docs", "ttf", "data", "impact_freqs", "impact_norms"]
         )
     pdf = pdf.sort_values(["term", "segment_id", "block_id"], kind="mergesort")
-    docs_l, freqs_l, norms_l = [], [], []
-    for nd, fd, data in zip(
-        pdf["num_docs"].to_numpy(np.int64),
-        pdf["first_doc"].to_numpy(np.int64),
-        pdf["data"].to_numpy(object),
-    ):
-        d, f, nb = decode_block(data, int(nd), int(fd))
-        docs_l.append(d)
-        freqs_l.append(f)
-        norms_l.append(nb)
-    docs = np.concatenate(docs_l)
-    freqs = np.concatenate(freqs_l)
-    norms = np.concatenate(norms_l)
+    sizes = pdf["num_docs"].to_numpy(np.int64)
+    docs, freqs, norms = decode_blocks_batch(
+        pdf["data"].to_numpy(object), sizes, pdf["first_doc"].to_numpy(np.int64))
 
     terms = pdf["term"].to_numpy(object)
-    sizes = pdf["num_docs"].to_numpy(np.int64)
     # per-term posting ranges in the concatenated arrays
     tchange = np.concatenate(([True], terms[1:] != terms[:-1]))
     row_ends = np.cumsum(sizes)
@@ -198,7 +197,8 @@ def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
 
 
 def read_term_dict(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(index_dir, "term_dict"))
+    return spark.read.schema(_TERM_DICT_SCHEMA).parquet(
+        os.path.join(index_dir, "term_dict"))
 
 
 def term_bucket_col(buckets: int):

@@ -100,9 +100,10 @@ def update_docs(
 
 #: docmap columns the engine owns — updating them would corrupt docID
 #: assignment or silently DIVERGE from the norms baked into the postings
-#: (field_len feeds SmallFloat norms at build time; a DV update cannot
+#: (field_len feeds SmallFloat norms at build time and norm_byte IS that
+#: norm, also the source of the per-block impact bounds; a DV update cannot
 #: reach them, exactly as the reference's DV updates cannot change norms)
-_RESERVED_DV_COLS = frozenset(("doc_id", "segment", "field_len"))
+_RESERVED_DV_COLS = frozenset(("doc_id", "segment", "field_len", "norm_byte"))
 
 
 def update_doc_values(
@@ -129,7 +130,7 @@ def update_doc_values(
     reference's DV-update property); every metadata surface (field
     filters, facets, function scores, sort fields, grouping) sees the
     new values on the next open. Reserved columns (docID assignment,
-    norms source) raise."""
+    norms) and a key repeated in ``values`` raise."""
     import os
 
     from pyspark.sql import functions as F
@@ -146,8 +147,8 @@ def update_doc_values(
     if bad:
         raise ValueError(
             f"cannot update engine-owned docmap columns {sorted(bad)}: "
-            "doc_id/segment drive docID assignment and field_len is the "
-            "norms source already baked into the postings (rebuild or "
+            "doc_id/segment drive docID assignment and field_len/norm_byte "
+            "are the norms already baked into the postings (rebuild or "
             "update_docs instead)")
 
     dm_path = os.path.join(index_dir, "docmap")
@@ -156,6 +157,14 @@ def update_doc_values(
     missing = set(key_cols) - set(dm.columns)
     if missing:
         raise ValueError(f"key columns {sorted(missing)} not in docmap")
+    # a repeated key would fan out the left join below and persist
+    # duplicate docmap rows (duplicate doc_ids)
+    dup = (values.groupBy(*key_cols).count()
+           .filter(F.col("count") > 1).first())
+    if dup is not None:
+        raise ValueError(
+            f"values has duplicate keys, e.g. "
+            f"{tuple(dup[c] for c in key_cols)} x{dup['count']}")
     vals = values.select(
         *key_cols, *[F.col(c).alias(f"__new_{c}") for c in upd_cols])
     joined = dm.join(vals, on=list(key_cols), how="left")

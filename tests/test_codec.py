@@ -8,9 +8,12 @@ from lucene_spark.functions.codec import (
     BLOCK_SIZE,
     competitive_impacts,
     decode_block,
+    decode_blocks_batch,
     decode_postings,
     encode_block,
     encode_postings,
+    encode_postings_batch,
+    pfor_encode_freqs,
     for_pack,
     for_unpack,
     vint_decode,
@@ -193,3 +196,88 @@ def test_bitset_dense_block_roundtrip_and_size():
             np.testing.assert_array_equal(f, freqs_all[lo:hi])
             np.testing.assert_array_equal(nb, norms_all[lo:hi])
             j += 1
+
+
+def _scalar_decode_all(datas, nds, bases):
+    parts = [decode_block(d, n, b) for d, n, b in zip(datas, nds, bases)]
+    return tuple(
+        np.concatenate([p[k] for p in parts]) if parts else np.zeros(0, np.int64)
+        for k in range(3))
+
+
+def _mixed_blocks(rng):
+    """One of every block layout the encoders write, in random order:
+    (data, num_docs, delta base, kind)."""
+    blocks = []
+
+    def scalar(docs, freqs, norms, kind, base=None):
+        base = int(docs[0]) if base is None else base
+        blocks.append((encode_block(docs, freqs, base, norms), docs.size,
+                       base, kind))
+
+    for _ in range(40):
+        # scalar tails: norms FOR-packed at their own width (0..8 bits)
+        n = int(rng.integers(1, BLOCK_SIZE))
+        docs = np.sort(rng.choice(10**6, n, replace=False))
+        freqs = rng.integers(1, 40, n)
+        freqs[rng.random(n) < 0.5] = 1
+        w = int(rng.integers(0, 9))
+        scalar(docs, freqs, rng.integers(0, 1 << w, n), "tail")
+    # 1-posting, all-unfolded, all-folded, ids above 2^32, nonzero delta base
+    scalar(np.array([7]), np.array([1]), np.array([3]), "tail")
+    scalar(np.array([9]), np.array([300]), np.array([255]), "tail")
+    docs = np.sort(rng.choice(10**5, 200, replace=False))
+    scalar(docs, rng.integers(2, 10**6, 200), rng.integers(0, 256, 200), "tail")
+    scalar(docs, np.ones(200, np.int64), rng.integers(0, 256, 200), "tail")
+    big = np.sort(rng.choice(10**9, 100, replace=False)) + (1 << 40)
+    scalar(big, rng.integers(1, 5, 100), rng.integers(0, 256, 100), "tail")
+    scalar(docs[1:], rng.integers(1, 5, 199), rng.integers(0, 256, 199), "tail",
+           base=int(docs[0]))
+    # full blocks: FOR doc deltas, bitset doc section, PFOR freq exceptions
+    sparse = np.sort(rng.choice(10**7, BLOCK_SIZE, replace=False)) + (1 << 33)
+    dense = np.sort(rng.choice(300, BLOCK_SIZE, replace=False)) + 5000
+    spiky = rng.integers(1, 4, BLOCK_SIZE)
+    spiky[rng.choice(BLOCK_SIZE, 5, replace=False)] = 10**6
+    assert pfor_encode_freqs(spiky)[0] & 0x80  # patched form engaged
+    for docs in (sparse, dense):
+        for freqs in (rng.integers(1, 50, BLOCK_SIZE), spiky):
+            scalar(docs, freqs, rng.integers(0, 256, BLOCK_SIZE), "full")
+    # batch-encoder tails (width-8 raw norms) and full blocks
+    sizes = rng.integers(1, 700, 12)
+    ends = np.cumsum(sizes)
+    starts = ends - sizes
+    bdocs = np.concatenate([np.sort(rng.choice(10**6, s, replace=False))
+                            for s in sizes])
+    bfreqs = rng.integers(1, 30, bdocs.size)
+    bfreqs[rng.random(bdocs.size) < 0.6] = 1
+    out = encode_postings_batch(bdocs, bfreqs, rng.integers(0, 256, bdocs.size),
+                                starts, ends)
+    for data, n, first in zip(out["data"], out["num_docs"], out["first_doc"]):
+        blocks.append((data, n, first, "tail" if n < BLOCK_SIZE else "full"))
+    return [blocks[i] for i in rng.permutation(len(blocks))]
+
+
+@pytest.mark.parametrize("seed", range(5))
+def test_decode_blocks_batch_matches_scalar(seed):
+    """The batch decoder equals block-by-block decode_block on a shuffled
+    mix of every layout, and on the tails-only and full-only subsets."""
+    from lucene_spark.functions.codec import _BITSET_MARKER, _TAIL_MARKER
+
+    blocks = _mixed_blocks(np.random.default_rng(seed))
+    markers = {b[0][0] for b in blocks}
+    assert {_TAIL_MARKER, _BITSET_MARKER} <= markers
+    assert any(m <= 64 for m in markers)  # a FOR doc-section width byte
+    for subset in (blocks, [b for b in blocks if b[3] == "tail"],
+                   [b for b in blocks if b[3] == "full"]):
+        datas, nds, bases, _ = zip(*subset)
+        got = decode_blocks_batch(list(datas), nds, bases)
+        for g, e in zip(got, _scalar_decode_all(datas, nds, bases)):
+            assert g.dtype == np.int64
+            np.testing.assert_array_equal(g, e)
+
+
+def test_decode_blocks_batch_empty():
+    for arr in decode_blocks_batch([], [], []):
+        assert arr.dtype == np.int64 and arr.size == 0
+    d, f, n = decode_postings([])
+    assert d.size == f.size == n.size == 0

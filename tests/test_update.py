@@ -254,6 +254,48 @@ def test_update_doc_values_relabels_without_reindex(spark,
                                                       F.lit(1)))
 
 
+@pytest.fixture(scope="module")
+def dv_index(spark, tmp_path_factory):
+    idx = str(tmp_path_factory.mktemp("dvguard") / "idx")
+    _build(spark, idx, generate_pandas(n_convs=8, seed=62, vocab_size=100,
+                                       max_turns=4))
+    return idx
+
+
+def test_update_doc_values_rejects_norm_byte(spark, dv_index):
+    """norm_byte is the scoring norm (and the source of the per-block impact
+    bounds) baked into the postings: a DV update must not touch it."""
+    from lucene_spark.index.update import update_doc_values
+
+    gen = load_manifest(dv_index)["generation"]
+    vals = (IndexSearcher(spark, dv_index).docmap()
+            .select("conv_id", "turn_idx").withColumn("norm_byte", F.lit(1)))
+    with pytest.raises(ValueError, match="engine-owned.*norm_byte"):
+        update_doc_values(spark, dv_index, vals)
+    assert load_manifest(dv_index)["generation"] == gen
+
+
+def test_update_doc_values_rejects_duplicate_keys(spark, dv_index):
+    """Two update rows for one key would fan out the docmap join and
+    persist duplicate doc_ids; the update raises and commits nothing."""
+    from lucene_spark.index.update import update_doc_values
+
+    s0 = IndexSearcher(spark, dv_index)
+    n_docs = s0.docmap().count()
+    key = s0.docmap().select("conv_id", "turn_idx").first()
+    vals = spark.createDataFrame(
+        [(key["conv_id"], key["turn_idx"], "a"),
+         (key["conv_id"], key["turn_idx"], "b")],
+        "conv_id string, turn_idx int, label string")
+    gen = load_manifest(dv_index)["generation"]
+    with pytest.raises(ValueError, match="duplicate"):
+        update_doc_values(spark, dv_index, vals)
+    assert load_manifest(dv_index)["generation"] == gen
+    s1 = IndexSearcher(spark, dv_index)
+    assert s1.docmap().count() == n_docs
+    assert "label" not in s1.docmap().columns
+
+
 def test_pinned_searcher_does_not_see_later_deletes(spark, tmp_path_factory):
     """liveDocs-per-commit: a searcher opened before a delete keeps
     serving its own commit point's live set (the manifest-resolved
