@@ -244,13 +244,18 @@ def read_deletes(spark: SparkSession, index_dir: str,
     (``deletes_data`` generation dir) — a pinned searcher passes its own
     manifest and never sees later deletes or staged-uncommitted ones.
     Without one (legacy callers), falls back to the live manifest, then
-    to the legacy flat ``deletes/`` dir."""
+    to the legacy flat ``deletes/`` dir. Raises FileNotFoundError when the
+    manifest names a generation that is gone (pruned by a later commit):
+    answering without it would resurrect that commit point's deleted docs."""
     if manifest is None:
         manifest = load_manifest(index_dir)
     if manifest is not None and manifest.get("deletes_data"):
         p = os.path.join(index_dir, manifest["deletes_data"])
-        if os.path.isdir(p):
-            return spark.read.parquet(p).select("doc_id").distinct()
+        if not os.path.isdir(p):
+            raise FileNotFoundError(
+                f"{p}: delete generation named by the manifest is gone; "
+                "reopen the searcher on the current commit")
+        return spark.read.parquet(p).select("doc_id").distinct()
     p = os.path.join(index_dir, DELETES_DIR)
     if not os.path.exists(p):
         return None
@@ -388,7 +393,6 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
                       ignore_errors=True)
         manifest["has_deletes"] = False
         manifest.pop("deletes_data", None)
-        prune_delete_generations(index_dir, keep=None)
         manifest["generation"] += 1
         # no docID moved — retained soft deletes keep their ids; an
         # all-bogus soft purge set clears like the hard one
@@ -408,6 +412,9 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
         if manifest.get("doc_layout"):
             manifest["doc_layout"]["built_at_generation"] = manifest["generation"]
         write_manifest(index_dir, manifest)
+        # pruned only after the commit: read_deletes raises on a
+        # manifest whose named generation is gone
+        prune_delete_generations(index_dir, keep=None)
         return manifest
 
     staged.write.mode("overwrite").partitionBy("srange").parquet(staging)

@@ -65,12 +65,7 @@ def fvh_highlight_hits(
             "FVH needs stored offsets (IndexConfig.offsets=True)")
 
     num_docs = int(searcher.doc_count)
-    df_rows = (
-        searcher.term_dict.filter(F.col("term").isin(terms))
-        .select("term", "doc_freq").collect()
-        if terms else []
-    )
-    dfs = {r["term"]: int(r["doc_freq"]) for r in df_rows}
+    dfs = {t: df for t, (df, _) in searcher.term_stats(terms).items()}
     weights = {t: term_weight(num_docs, dfs.get(t, 0)) for t in terms}
 
     buckets = sorted({term_bucket_of(t, searcher.buckets) for t in terms})

@@ -72,28 +72,16 @@ class MultiIndexSearcher:
 
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """Composite (df, ttf) per term — sums across leaves
-        (``IndexSearcher.termStatistics`` over a composite reader). ONE
-        Spark job over the unioned term_dict metadata, not a sequential
-        collect per leaf. (Each leaf's own weight computation still reads
-        its term_dict when it scores — that read is tiny metadata; the
-        composite df rides in on df_override.)"""
-        if not terms:
-            return {}
-        parts = [
-            leaf.term_dict.filter(F.col("term").isin(list(set(terms))))
-            .select("term", "doc_freq", "total_term_freq")
-            for leaf in self.leaves
-        ]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        rows = (
-            u.groupBy("term")
-            .agg(F.sum("doc_freq").alias("df"),
-                 F.sum("total_term_freq").alias("ttf"))
-            .collect()
-        )
-        return {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
+        (``IndexSearcher.termStatistics`` over a composite reader), from
+        each leaf's driver-side term_dict lookup; no Spark job. (Each
+        leaf's own weight computation still reads its term_dict when it
+        scores; the composite df rides in on df_override.)"""
+        out: dict[str, tuple[int, int]] = {}
+        for leaf in self.leaves:
+            for t, (df, ttf) in leaf.term_stats(terms).items():
+                d0, t0 = out.get(t, (0, 0))
+                out[t] = (d0 + df, t0 + ttf)
+        return out
 
     def docmap(self) -> DataFrame:
         """Union of leaf docmaps with docIDs re-based by docBase."""

@@ -338,16 +338,35 @@ class IndexSearcher:
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """term -> (doc_freq, total_term_freq), absent terms omitted.
 
-        TermStatistics summed over segments (TermQuery.java:64-82); the
-        term_dict read prunes on the sorted term column."""
+        TermStatistics summed over segments (TermQuery.java:64-82), read
+        on the driver with no Spark job (``_term_dict_rows``)."""
+        return {t: v[:2] for t, v in self._term_dict_rows(terms).items()}
+
+    def _term_dict_rows(self, terms: list[str]
+                        ) -> dict[str, tuple[int, int, int]]:
+        """term -> (doc_freq, total_term_freq, num_blocks) from a driver-side
+        pyarrow read of ``term_dict/``. Its files are range-partitioned and
+        sorted by term, so row-group statistics prune the read to the
+        terms' [min, max] span (pyarrow prunes on the range, not on
+        ``isin``). The directory is listed on every call and
+        ``_``/``.``-prefixed files are skipped as Spark skips them, so after
+        a term_dict swap this sees the files Spark's refreshed listing
+        would."""
         if not terms:
             return {}
-        rows = (
-            self.term_dict.filter(F.col("term").isin(list(set(terms))))
-            .select("term", "doc_freq", "total_term_freq")
-            .collect()
-        )
-        return {r["term"]: (int(r["doc_freq"]), int(r["total_term_freq"])) for r in rows}
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        uniq = sorted(set(terms))
+        col = ds.field("term")
+        schema = pa.schema([("term", pa.string()), ("doc_freq", pa.int64()),
+                            ("total_term_freq", pa.int64()),
+                            ("num_blocks", pa.int64())])
+        t = ds.dataset(os.path.join(self.index_dir, "term_dict"),
+                       schema=schema, format="parquet").to_table(
+            filter=(col >= uniq[0]) & (col <= uniq[-1]) & col.isin(uniq))
+        cols = [t.column(c).to_pylist() for c in schema.names]
+        return {term: (df, ttf, nb) for term, df, ttf, nb in zip(*cols)}
 
     def docmap(self) -> DataFrame:
         if self._docmap is None:
@@ -1600,21 +1619,11 @@ class IndexSearcher:
         if not (isinstance(q, BooleanQuery) and self._is_flat(q)):
             raise ValueError("profile supports flat Boolean/term queries")
         clauses = self._clauses_of(q, np.float32(1.0))
-        stats = {
-            r["term"]: (int(r["doc_freq"]), int(r["num_blocks"]),
-                        int(r["total_term_freq"]))
-            for r in self.term_dict.filter(
-                F.col("term").isin(sorted({c.term for c in clauses})))
-            .select("term", "doc_freq", "num_blocks",
-                    "total_term_freq").collect()
-        }
-        leaf_rows = [
-            (i, f"leaf:{c.kind}", c.term,
-             stats.get(c.term, (0, 0, 0))[0],
-             stats.get(c.term, (0, 0, 0))[1],
-             stats.get(c.term, (0, 0, 0))[2])
-            for i, c in enumerate(clauses)
-        ]
+        stats = self._term_dict_rows([c.term for c in clauses])
+        leaf_rows = []
+        for i, c in enumerate(clauses):
+            df, ttf, blocks = stats.get(c.term, (0, 0, 0))
+            leaf_rows.append((i, f"leaf:{c.kind}", c.term, df, blocks, ttf))
 
         n_must = sum(1 for c in clauses if c.kind == "must")
         n_filter = sum(1 for c in clauses if c.kind == "filter")

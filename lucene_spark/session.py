@@ -18,6 +18,14 @@ def get_spark(
     Local sandbox: ``local[$SPARK_GRAFT_CPUS]``. On a real cluster the same
     code runs under spark-submit --py-files and `master` is left to the
     submitter. AQE stays on so skewed shuffles re-plan at runtime.
+
+    Local masters also start Python workers through
+    ``lucene_spark.worker_daemon``, which stops each task from re-reading
+    ``pyspark.zip`` before its UDF body runs (about 0.2 s of worker CPU
+    per task on Python 3.11). Only local masters get it: there the
+    workers inherit this process's ``PYTHONPATH``, which holds the
+    package. Cluster submits keep Spark's default daemon: this function
+    does not control the executors' ``PYTHONPATH`` there.
     """
     # Python workers don't inherit the driver's sys.path — make the package
     # importable executor-side (spark-submit --py-files equivalent for local
@@ -40,10 +48,15 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
+    if master is None and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+        # local / local[N] / local[N,F] run workers from this process's
+        # environment; local-cluster executors are separate launches
+        if master == "local" or master.startswith("local["):
+            builder = builder.config("spark.python.daemon.module",
+                                     "lucene_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

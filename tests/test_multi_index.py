@@ -117,3 +117,28 @@ def test_multi_match_no_docs_and_stats_one_job(spark, split_indexes):
     q = BooleanQuery(should=[TermQuery("x")], min_should_match=2)
     assert multi.search(q, 10).count() == 0
     assert multi.search(MatchNoDocsQuery(), 10).count() == 0
+
+
+def test_multi_composite_stats_equal_summed_spark_reads(spark, split_indexes):
+    """Composite (df, ttf) from the leaves' driver-side lookups equals the
+    per-term sum of a Spark read over every leaf's term_dict."""
+    from pyspark.sql import functions as F
+
+    from lucene_spark.index.merge import read_term_dict
+
+    multi = MultiIndexSearcher(spark, split_indexes)
+    union = read_term_dict(spark, split_indexes[0])
+    for d in split_indexes[1:]:
+        union = union.unionByName(read_term_dict(spark, d))
+    want = {
+        r["term"]: (int(r["df"]), int(r["ttf"]))
+        for r in union.groupBy("term").agg(
+            F.sum("doc_freq").alias("df"),
+            F.sum("total_term_freq").alias("ttf")).collect()
+    }
+    rng = random.Random(9)
+    terms = rng.sample(sorted(want), 30) + ["zzzz-absent"]
+    assert multi.term_stats(terms + terms[:3]) == {t: want[t] for t in terms
+                                                    if t in want}
+    assert multi.term_stats(sorted(want)) == want
+    assert multi.term_stats([]) == {}

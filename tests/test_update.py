@@ -313,3 +313,25 @@ def test_pinned_searcher_does_not_see_later_deletes(spark, tmp_path_factory):
     assert s_pin.count(MatchAllDocsQuery()) == n
     # a fresh open sees the delete commit
     assert IndexSearcher(spark, idx).count(MatchAllDocsQuery()) == n - 2
+
+
+def test_pinned_searcher_raises_when_its_delete_generation_is_pruned(
+        spark, tmp_path_factory):
+    """A later delete commit prunes the generation a pinned searcher's
+    manifest names. Resolving that searcher's tombstones must then fail
+    loudly, never serve the commit point with its deleted docs back."""
+    from lucene_spark.index.deletes import delete_docs
+
+    base = generate_pandas(n_convs=12, seed=44, vocab_size=200, max_turns=5)
+    idx = str(tmp_path_factory.mktemp("pruned") / "idx")
+    _build(spark, idx, base)
+    delete_docs(spark, idx, spark.createDataFrame([(0,)], "doc_id long"))
+    s_pin = IndexSearcher(spark, idx)  # names deletes_g<n>, not read yet
+    pinned_gen = s_pin.manifest["deletes_data"]
+    delete_docs(spark, idx, spark.createDataFrame([(1,)], "doc_id long"))
+    assert not os.path.exists(os.path.join(idx, pinned_gen))
+    with pytest.raises(FileNotFoundError, match=pinned_gen):
+        s_pin.count(MatchAllDocsQuery())
+    # the current commit point still resolves its own generation
+    s_new = IndexSearcher(spark, idx)
+    assert s_new.count(MatchAllDocsQuery()) == s_new.doc_count - 2
