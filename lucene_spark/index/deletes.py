@@ -222,18 +222,66 @@ def _prune_soft_generations(index_dir: str, keep: str | None) -> None:
         pass
 
 
-def read_soft_deletes(spark: SparkSession, index_dir: str,
-                      manifest: dict | None = None) -> DataFrame | None:
-    """DF(doc_id) of SOFT tombstones at the manifest's commit point, or
-    None."""
+def _soft_deletes_dir(index_dir: str, manifest: dict | None) -> str | None:
     if manifest is None:
         manifest = load_manifest(index_dir)
     if manifest is None or not manifest.get("soft_deletes_data"):
         return None
     p = os.path.join(index_dir, manifest["soft_deletes_data"])
-    if not os.path.isdir(p):
+    return p if os.path.isdir(p) else None
+
+
+def _hard_deletes_dir(index_dir: str, manifest: dict | None) -> str | None:
+    if manifest is None:
+        manifest = load_manifest(index_dir)
+    if manifest is not None and manifest.get("deletes_data"):
+        p = os.path.join(index_dir, manifest["deletes_data"])
+        if not os.path.isdir(p):
+            raise FileNotFoundError(
+                f"{p}: delete generation named by the manifest is gone; "
+                "reopen the searcher on the current commit")
+        return p
+    p = os.path.join(index_dir, DELETES_DIR)
+    return p if os.path.exists(p) else None
+
+
+def tombstone_dirs(index_dir: str, manifest: dict,
+                   include_soft: bool) -> list[str]:
+    """The parquet dirs holding the commit point's tombstones: the hard
+    set (``read_deletes``) and, with ``include_soft``, the soft set
+    (``read_soft_deletes``)."""
+    dirs = [_hard_deletes_dir(index_dir, manifest)]
+    if include_soft:
+        dirs.append(_soft_deletes_dir(index_dir, manifest))
+    return [d for d in dirs if d is not None]
+
+
+def read_tombstone_ids(dirs: list[str], cap: int):
+    """Sorted distinct doc ids stored in ``dirs``, read on the driver with
+    pyarrow (no Spark job), or None when their parquet footers count more
+    than ``cap`` rows — the size is decided before any id is read."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    parts = [ds.dataset(d, format="parquet",
+                        schema=pa.schema([("doc_id", pa.int64())]))
+             for d in dirs]
+    if sum(p.count_rows() for p in parts) > cap:
         return None
-    return spark.read.parquet(p).select("doc_id").distinct()
+    return np.unique(np.concatenate(
+        [np.zeros(0, dtype=np.int64)]
+        + [p.to_table(columns=["doc_id"]).column("doc_id").to_numpy()
+           for p in parts]))
+
+
+def read_soft_deletes(spark: SparkSession, index_dir: str,
+                      manifest: dict | None = None) -> DataFrame | None:
+    """DF(doc_id) of SOFT tombstones at the manifest's commit point, or
+    None."""
+    p = _soft_deletes_dir(index_dir, manifest)
+    return None if p is None else (
+        spark.read.parquet(p).select("doc_id").distinct())
 
 
 def read_deletes(spark: SparkSession, index_dir: str,
@@ -247,19 +295,9 @@ def read_deletes(spark: SparkSession, index_dir: str,
     to the legacy flat ``deletes/`` dir. Raises FileNotFoundError when the
     manifest names a generation that is gone (pruned by a later commit):
     answering without it would resurrect that commit point's deleted docs."""
-    if manifest is None:
-        manifest = load_manifest(index_dir)
-    if manifest is not None and manifest.get("deletes_data"):
-        p = os.path.join(index_dir, manifest["deletes_data"])
-        if not os.path.isdir(p):
-            raise FileNotFoundError(
-                f"{p}: delete generation named by the manifest is gone; "
-                "reopen the searcher on the current commit")
-        return spark.read.parquet(p).select("doc_id").distinct()
-    p = os.path.join(index_dir, DELETES_DIR)
-    if not os.path.exists(p):
-        return None
-    return spark.read.parquet(p).select("doc_id").distinct()
+    p = _hard_deletes_dir(index_dir, manifest)
+    return None if p is None else (
+        spark.read.parquet(p).select("doc_id").distinct())
 
 
 def expunge_deletes(spark: SparkSession, index_dir: str,

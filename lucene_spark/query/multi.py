@@ -39,6 +39,7 @@ from lucene_spark.query.ast import (
     TermQuery,
     rewrite_fixpoint,
 )
+from lucene_spark.query.local import empty_hits
 from lucene_spark.query.search import IndexSearcher
 
 
@@ -134,7 +135,7 @@ class MultiIndexSearcher:
         ``TopDocs.merge`` semantics. DF(doc_id long, score float)."""
         q = rewrite_fixpoint(query)
         if isinstance(q, MatchNoDocsQuery):
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return empty_hits(self.spark)
         stats = self.term_stats(sorted(set(self._terms_of(q))))
         q = self._override_dfs(q, stats)
         parts = []

@@ -23,6 +23,10 @@ Physical plan (the part that must survive 100 TB):
     because every Lucene pruning mechanism (WAND, block-max, MAXSCORE) is
     score-safe (SURVEY.md §4); block-max pruning is a pure optimization here
     (impact metadata is in the table, see prune_blocks).
+  - below ``IndexSearcher.LOCAL_POSTINGS_MAX`` postings, term and flat
+    Boolean queries skip Spark entirely: the same blocks are read, decoded,
+    scored and combined on the driver (``query/local.py``), with identical
+    results and no job.
 
 Every Lucene pruning trick being score-safe also means: this plan's results
 are *identical* at any parallelism, which is what makes the N -> 4N scaling
@@ -43,6 +47,7 @@ from pyspark.sql import functions as F
 from lucene_spark.functions import bm25
 from lucene_spark.index.build import collection_stats, load_manifest
 from lucene_spark.index.merge import term_bucket_of
+from lucene_spark.query import local
 from lucene_spark.query.ast import (
     BlendedTermQuery,
     BooleanQuery,
@@ -282,7 +287,7 @@ class IndexSearcher:
             bool(manifest.get("has_soft_deletes"))
             and not self.include_soft_deletes)
         self._deletes_df: DataFrame | None = None
-        self._deletes_count: int | None = None
+        self._deletes_ids: np.ndarray | None = None
 
     #: above this many tombstones the anti-join falls back from broadcast
     #: (driver+executor copies of the whole set) to a shuffle anti-join —
@@ -291,47 +296,62 @@ class IndexSearcher:
     #: around to it
     BROADCAST_DELETES_MAX = 2_000_000
 
+    #: term and flat-Boolean queries whose distinct terms hold at most this
+    #: many postings (term_dict doc_freq summed) run on the driver
+    #: (``query/local.py``) and launch no Spark job. At local[4] the driver
+    #: still beat Spark at 850k postings (BENCH.md); the bound stays well
+    #: below that because the driver decodes on one core while Spark's
+    #: decode scales with the cluster's.
+    LOCAL_POSTINGS_MAX = 1 << 18
+
     #: smallest docID prefix/suffix the sorted early-termination probes
     #: (below this the fixed per-job overhead dominates any saved decode)
     SORTED_PROBE_MIN_SPAN = 4096
 
-    def _live(self, df: DataFrame | None) -> DataFrame | None:
-        """Anti-join tombstoned docs out of a (doc_id, ...) frame. Small
-        tombstone sets broadcast (one count job, cached per searcher);
-        large ones shuffle anti-join so no single executor materializes
-        the full set."""
-        if df is None or not self.has_deletes:
-            return df
-        if self._deletes_df is None:
+    def _tombstones(self) -> np.ndarray | None:
+        """Sorted tombstoned doc ids of this searcher's commit point (an
+        empty array when it has none), or None when there are more than
+        BROADCAST_DELETES_MAX. Resolved once per searcher, together with
+        ``_deletes_df`` for Spark plans; the ids are read on the driver and
+        their count decided from the parquet footers, so no Spark job runs.
+
+        The PINNED manifest names the tombstone set: this searcher sees its
+        own commit point's deletes, never later or staged-uncommitted ones
+        (liveDocs-per-commit semantics). Soft tombstones join the set
+        unless this reader opted into them (include_soft_deletes)."""
+        if self.has_deletes and self._deletes_df is None:
             from lucene_spark.index.deletes import (
-                read_deletes, read_soft_deletes,
+                read_tombstone_ids, tombstone_dirs,
             )
 
-            # the PINNED manifest resolves the tombstone set: this
-            # searcher sees its own commit point's deletes, never later
-            # or staged-uncommitted ones (liveDocs-per-commit semantics).
-            # Soft tombstones join the exclusion set unless this reader
-            # opted into them (include_soft_deletes).
-            parts = []
-            hard = read_deletes(self.spark, self.index_dir, self.manifest)
-            if hard is not None:
-                parts.append(hard)
-            if not self.include_soft_deletes:
-                soft = read_soft_deletes(self.spark, self.index_dir,
-                                         self.manifest)
-                if soft is not None:
-                    parts.append(soft)
-            if not parts:
+            dirs = tombstone_dirs(self.index_dir, self.manifest,
+                                  include_soft=not self.include_soft_deletes)
+            if dirs:
+                # an explicit schema: inferring it runs a Spark job
+                self._deletes_df = (self.spark.read.schema("doc_id long")
+                                    .parquet(*dirs).distinct())
+                self._deletes_ids = read_tombstone_ids(
+                    dirs, self.BROADCAST_DELETES_MAX)
+            else:
                 self.has_deletes = False
-                return df
-            full = parts[0]
-            for p in parts[1:]:
-                full = full.unionByName(p).distinct()
-            self._deletes_df = full
-            self._deletes_count = self._deletes_df.count()
-        if self._deletes_count <= self.BROADCAST_DELETES_MAX:
-            return df.join(F.broadcast(self._deletes_df), "doc_id", "left_anti")
-        return df.join(self._deletes_df, "doc_id", "left_anti")
+        if not self.has_deletes:
+            return np.zeros(0, dtype=np.int64)
+        ids = self._deletes_ids
+        if ids is None or ids.size > self.BROADCAST_DELETES_MAX:
+            return None
+        return ids
+
+    def _live(self, df: DataFrame | None) -> DataFrame | None:
+        """Anti-join tombstoned docs out of a (doc_id, ...) frame. Small
+        tombstone sets broadcast; large ones shuffle anti-join so no single
+        executor materializes the full set."""
+        if df is None:
+            return df
+        small = self._tombstones() is not None
+        if not self.has_deletes:
+            return df
+        dead = F.broadcast(self._deletes_df) if small else self._deletes_df
+        return df.join(dead, "doc_id", "left_anti")
 
     # ------------------------------------------------------------ stats
 
@@ -421,6 +441,17 @@ class IndexSearcher:
     def search(self, query: Query, k: int = 10) -> DataFrame:
         """Top-k DataFrame (doc_id long, score float), exact Lucene order.
 
+        Term and flat Boolean queries (optionally Boost-wrapped) whose
+        distinct terms hold at most ``LOCAL_POSTINGS_MAX`` postings
+        (term_dict doc_freq summed), on a searcher with at most
+        ``BROADCAST_DELETES_MAX`` tombstones, run on the driver: their
+        blocks are read with pyarrow, decoded and scored in numpy, and the
+        top-k is computed EAGERLY, here; the returned frame is a local
+        table whose ``collect()`` runs no Spark job. Every other query
+        returns a lazy Spark plan: multi-clause flat Booleans over the
+        doc-range layout through ``search_colocated``, the rest through
+        the term-at-a-time scan. Both routes return identical rows.
+
         Bare multi-term queries (Prefix/Wildcard/Regexp/TermRange/TermInSet,
         optionally Boost-wrapped) run through the JOIN-based expansion
         (``_scored_expansion_join``): the term predicate is pushed into the
@@ -435,6 +466,11 @@ class IndexSearcher:
             return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         q = self._expand_multi_term(q)
         q = rewrite_fixpoint(q)
+        flat = self._as_flat(q)
+        if flat is not None:
+            hits = self._local_topk({"": flat}, k)
+            if hits is not None:
+                return local.hits_frame(self.spark, *hits[""])
         # planner: multi-clause flat Booleans route to the doc-at-a-time
         # co-located layout when it exists (bit-identical results, no
         # combination shuffle — BENCH.md); single-clause queries stay
@@ -448,7 +484,7 @@ class IndexSearcher:
             return self.search_colocated(q, k)
         scored = self._live(self._execute(q, np.float32(1.0)))
         if scored is None:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._empty_hits()
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def count(self, query: Query) -> int:
@@ -556,7 +592,7 @@ class IndexSearcher:
         a_score, a_doc = np.float32(after[0]), int(after[1])
         scored = self._scored_all(query)
         if scored is None:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._empty_hits()
         cond = (F.col("score") < float(a_score)) | (
             (F.col("score") == float(a_score)) & (F.col("doc_id") > a_doc)
         )
@@ -1431,7 +1467,7 @@ class IndexSearcher:
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
 
     def _empty_hits(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score float")
+        return local.empty_hits(self.spark)
 
     def span_first(self, term: str, end: int, k: int = 10,
                    boost: float = 1.0) -> DataFrame:
@@ -1551,7 +1587,7 @@ class IndexSearcher:
         reference. ``boostByValue(q, field)`` ≡ value="score * <field>"."""
         scored = self._scored_all(query)
         if scored is None:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._empty_hits()
         j = scored.join(self.docmap().drop("norm_byte"), "doc_id")
         factor = F.expr(value).cast("double")
         new_score = (
@@ -1578,7 +1614,7 @@ class IndexSearcher:
         other docs keep their score unchanged."""
         scored = self._scored_all(query)
         if scored is None:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._empty_hits()
         bq = rewrite_fixpoint(self._expand_multi_term(rewrite_fixpoint(boost_match)))
         bm = self._execute(bq, np.float32(1.0))
         if bm is None:
@@ -1790,7 +1826,7 @@ class IndexSearcher:
             return self._search_sorted_early(q, isort, k, fields[0][1])
         scored = self._live(self._execute(q, np.float32(1.0)))
         if scored is None:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._empty_hits()
         meta = [f for f, _ in fields if f != "score"]
         dm = self.docmap().select("doc_id", *meta)
         keys = [
@@ -2002,21 +2038,40 @@ class IndexSearcher:
         the shape a training-data pipeline needs when probing one corpus
         with hundreds of labeling queries.
 
-        Returns DF(query string, doc_id long, score float) with exactly k
-        rows per matching query in (score desc, doc_id asc) rank order.
-        Results are bit-identical to running search() per query (asserted
-        in tests). Queries that are not flat Boolean/term raise ValueError.
+        Returns DF(query string, doc_id long, score float) with up to k
+        rows per matching query, ordered by query, then (score desc, doc_id
+        asc). Results are bit-identical to running search() per query
+        (asserted in tests). Queries that are not flat Boolean/term raise
+        ValueError.
+
+        The batch takes search()'s driver-local route when ALL its queries'
+        distinct terms together hold at most ``LOCAL_POSTINGS_MAX``
+        postings: one pyarrow read for the batch, the combine kernel once
+        per query, results computed eagerly into a local table whose
+        ``collect()`` runs no Spark job.
         """
         from pyspark.sql.window import Window
 
-        per_query: dict[str, tuple[list[_Clause], BooleanQuery]] = {}
+        flats: dict[str, tuple[BooleanQuery, np.float32]] = {}
         for name, query in queries.items():
             q = rewrite_fixpoint(self._expand_multi_term(rewrite_fixpoint(query)))
             if isinstance(q, TermQuery):
                 q = BooleanQuery(must=[q])
             if not (isinstance(q, BooleanQuery) and self._is_flat(q)):
                 raise ValueError(f"{name}: search_many supports flat queries")
-            per_query[name] = (self._clauses_of(q, np.float32(1.0)), q)
+            flats[name] = (q, np.float32(1.0))
+        hits = self._local_topk(flats, k)
+        if hits is not None:
+            names = sorted(hits)
+            return local.hits_frame(
+                self.spark,
+                np.concatenate([np.zeros(0, np.int64)]
+                               + [hits[n][0] for n in names]),
+                np.concatenate([np.zeros(0, np.float32)]
+                               + [hits[n][1] for n in names]),
+                query=[n for n in names for _ in range(hits[n][0].size)])
+        per_query = {name: (self._clauses_of(q, boost), q)
+                     for name, (q, boost) in flats.items()}
 
         # global clause table: clause_id space is shared across queries
         all_clauses: list[_Clause] = []
@@ -2124,16 +2179,10 @@ class IndexSearcher:
             scored = self._live(self._flat_boolean(q, np.float32(1.0)))
             return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         clauses = self._clauses_of(q, np.float32(1.0))
-        n_must = sum(1 for c in clauses if c.kind == "must")
-        n_filter = sum(1 for c in clauses if c.kind == "filter")
-        n_should = sum(1 for c in clauses if c.kind == "should")
-        if n_must + n_should == 0:
+        if not any(c.kind in ("must", "should") for c in clauses):
             raise ValueError("filter/not-only queries have no scoring clause")
         msm = q.min_should_match
         terms = sorted({c.term for c in clauses})
-        term_clauses: dict[str, list[tuple[str, np.float32]]] = {}
-        for c in clauses:
-            term_clauses.setdefault(c.term, []).append((c.kind, c.weight))
         rng_sz = int(layout["range_size"])
         sim = self.sim
         kk = int(k)
@@ -2147,79 +2196,25 @@ class IndexSearcher:
         )
 
         def leaf(key, pdf):
-            from lucene_spark.functions.codec import decode_block
-
             part = int(key[0])
             lo, hi = part * rng_sz, (part + 1) * rng_sz
-            docs_l, kind_l, score_l = [], [], []
-            for term, nd, fd, data in zip(
-                pdf["term"].to_numpy(object),
-                pdf["num_docs"].to_numpy(np.int64),
-                pdf["first_doc"].to_numpy(np.int64),
-                pdf["data"].to_numpy(object),
-            ):
-                d, f, nb = decode_block(data, int(nd), int(fd))
+            postings = {}
+            for term, (d, f, nb) in local.decode_terms(
+                    pdf["term"].to_numpy(object),
+                    pdf["num_docs"].to_numpy(np.int64),
+                    pdf["first_doc"].to_numpy(np.int64),
+                    pdf["data"].to_numpy(object)).items():
                 m = (d >= lo) & (d < hi)
-                if not m.any():
-                    continue
-                d, f, nb = d[m], f[m], nb[m]
-                for kind, w in term_clauses[term]:
-                    docs_l.append(d)
-                    kind_l.append(np.full(
-                        d.size,
-                        {"must": 0, "should": 1, "filter": 2, "must_not": 3}[kind],
-                        dtype=np.int8,
-                    ))
-                    score_l.append(sim.score(f, nb, w))
-            if not docs_l:
-                return pd.DataFrame({"doc_id": pd.Series(dtype=np.int64),
-                                     "score": pd.Series(dtype=np.float32)})
-            docs_a = np.concatenate(docs_l)
-            kinds_a = np.concatenate(kind_l)
-            scores_a = np.concatenate(score_l)
-            uniq, invx = np.unique(docs_a, return_inverse=True)
-            nu = uniq.size
-            must_s = np.zeros(nu, dtype=np.float64)
-            should_s = np.zeros(nu, dtype=np.float64)
-            cnt = np.zeros((4, nu), dtype=np.int32)
-            for kd in range(4):
-                sel = kinds_a == kd
-                if not sel.any():
-                    continue
-                np.add.at(cnt[kd], invx[sel], 1)
-                if kd == 0:
-                    np.add.at(must_s, invx[sel], scores_a[sel].astype(np.float64))
-                elif kd == 1:
-                    np.add.at(should_s, invx[sel], scores_a[sel].astype(np.float64))
-            ok = (cnt[0] == n_must) & (cnt[2] == n_filter) & (cnt[3] == 0)
-            if n_must + n_filter == 0:
-                ok &= cnt[1] >= max(msm, 1)
-            elif msm > 0:
-                ok &= cnt[1] >= msm
-            # scorer-tree float boundaries (_combine_req_opt semantics)
-            if n_should == 0:
-                sc = must_s.astype(np.float32)
-            elif n_must == 0:
-                sc = should_s.astype(np.float32)
-            elif msm > 0:
-                sc = (must_s
-                      + should_s.astype(np.float32).astype(np.float64)
-                      ).astype(np.float32)
-            else:
-                sc = (must_s.astype(np.float32).astype(np.float64)
-                      + should_s.astype(np.float32).astype(np.float64)
-                      ).astype(np.float32)
-            udocs, usc = uniq[ok], sc[ok]
-            if udocs.size > kk:
-                top = np.lexsort((udocs, -usc.astype(np.float64)))[:kk]
-                udocs, usc = udocs[top], usc[top]
+                postings[term] = (d[m], f[m], nb[m])
+            udocs, usc = local.top_k(
+                *local.combine_scored(postings, clauses, sim, msm), kk)
             return pd.DataFrame({"doc_id": udocs, "score": usc})
 
-        local = table.groupBy("doc_part").applyInPandas(
+        leaves = table.groupBy("doc_part").applyInPandas(
             leaf, schema="doc_id long, score float"
         )
         return (
-            self._live(local)
+            self._live(leaves)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
@@ -2684,7 +2679,7 @@ class IndexSearcher:
         tf = Counter(tokens)
         cand = sorted(t for t, c in tf.items() if c >= min_term_freq)
         if not cand:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._empty_hits()
         stats = self.term_stats(cand)
         dc = self.doc_count
         scored: list[tuple[np.float32, str]] = []
@@ -2699,7 +2694,7 @@ class IndexSearcher:
         scored.sort(key=lambda x: (-x[0], x[1]))
         top = [t for _, t in scored[:max_query_terms]]
         if not top:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._empty_hits()
         return self.search(
             BooleanQuery(should=[TermQuery(t) for t in top]), k
         )
@@ -2817,7 +2812,7 @@ class IndexSearcher:
 
         scored = self._scored_all(query)
         if scored is None:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._empty_hits()
         keyed = scored.join(
             self.docmap().select(
                 "doc_id",
@@ -2883,15 +2878,13 @@ class IndexSearcher:
         ``positions``: str (a single term) or a multi-term Query
         (PrefixQuery/WildcardQuery/...) per phrase slot."""
         if not positions:
-            return self.spark.createDataFrame([], "doc_id long, score float")
-        empty = lambda: self.spark.createDataFrame(  # noqa: E731
-            [], "doc_id long, score float")
+            return self._empty_hits()
         single = [p for p in positions if isinstance(p, str)]
         multi = [p for p in positions if not isinstance(p, str)]
         if single:
             stats = self.term_stats(single)
             if any(t not in stats for t in single):
-                return empty()
+                return self._empty_hits()
         if len(positions) == 1:
             if multi:
                 return self.search(multi[0], k)
@@ -2911,7 +2904,7 @@ class IndexSearcher:
             rows = (self.term_dict.filter(cond).select("term")
                     .orderBy("term").limit(max(budget, 0)).collect())
             if not rows:
-                return empty()
+                return self._empty_hits()
             terms = sorted(r[0] for r in rows)
             remaining -= len(terms)
             remaining_multi -= 1
@@ -2938,10 +2931,8 @@ class IndexSearcher:
         ``ta``: a finished :class:`TermAutomaton`."""
         if not getattr(ta, "finished", False):
             raise ValueError("call TermAutomaton.finish() first")
-        empty = lambda: self.spark.createDataFrame(  # noqa: E731
-            [], "doc_id long, score float")
         if ta.det_empty:
-            return empty()
+            return self._empty_hits()
         slots = ta.sausage()
         if slots is not None:
             if all(sl is not None for sl in slots):
@@ -2952,7 +2943,7 @@ class IndexSearcher:
         stats = self.term_stats(reg)
         present = [t for t in reg if t in stats]
         if not present:
-            return empty()
+            return self._empty_hits()
         w = self._multi_term_weight(
             np.float32(1.0), [stats[t] for t in present])
         tids = [ta._term_to_id[t] for t in present]
@@ -2994,15 +2985,13 @@ class IndexSearcher:
         reference's rewrite feeds MultiPhraseQuery."""
         real = [(i, tuple(sl)) for i, sl in enumerate(slots)
                 if sl is not None]
-        empty = lambda: self.spark.createDataFrame(  # noqa: E731
-            [], "doc_id long, score float")
         if not real:
-            return empty()
+            return self._empty_hits()
         stats = self.term_stats([t for _, sl in real for t in sl])
         present_slots = [tuple(t for t in sl if t in stats)
                          for _, sl in real]
         if any(not sl for sl in present_slots):
-            return empty()
+            return self._empty_hits()
         w = self._multi_term_weight(
             np.float32(1.0),
             [stats[t] for _, sl in real for t in sl if t in stats])
@@ -3086,7 +3075,7 @@ class IndexSearcher:
 
         leaves = source.leaves()
         if not leaves:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._empty_hits()
         slots = [(t,) for t in leaves]
         j = self._slot_position_frame(slots, require_all=False)
         # source-specific presence predicate (AND across conjunction
@@ -3624,7 +3613,7 @@ class IndexSearcher:
             )
         stats = self.term_stats([term])
         if term not in stats:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+            return self._empty_hits()
         w = bm25.weight(1.0, bm25.idf(stats[term][0], self.doc_count))
         bucket = term_bucket_of(term, self.buckets)
         blocks = self.postings.filter(
@@ -4241,11 +4230,64 @@ class IndexSearcher:
             )
         return all(leaf(c) for c in q.must + q.should + q.filter + q.must_not)
 
-    def _clauses_of(self, q: BooleanQuery, boost: np.float32) -> list[_Clause]:
-        stats_terms = []
-        for c in q.must + q.should + q.filter + q.must_not:
-            stats_terms.append(c.query.term if isinstance(c, BoostQuery) else c.term)
-        stats = self.term_stats(stats_terms)
+    @staticmethod
+    def _flat_terms(q: BooleanQuery) -> list[str]:
+        return [c.query.term if isinstance(c, BoostQuery) else c.term
+                for c in q.must + q.should + q.filter + q.must_not]
+
+    @classmethod
+    def _as_flat(cls, q: Query) -> tuple[BooleanQuery, np.float32] | None:
+        """(flat Boolean, boost) of a TermQuery or flat BooleanQuery,
+        optionally Boost-wrapped (boosts fold as ``_execute`` folds them);
+        None for every other query."""
+        boost = np.float32(1.0)
+        while isinstance(q, BoostQuery):
+            boost = np.float32(boost * np.float32(q.boost))
+            q = q.query
+        if isinstance(q, TermQuery):
+            q = BooleanQuery(must=[q])
+        if isinstance(q, BooleanQuery) and cls._is_flat(q):
+            return q, boost
+        return None
+
+    def _local_topk(self, flats: dict[str, tuple[BooleanQuery, np.float32]],
+                    k: int) -> dict[str, tuple[np.ndarray, np.ndarray]] | None:
+        """Driver-local route (``query/local.py``): name -> top-k (doc ids,
+        float32 scores) of each flat query, from ONE pyarrow read of all
+        their terms' blocks. None — run it on Spark instead — when the
+        distinct terms' doc_freq sum exceeds LOCAL_POSTINGS_MAX or the
+        tombstones exceed BROADCAST_DELETES_MAX."""
+        rows = self._term_dict_rows(
+            [t for q, _ in flats.values() for t in self._flat_terms(q)])
+        if sum(r[0] for r in rows.values()) > self.LOCAL_POSTINGS_MAX:
+            return None
+        dead = self._tombstones()
+        if dead is None:
+            return None
+        blocks = local.read_blocks(self.index_dir, list(rows), self.buckets,
+                                   self.max_segment_id)
+        postings = local.decode_terms(
+            blocks.column("term").to_numpy(zero_copy_only=False),
+            blocks.column("num_docs").to_numpy(),
+            blocks.column("first_doc").to_numpy(),
+            blocks.column("data").to_pylist())
+        out = {}
+        for name, (q, boost) in flats.items():
+            docs, scores = local.combine_scored(
+                postings, self._clauses_of(q, boost, rows), self.sim,
+                q.min_should_match)
+            if dead.size:
+                live = ~np.isin(docs, dead)
+                docs, scores = docs[live], scores[live]
+            out[name] = local.top_k(docs, scores, k)
+        return out
+
+    def _clauses_of(self, q: BooleanQuery, boost: np.float32,
+                    rows: dict | None = None) -> list[_Clause]:
+        """Weighted clauses of a flat Boolean. ``rows`` (optional) are the
+        query's ``_term_dict_rows``, when the caller has read them already."""
+        stats = (self._term_dict_rows(self._flat_terms(q))
+                 if rows is None else rows)
         clauses: list[_Clause] = []
         cid = 0
         for kind, group in (

@@ -395,9 +395,12 @@ def test_parent_block_join_modes(searcher, common_terms):
     assert len(top("avg")) == min(8, len(by_parent))
 
 
-def test_predicate_pushdown_reaches_parquet(searcher, common_terms):
+def test_predicate_pushdown_reaches_parquet(spark, built_index, searcher,
+                                            common_terms):
     """Plans must push term predicates into the parquet scan (PushedFilters)
-    — the 100TB property that a query reads row groups, not the table."""
+    — the 100TB property that a query reads row groups, not the table.
+    Term and flat-Boolean plans are checked on the Spark route (instance
+    bound 0); below the bound those queries never reach Spark."""
     import re
 
     from lucene_spark.query.ast import PrefixQuery
@@ -406,20 +409,36 @@ def test_predicate_pushdown_reaches_parquet(searcher, common_terms):
         plan = df._jdf.queryExecution().executedPlan().toString()
         return " ".join(re.findall(r"PushedFilters: \[([^\]]*)\]", plan))
 
+    spark_route = IndexSearcher(spark, built_index)
+    spark_route.LOCAL_POSTINGS_MAX = 0
     t = common_terms[0][0]
-    assert f"EqualTo(term,{t})" in pushed(searcher.search(TermQuery(t), 3))
+    assert f"EqualTo(term,{t})" in pushed(spark_route.search(TermQuery(t), 3))
     assert "StringStartsWith(term," in pushed(
         searcher.search(PrefixQuery(t[:2]), 3)
     )
     t2 = common_terms[1][0]
     q = BooleanQuery(must=[TermQuery(t), TermQuery(t2)])
-    assert "In(term" in pushed(searcher.search(q, 3))
+    assert "In(term" in pushed(spark_route.search(q, 3))
     # interval queries share the phrase plan's positions scan: the leaf
     # terms must reach the positions parquet as an In/EqualTo filter
     from lucene_spark.query.intervals import maxgaps, ordered
 
     iplan = pushed(searcher.search_intervals(maxgaps(2, ordered(t, t2)), 3))
     assert "In(term" in iplan or f"EqualTo(term,{t})" in iplan
+
+
+def test_local_read_returns_only_the_query_blocks(searcher, common_terms):
+    """The driver-local route's pyarrow read returns exactly the query's
+    blocks: Σ num_blocks rows over its terms, absent terms adding none."""
+    from lucene_spark.query import local
+
+    terms = [common_terms[0][0], common_terms[-1][0], "zzzz-absent"]
+    rows = searcher._term_dict_rows(terms)
+    blocks = local.read_blocks(searcher.index_dir, terms, searcher.buckets,
+                               searcher.max_segment_id)
+    assert blocks.num_rows == sum(nb for _, _, nb in rows.values())
+    assert set(blocks.column("term").to_pylist()) == set(rows)
+    assert blocks.column_names == ["term", "num_docs", "first_doc", "data"]
 
 
 def test_search_many_equals_individual(searcher, common_terms):
@@ -484,8 +503,10 @@ def test_colocated_search_rank_identity(spark, built_index, searcher,
 
 
 def test_planner_routes_to_colocated(spark, built_index, common_terms):
-    """With the doc-range layout present, multi-clause flat Booleans route
-    through search_colocated automatically (single-clause stays put)."""
+    """With the doc-range layout present, multi-clause flat Booleans above
+    LOCAL_POSTINGS_MAX (instance bound 0 here) route through
+    search_colocated automatically (single-clause stays put). Below the
+    bound the driver-local route wins even with the layout present."""
     from unittest.mock import patch
 
     from lucene_spark.index.doclayout import build_doc_partitioned
@@ -493,13 +514,23 @@ def test_planner_routes_to_colocated(spark, built_index, common_terms):
 
     build_doc_partitioned(spark, built_index, num_parts=4)
     s = IndexSearcher(spark, built_index)
+    s.LOCAL_POSTINGS_MAX = 0
     t0, t1 = common_terms[0][0], common_terms[1][0]
+    conj = BooleanQuery(must=[TermQuery(t0), TermQuery(t1)])
     with patch.object(IndexSearcher, "search_colocated",
                       wraps=s.search_colocated) as spy:
-        s.search(BooleanQuery(must=[TermQuery(t0), TermQuery(t1)]), 5).collect()
+        s.search(conj, 5).collect()
         assert spy.call_count == 1
         s.search(TermQuery(t0), 5).collect()  # single clause: not routed
         assert spy.call_count == 1
+    small = IndexSearcher(spark, built_index)
+    assert small.manifest.get("doc_layout")
+    with patch.object(IndexSearcher, "search_colocated",
+                      wraps=small.search_colocated) as spy:
+        hits = small.search(conj, 5)
+        assert spy.call_count == 0
+    assert "LocalRelation" in hits._jdf.queryExecution().analyzed().toString()
+    assert hits.collect() == s.search(conj, 5).collect()
 
 
 def test_facet_ranges_counts(searcher, common_terms):

@@ -3,7 +3,10 @@
 ``IndexSearcher.term_stats`` reads ``term_dict/`` with pyarrow on the
 driver instead of running a Spark job. It must return exactly what a Spark
 read of the same directory returns, also right after a commit has swapped
-that directory. The job pins fail as soon as a query path gains a job."""
+that directory. The job pins fail as soon as a query path gains a job:
+queries small enough for the driver-local route run none, and the Spark
+route (forced with an instance-level ``LOCAL_POSTINGS_MAX = 0``) keeps its
+own pins."""
 
 from __future__ import annotations
 
@@ -90,14 +93,51 @@ def pin_terms(spark, built_index):
         F.desc("doc_freq"), "term").limit(12).collect()]
 
 
+def _spark_route(spark, index_dir) -> IndexSearcher:
+    """A searcher whose term and flat-Boolean queries all take the Spark
+    route (no driver-local execution)."""
+    s = IndexSearcher(spark, index_dir)
+    s.LOCAL_POSTINGS_MAX = 0
+    return s
+
+
 def test_term_query_runs_two_jobs(spark, built_index, pin_terms):
-    s = IndexSearcher(spark, built_index)
+    s = _spark_route(spark, built_index)
     for t in (pin_terms[0], pin_terms[-1]):
         assert _jobs_of(spark, lambda: s.search(TermQuery(t), 10).collect()) == 2
     assert _jobs_of(spark, lambda: s.term_stats(pin_terms)) == 0
 
 
 def test_two_clause_conjunction_runs_three_jobs(spark, built_index, pin_terms):
-    s = IndexSearcher(spark, built_index)
+    s = _spark_route(spark, built_index)
     q = BooleanQuery(must=[TermQuery(pin_terms[0]), TermQuery(pin_terms[-1])])
     assert _jobs_of(spark, lambda: s.search(q, 10).collect()) == 3
+
+
+def test_small_queries_run_no_job(spark, built_index, pin_terms):
+    """Below LOCAL_POSTINGS_MAX a term query, a two-clause conjunction and
+    a search_many batch run on the driver: zero Spark jobs, from building
+    the frame through collect()."""
+    s = IndexSearcher(spark, built_index)
+    q = BooleanQuery(must=[TermQuery(pin_terms[0]), TermQuery(pin_terms[-1])])
+    for t in (pin_terms[0], pin_terms[-1]):
+        assert _jobs_of(spark, lambda: s.search(TermQuery(t), 10).collect()) == 0
+    assert _jobs_of(spark, lambda: s.search(q, 10).collect()) == 0
+    batch = {"term": TermQuery(pin_terms[0]), "conj": q,
+             "none": TermQuery("zzzz-absent")}
+    assert _jobs_of(spark, lambda: s.search_many(batch, 10).collect()) == 0
+
+
+def test_empty_results_run_no_job(spark, built_index):
+    """A query that matches nothing before any scan returns a local empty
+    frame: collecting it runs no Spark job."""
+    from lucene_spark.query.ast import MatchNoDocsQuery
+    from lucene_spark.query.multi import MultiIndexSearcher
+
+    s = IndexSearcher(spark, built_index)
+    multi = MultiIndexSearcher(spark, [built_index])
+    for searcher in (s, multi):
+        hits = searcher.search(MatchNoDocsQuery(), 10)
+        assert _jobs_of(spark, hits.collect) == 0
+        assert hits.collect() == []
+        assert hits.schema.simpleString() == "struct<doc_id:bigint,score:float>"
