@@ -3715,6 +3715,11 @@ def _media_features(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every driver entry by name. ``bm25_polish_chain`` is registered only
+    where ``stempel.available()`` holds (its table and stop file are read
+    from the reference tree at run time)."""
+    from lucene_spark.functions import stempel as _pl_stempel
+
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
     def _mk(ast: dict):
@@ -3833,7 +3838,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["bm25_classic_chain"] = _classic_chain_df
     out["bm25_uax29_chain"] = _uax29_chain_df
     out["bm25_thai_chain"] = _thai_chain_df
-    out["bm25_polish_chain"] = _polish_chain_df
+    if _pl_stempel.available():
+        out["bm25_polish_chain"] = _polish_chain_df
     out["bm25_japanese_chain"] = _japanese_chain_df
     out["bm25_korean_chain"] = _korean_chain_df
     out["bm25_shingle_chain"] = _shingle_chain_df
@@ -3973,6 +3979,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
+    """DuckDB oracle SQL per entry; its keys are a subset of ``queries()``.
+    The ``bm25_polish_chain`` oracle is built only where
+    ``stempel.available()`` holds, as its entry is."""
     from lucene_spark.plans import sqlgen
     from lucene_spark.query.ast import parse_query
 
@@ -4655,8 +4664,11 @@ ORDER BY t.score DESC, t.doc_id ASC
          _gl.portuguese_rslp_stem),
         ("bm25_danish_chain", _DANISH_AST, _sb.DA_STOP,
          _sb.danish_stem),
-        ("bm25_polish_chain", _POLISH_AST, _pl_stempel.LazyPolishStop(),
-         _pl_stempel.polish_chain_transform),
+        *(
+            (("bm25_polish_chain", _POLISH_AST, _pl_stempel.LazyPolishStop(),
+              _pl_stempel.polish_chain_transform),)
+            if _pl_stempel.available() else ()
+        ),
         *(
             (f"bm25_{_a}_chain", _SNOWBALL_ASTS[_a], _stop_, _tr_)
             for _a, _stop_, _tr_ in (

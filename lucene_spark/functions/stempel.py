@@ -16,6 +16,10 @@ into this repo. The binary patch-command table ``stemmer_20000.tbl`` and
 RUNTIME (``$LUCENE_SPARK_REF_DIR``, default ``/root/reference``); a host
 without them raises ``StempelUnavailable`` with the reference's own
 "resource not found" flavor instead of silently degrading.
+``available()`` tells whether both files are there, and
+``bm25_polish_chain`` (``__spark_entry__.queries()``/``oracle_sql()``)
+is registered only where it holds; ``build_index`` with
+``analyzer="polish"`` calls ``require()`` on the driver before any job.
 
 Quirks preserved verbatim (each exercised by the compiled-class fuzz in
 ``tools/stempel_parity.py`` — 0 mismatches over 60k+ mixed Polish/ASCII
@@ -64,6 +68,22 @@ def _ref_path(rel: str) -> str:
             f"Unable to load stempel resource {rel!r} under {root!r} "
             "(set LUCENE_SPARK_REF_DIR to a Lucene source tree)")
     return p
+
+
+def require() -> None:
+    """Raise ``StempelUnavailable`` unless both runtime resources exist."""
+    for rel in (_TBL_REL, _STOP_REL):
+        _ref_path(rel)
+
+
+def available() -> bool:
+    """Whether the stemmer table and the stop file both exist under
+    ``$LUCENE_SPARK_REF_DIR`` (the path rule ``_ref_path`` uses)."""
+    try:
+        require()
+    except StempelUnavailable:
+        return False
+    return True
 
 
 class _DataInput:

@@ -254,6 +254,12 @@ def build_index(
                 "(DelimitedPayloadTokenFilter semantics); use "
                 "analyzer='whitespace_payload'"
             )
+    if config.analyzer == "polish":
+        from lucene_spark.functions import stempel
+
+        # the chain's table and stop file are read at run time; without
+        # them the first analyze task would fail, wrapped by Spark
+        stempel.require()
     from lucene_spark.functions.analysis import TF_CHAINS
 
     if config.analyzer in TF_CHAINS and config.positions:

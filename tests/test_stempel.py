@@ -10,8 +10,15 @@ from __future__ import annotations
 import pytest
 
 from lucene_spark.functions.stempel import (
-    StempelUnavailable, polish_chain_transform, pl_stop, stempel_stem,
+    StempelUnavailable, available, polish_chain_transform, pl_stop,
+    stempel_stem,
 )
+
+# the table and stop file live in a Lucene source tree, never in this repo
+needs_stempel = pytest.mark.skipif(
+    not available(),
+    reason="stempel resources (stemmer_20000.tbl, stopwords.txt) not found "
+           "under $LUCENE_SPARK_REF_DIR")
 
 # printed from the compiled MultiTrie2 + Diff over the in-tree table
 GOLDENS = [
@@ -32,11 +39,13 @@ GOLDENS = [
 ]
 
 
+@needs_stempel
 def test_stempel_goldens():
     for w, exp in GOLDENS:
         assert stempel_stem(w) == exp, w
 
 
+@needs_stempel
 def test_filter_semantics():
     # words shorter than DEFAULT_MIN_LENGTH=3 pass unchanged
     assert polish_chain_transform("ab") == "ab"
@@ -47,6 +56,7 @@ def test_filter_semantics():
     assert polish_chain_transform("query") == "ć"
 
 
+@needs_stempel
 def test_stop_set_loaded():
     s = pl_stop()
     assert {"oraz", "przez", "jest"} <= s
@@ -64,6 +74,33 @@ def test_unavailable_raises(monkeypatch):
     st._TABLE.clear()
 
 
+def test_polish_build_fails_fast_on_driver(spark, tmp_path, monkeypatch):
+    """Without the resources a polish build raises the plain
+    StempelUnavailable on the driver, before any Spark job (not a
+    PythonException out of the first analyze task)."""
+    import pandas as pd
+
+    from lucene_spark.index.build import IndexConfig, build_index
+    from tests.test_term_stats import _jobs_of
+
+    monkeypatch.setenv("LUCENE_SPARK_REF_DIR", "/nonexistent")
+    rows = pd.DataFrame({
+        "conv_id": ["c0"], "turn_idx": [0], "role": ["doc"],
+        "text": ["kotów i domami"], "tool": [None],
+        "ts": pd.to_datetime(["2026-01-01"]),
+    })
+    df = spark.createDataFrame(rows)
+
+    def build():
+        with pytest.raises(StempelUnavailable, match="LUCENE_SPARK_REF_DIR"):
+            build_index(spark, df, str(tmp_path / "pl"),
+                        IndexConfig(num_segments=1, term_buckets=2,
+                                    analyzer="polish"))
+
+    assert _jobs_of(spark, build) == 0
+
+
+@needs_stempel
 def test_polish_chain_end_to_end(spark, tmp_path):
     """Index under the polish chain: 'query'/'value' collide into one term
     'ć' whose df covers both source words — search for the stem finds docs
