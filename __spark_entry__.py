@@ -3717,7 +3717,11 @@ def _media_features(spark, sf_dir):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Every driver entry by name. ``bm25_polish_chain`` is registered only
     where ``stempel.available()`` holds (its table and stop file are read
-    from the reference tree at run time)."""
+    from the reference tree at run time), ``bm25_japanese_chain`` and
+    ``bm25_korean_chain`` only where ``kuromoji.available()`` /
+    ``nori.available()`` hold (their dictionaries are built from it)."""
+    from lucene_spark.functions import kuromoji as _ja
+    from lucene_spark.functions import nori as _ko
     from lucene_spark.functions import stempel as _pl_stempel
 
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -3840,8 +3844,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["bm25_thai_chain"] = _thai_chain_df
     if _pl_stempel.available():
         out["bm25_polish_chain"] = _polish_chain_df
-    out["bm25_japanese_chain"] = _japanese_chain_df
-    out["bm25_korean_chain"] = _korean_chain_df
+    if _ja.available():
+        out["bm25_japanese_chain"] = _japanese_chain_df
+    if _ko.available():
+        out["bm25_korean_chain"] = _korean_chain_df
     out["bm25_shingle_chain"] = _shingle_chain_df
     out["bm25_shingle_stop_chain"] = _shingle_stop_chain_df
     out["bm25_word_delimiter_chain"] = _wdgf_chain_df
@@ -3980,8 +3986,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB oracle SQL per entry; its keys are a subset of ``queries()``.
-    The ``bm25_polish_chain`` oracle is built only where
-    ``stempel.available()`` holds, as its entry is."""
+    The ``bm25_polish_chain``, ``bm25_japanese_chain`` and
+    ``bm25_korean_chain`` oracles are built only where their entries are
+    registered (``queries()``)."""
     from lucene_spark.plans import sqlgen
     from lucene_spark.query.ast import parse_query
 
@@ -4607,7 +4614,9 @@ ORDER BY t.score DESC, t.doc_id ASC
     from lucene_spark.functions import analysis as _an
     from lucene_spark.functions import brazilian as _br
     from lucene_spark.functions import cjk as _cj
+    from lucene_spark.functions import kuromoji as _ja
     from lucene_spark.functions import normalizers as _nz
+    from lucene_spark.functions import nori as _ko
     from lucene_spark.functions import rslp as _gl
     from lucene_spark.functions import snowball as _sb
     from lucene_spark.functions import snowball_chains as _sc
@@ -4718,12 +4727,14 @@ ORDER BY t.score DESC, t.doc_id ASC
     )
     # japanese: unknown-ALPHA/NUMERIC grouping == simple tokens on this
     # corpus; all-Japanese stop resources never fire (see _JAPANESE_AST)
-    out["bm25_japanese_chain"] = sqlgen.topk_sql(
-        parse_query(json.dumps(_JAPANESE_AST)), _QUERY_K,
-    )
-    out["bm25_korean_chain"] = sqlgen.topk_sql(
-        parse_query(json.dumps(_KOREAN_AST)), _QUERY_K,
-    )
+    if _ja.available():
+        out["bm25_japanese_chain"] = sqlgen.topk_sql(
+            parse_query(json.dumps(_JAPANESE_AST)), _QUERY_K,
+        )
+    if _ko.available():
+        out["bm25_korean_chain"] = sqlgen.topk_sql(
+            parse_query(json.dumps(_KOREAN_AST)), _QUERY_K,
+        )
     # word_delimiter chains: identity on this delimiter-free corpus
     out["bm25_word_delimiter_chain"] = sqlgen.topk_sql(
         parse_query(json.dumps(_WDGF_AST)), _QUERY_K,

@@ -1026,6 +1026,32 @@ def ensure_ja_dict_dir() -> str:
     return d
 
 
+def dict_buildable(dict_dir: str, module: str) -> bool:
+    """Whether ``dict_dir`` already holds a built dictionary
+    (``TokenInfoDictionary$fst.dat``), or the reference tree the parity
+    tool builds one from exists: lucene-core's sources and
+    ``lucene/analysis/<module>``'s, under ``$LUCENE_SPARK_REF_DIR``."""
+    from lucene_spark.functions.stempel import _REF_DEFAULT
+
+    if os.path.exists(os.path.join(dict_dir, "TokenInfoDictionary$fst.dat")):
+        return True
+    root = os.environ.get("LUCENE_SPARK_REF_DIR", _REF_DEFAULT)
+    return all(os.path.isdir(os.path.join(root, "lucene", rel))
+               for rel in ("core/src/java/org", f"analysis/{module}/src/java"))
+
+
+def available() -> bool:
+    """Whether the ``japanese`` chain can run: its dictionary is built or
+    buildable (``dict_buildable``) and the JapaneseAnalyzer stop resources
+    ``ja_stop_sets`` reads exist."""
+    try:
+        for name in ("stopwords.txt", "stoptags.txt"):
+            _ja_resource(name)
+    except KuromojiUnavailable:
+        return False
+    return dict_buildable(default_dict_dir(), "kuromoji")
+
+
 _JA_DICTS: dict[tuple[int, str], JaDicts] = {}
 
 

@@ -39,7 +39,7 @@ import unicodedata
 from lucene_spark.functions.fstread import FST, Arc
 from lucene_spark.functions.kuromoji import (
     CharacterDefinition, ConnectionCosts, KuromojiUnavailable, _In,
-    _read_file,
+    _read_file, dict_buildable,
 )
 
 MAX_UNKNOWN_WORD_LENGTH = 1024
@@ -693,6 +693,12 @@ def ensure_ko_dict_dir() -> str:
     if not os.path.exists(os.path.join(d, "TokenInfoDictionary$fst.dat")):
         raise KuromojiUnavailable(f"ko dictionary build did not produce {d!r}")
     return d
+
+
+def available() -> bool:
+    """Whether the ``korean`` chain can run: its dictionary is built or
+    buildable (``kuromoji.dict_buildable``)."""
+    return dict_buildable(default_ko_dict_dir(), "nori")
 
 
 _KO_DICTS: dict[tuple[int, str], KoDicts] = {}

@@ -11,15 +11,18 @@ quarter-million postings in numpy. This module holds that route's pieces:
     the sorted ``term`` column).
   - ``decode_terms``: ``codec.decode_blocks_batch`` over those blocks,
     split per term.
-  - ``combine_scored`` / ``combine_clauses``: score every clause and
+  - ``clause_rows`` / ``combine_clauses``: score every clause, then
     combine the clauses per doc with the reference's scorer-tree float
-    boundaries. ``search_colocated``'s per-partition leaf runs the same
-    kernel on executors.
+    boundaries. ``clause_masks`` is the per-doc membership rule both the
+    combine and ``profile_counts`` apply. This kernel is the only copy of
+    the flat-Boolean combine rule: the Spark route runs it on executors
+    too, once per doc-hash partition (``IndexSearcher._by_doc``), and so
+    does ``search_colocated``'s per-doc-range leaf.
   - ``top_k`` and ``hits_frame``: (score desc, doc_id asc) top-k and a
     DataFrame over a local Arrow table, whose ``collect()`` runs no job.
 
 Results are bit-identical to the Spark route: the same codec, the same
-similarity arithmetic and the same combine rule as ``_combine_req_opt``.
+similarity arithmetic and the same combine kernel.
 """
 
 from __future__ import annotations
@@ -86,70 +89,104 @@ def decode_terms(terms, num_docs, first_docs, datas
             for s, lo, hi in zip(starts.tolist(), bounds, bounds[1:])}
 
 
-def combine_clauses(docs: np.ndarray, kinds: np.ndarray, scores: np.ndarray,
-                    n_must: int, n_should: int, n_filter: int, msm: int
-                    ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-doc flat-Boolean combination in numpy: (doc_id, clause kind code,
-    float32 clause score) rows in, the matching docs (ascending) and their
-    float32 scores out.
+def kind_codes(clauses) -> np.ndarray:
+    """Kind code (``KIND_CODES``) of each clause, indexed by clause id:
+    a flat Boolean's clause ids number its clauses 0..n-1 in order."""
+    return np.array([KIND_CODES[c.kind] for c in clauses], dtype=np.int8)
 
-    A doc matches when it has every must and filter clause, no must_not
-    clause, and at least ``msm`` should clauses (at least one when the
-    query has neither must nor filter clauses). Scores follow
-    ``_combine_req_opt``'s float boundaries: double sums per side, cast to
-    float32 where the reference's scorer tree casts; a query with no
-    scoring clause (filter and must_not only) scores 0.0f."""
+
+def clause_rows(postings: dict, clauses, sim
+                ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(clause_id, doc_id, float32 score) rows: each clause (``.clause_id``,
+    ``.term``, ``.weight``) scored with ``sim.score`` over its term's
+    decoded ``postings`` (``decode_terms``). Absent terms contribute no
+    rows."""
+    parts = []
+    for c in clauses:
+        if c.term in postings:
+            d, f, nb = postings[c.term]
+            parts.append((np.full(d.size, c.clause_id, dtype=np.int32), d,
+                          sim.score(f, nb, c.weight)))
+    if not parts:
+        return (np.zeros(0, dtype=np.int32), np.zeros(0, dtype=np.int64),
+                np.zeros(0, dtype=np.float32))
+    cids, docs, scores = map(np.concatenate, zip(*parts))
+    return cids, docs, scores
+
+
+def clause_masks(cids: np.ndarray, docs: np.ndarray, codes: np.ndarray,
+                 msm: int):
+    """The flat-Boolean membership rule, per doc, over (clause_id, doc_id)
+    rows; ``codes`` holds the clauses' kind codes (``kind_codes``).
+
+    Returns (docs ascending, each row's doc ordinal, required, passed,
+    excluded): ``required`` — every must and filter clause matched;
+    ``passed`` — required, and at least ``msm`` should clauses matched (at
+    least one when the query has neither must nor filter clauses);
+    ``excluded`` — some must_not clause matched. A doc matches when it
+    passed and is not excluded."""
     uniq, inv = np.unique(docs, return_inverse=True)
-    nu = uniq.size
+    kinds = codes[cids]
 
-    def side(code: int, weighted: bool) -> np.ndarray:
-        sel = kinds == code
-        if not weighted:
-            return np.bincount(inv[sel], minlength=nu)
-        return np.bincount(inv[sel], weights=scores[sel].astype(np.float64),
-                           minlength=nu)
+    def n(code: int) -> np.ndarray:
+        return np.bincount(inv[kinds == code], minlength=uniq.size)
 
-    ok = ((side(0, False) == n_must) & (side(2, False) == n_filter)
-          & (side(3, False) == 0))
+    n_must, n_filter = int((codes == 0).sum()), int((codes == 2).sum())
+    req = (n(0) == n_must) & (n(2) == n_filter)
     if n_must + n_filter == 0:
-        ok &= side(1, False) >= max(msm, 1)
+        passed = req & (n(1) >= max(msm, 1))
     elif msm > 0:
-        ok &= side(1, False) >= msm
+        passed = req & (n(1) >= msm)
+    else:
+        passed = req
+    return uniq, inv, req, passed, n(3) > 0
+
+
+def combine_clauses(cids: np.ndarray, docs: np.ndarray, scores: np.ndarray,
+                    codes: np.ndarray, msm: int
+                    ) -> tuple[np.ndarray, np.ndarray]:
+    """Per-doc flat-Boolean combination in numpy: (clause_id, doc_id,
+    float32 clause score) rows in, the matching docs (ascending,
+    ``clause_masks``) and their float32 scores out.
+
+    Scores follow ``_combine_req_opt``'s float boundaries: double sums per
+    side, cast to float32 where the reference's scorer tree casts; a query
+    with no scoring clause (filter and must_not only) scores 0.0f."""
+    uniq, inv, _, passed, excluded = clause_masks(cids, docs, codes, msm)
+    kinds = codes[cids]
+    n_must, n_should = int((codes == 0).sum()), int((codes == 1).sum())
+
+    def side(code: int) -> np.ndarray:
+        sel = kinds == code
+        return np.bincount(inv[sel], weights=scores[sel].astype(np.float64),
+                           minlength=uniq.size)
+
     if n_must + n_should == 0:
-        sc = np.zeros(nu, dtype=np.float32)
+        sc = np.zeros(uniq.size, dtype=np.float32)
     elif n_should == 0:
-        sc = side(0, True).astype(np.float32)
+        sc = side(0).astype(np.float32)
     elif n_must == 0:
-        sc = side(1, True).astype(np.float32)
+        sc = side(1).astype(np.float32)
     elif msm > 0:
-        sc = (side(0, True) + side(1, True).astype(np.float32)
+        sc = (side(0) + side(1).astype(np.float32)
               .astype(np.float64)).astype(np.float32)
     else:
-        sc = (side(0, True).astype(np.float32).astype(np.float64)
-              + side(1, True).astype(np.float32).astype(np.float64)
+        sc = (side(0).astype(np.float32).astype(np.float64)
+              + side(1).astype(np.float32).astype(np.float64)
               ).astype(np.float32)
+    ok = passed & ~excluded
     return uniq[ok], sc[ok]
 
 
-def combine_scored(postings: dict, clauses, sim, msm: int
-                   ) -> tuple[np.ndarray, np.ndarray]:
-    """Score each clause (``.kind``, ``.term``, ``.weight``) over its term's
-    decoded ``postings`` (``decode_terms``) with ``sim.score`` and combine
-    them per doc (``combine_clauses``). Absent terms contribute no rows."""
-    n = {kind: sum(1 for c in clauses if c.kind == kind) for kind in KIND_CODES}
-    docs_l, kinds_l, scores_l = [], [], []
-    for c in clauses:
-        if c.term not in postings:
-            continue
-        d, f, nb = postings[c.term]
-        docs_l.append(d)
-        kinds_l.append(np.full(d.size, KIND_CODES[c.kind], dtype=np.int8))
-        scores_l.append(sim.score(f, nb, c.weight))
-    if not docs_l:
-        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float32)
-    return combine_clauses(
-        np.concatenate(docs_l), np.concatenate(kinds_l),
-        np.concatenate(scores_l), n["must"], n["should"], n["filter"], msm)
+def profile_counts(cids: np.ndarray, docs: np.ndarray, codes: np.ndarray,
+                   msm: int) -> list[int]:
+    """``profile()``'s operator counts over (clause_id, doc_id) rows:
+    candidates (the docs any clause touched), then those ``clause_masks``
+    marks required (must_pass), passed (msm_pass), passed but excluded
+    (excluded), and passed and not excluded (matched)."""
+    uniq, _, req, passed, excluded = clause_masks(cids, docs, codes, msm)
+    return [int(uniq.size), int(req.sum()), int(passed.sum()),
+            int((passed & excluded).sum()), int((passed & ~excluded).sum())]
 
 
 def top_k(docs: np.ndarray, scores: np.ndarray, k: int

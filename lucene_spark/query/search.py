@@ -16,9 +16,10 @@ Physical plan (the part that must survive 100 TB):
     pushes ``term_bucket IN (...) AND term IN (...)`` down to parquet
     (partition pruning + row-group min/max on the sorted term column), the
     Arrow UDF decodes blocks and scores all clauses of that term in one pass.
-  - clause combination is a single groupBy(doc_id) with conditional
-    aggregates — no per-clause joins, no driver-side iteration. Shuffle
-    volume = matched postings only.
+  - flat-Boolean clause combination is one ``repartition(doc_id)`` plus a
+    per-partition numpy kernel (``local.combine_clauses``, the same one
+    the driver-local route runs) — no per-clause joins, no driver-side
+    iteration. Shuffle volume = matched postings only.
   - exhaustive scoring + exact sort is rank-identical to the reference
     because every Lucene pruning mechanism (WAND, block-max, MAXSCORE) is
     score-safe (SURVEY.md §4); block-max pruning is a pure optimization here
@@ -90,7 +91,9 @@ def _f32(col):
 
 def _combine_req_opt(n_must: int, n_should: int, msm: int, must_s, should_s):
     """Combine required/optional double-sum accumulators with the reference's
-    exact float boundaries (scorer-tree semantics, NOT one flat double sum):
+    exact float boundaries (scorer-tree semantics, NOT one flat double sum).
+    ``_nested_boolean`` only: flat Booleans combine in
+    ``local.combine_clauses``, which follows the same boundaries.
 
       - required-only (ConjunctionScorer.java:57-63): (float) double-sum.
       - optional-only (DisjunctionSumScorer.java:40-46 / WANDScorer): same.
@@ -490,9 +493,10 @@ class IndexSearcher:
     def count(self, query: Query) -> int:
         """Total hit count (TotalHitCountCollector.java:27). Bare TermQuery
         short-circuits to the term_dict doc_freq — the sub-linear
-        ``Weight#count`` shortcut; flat Booleans use FILTER semantics (no
-        stats collect, no norm reads, no score arithmetic — counting never
-        pays for scoring); everything else counts scored matches."""
+        ``Weight#count`` shortcut. Flat Booleans take ``search()``'s route
+        choice: below ``LOCAL_POSTINGS_MAX`` the driver-local matches are
+        counted with no Spark job, above it the Spark plan's live matches.
+        Everything else counts scored matches."""
         q = rewrite_fixpoint(self._expand_multi_term(rewrite_fixpoint(query)))
         if isinstance(q, TermQuery) and not self.has_deletes:
             # the sub-linear shortcut is unavailable with live deletes —
@@ -508,81 +512,12 @@ class IndexSearcher:
         if isinstance(q, TermQuery):
             q = BooleanQuery(must=[q])
         if isinstance(q, BooleanQuery) and self._is_flat(q):
-            return self._match_count(q)
+            rows = self._local_rows({"": (q, np.float32(1.0))})
+            if rows is not None:
+                return int(local.combine_clauses(*rows[""])[0].size)
+            return self._live(self._flat_boolean(q, np.float32(1.0))).count()
         scored = self._live(self._execute(q, np.float32(1.0)))
         return 0 if scored is None else scored.count()
-
-    def _match_count(self, q: BooleanQuery) -> int:
-        """Match-only count for flat Booleans: decode doc ids per clause
-        (no freqs used, no norms, no weights — so no driver-side stats job
-        either) and apply the Boolean membership conditions."""
-        clauses: list[tuple[int, str, str]] = []
-        cid = 0
-        for kind, group in (
-            ("must", q.must), ("should", q.should),
-            ("filter", q.filter), ("must_not", q.must_not),
-        ):
-            for c in group:
-                term = c.query.term if isinstance(c, BoostQuery) else c.term
-                clauses.append((cid, kind, term))
-                cid += 1
-        n_must = sum(1 for c in clauses if c[1] == "must")
-        n_filter = sum(1 for c in clauses if c[1] == "filter")
-        msm = q.min_should_match
-        terms = sorted({c[2] for c in clauses})
-        buckets = sorted({term_bucket_of(t, self.buckets) for t in terms})
-        term_cids: dict[str, list[int]] = {}
-        for c in clauses:
-            term_cids.setdefault(c[2], []).append(c[0])
-        scan = (
-            self.postings.filter(
-                F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-            )
-            .select("term", "num_docs", "first_doc", "data")
-            .repartition(self.spark.sparkContext.defaultParallelism)
-        )
-
-        def decode_ids(batches):
-            from lucene_spark.functions.codec import decode_block
-
-            for pdf in batches:
-                out_cid, out_doc = [], []
-                for term, nd, fd, data in zip(
-                    pdf["term"].to_numpy(object),
-                    pdf["num_docs"].to_numpy(np.int64),
-                    pdf["first_doc"].to_numpy(np.int64),
-                    pdf["data"].to_numpy(object),
-                ):
-                    docs, _, _ = decode_block(data, int(nd), int(fd))
-                    for one_cid in term_cids[term]:
-                        out_cid.append(np.full(docs.size, one_cid, dtype=np.int32))
-                        out_doc.append(docs)
-                if out_doc:
-                    yield pd.DataFrame(
-                        {"clause_id": np.concatenate(out_cid),
-                         "doc_id": np.concatenate(out_doc)}
-                    )
-
-        matched = scan.mapInPandas(decode_ids, schema="clause_id int, doc_id long")
-        kind_expr = F.create_map(
-            *[x for one_cid, kd, _ in clauses for x in (F.lit(one_cid), F.lit(kd))]
-        )[F.col("clause_id")]
-        agg = matched.withColumn("kind", kind_expr).groupBy("doc_id").agg(
-            F.count(F.when(F.col("kind") == "must", 1)).alias("must_n"),
-            F.count(F.when(F.col("kind") == "should", 1)).alias("should_n"),
-            F.count(F.when(F.col("kind") == "filter", 1)).alias("filter_n"),
-            F.count(F.when(F.col("kind") == "must_not", 1)).alias("not_n"),
-        )
-        cond = (
-            (F.col("must_n") == n_must)
-            & (F.col("filter_n") == n_filter)
-            & (F.col("not_n") == 0)
-        )
-        if n_must + n_filter == 0:
-            cond = cond & (F.col("should_n") >= max(msm, 1))
-        elif msm > 0:
-            cond = cond & (F.col("should_n") >= msm)
-        return self._live(agg.filter(cond)).count()
 
     def search_after(
         self, query: Query, k: int, after: tuple[float, int]
@@ -1411,7 +1346,9 @@ class IndexSearcher:
         function and boost is ignored, exactly the reference's behavior
         (boost reaches PayloadScoreQuery through the SimWeight, which the
         payload-only score never consults). DF(doc_id, score), (score desc,
-        doc asc) top-k."""
+        doc asc) top-k. ``k`` is capped at the leaf's doc count, which no
+        hit count exceeds: Spark's top-k sizes its buffer by the limit, so
+        an uncapped "all hits" k (10^9) would allocate gigabytes."""
         if func not in ("sum", "max", "min", "avg"):
             raise ValueError(f"unknown payload function {func!r}")
         pos = self.positions_table()
@@ -1457,9 +1394,8 @@ class IndexSearcher:
             scored = self._live(scored.select(
                 "doc_id", F.col("payload_score").cast("float").alias("score")
             ))
-        return (
-            scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
-        )
+        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(
+            min(int(k), self.local_doc_count))
 
     def _span_topk(self, matched: DataFrame, w: np.float32, k: int) -> DataFrame:
         scored = self._live(self._score_freq_frame(
@@ -1640,7 +1576,10 @@ class IndexSearcher:
         DETERMINISTIC breakdown those timings derive from — per-leaf
         postings volume (doc_freq / blocks / total_term_freq) and
         per-operator candidate/survivor doc counts, all from ONE postings
-        scan + one aggregation (flat Boolean/term queries).
+        scan and the flat-Boolean combine kernel's membership masks
+        (``local.profile_counts``), on ``search()``'s route: the driver
+        below ``LOCAL_POSTINGS_MAX``, else one pass per doc partition.
+        Tombstoned docs are left out of every count.
 
         Rows in fixed order: one ``leaf:<kind>`` row per clause (detail =
         term, docs = df, blocks = postings blocks, ttf), then operator
@@ -1661,47 +1600,22 @@ class IndexSearcher:
             df, ttf, blocks = stats.get(c.term, (0, 0, 0))
             leaf_rows.append((i, f"leaf:{c.kind}", c.term, df, blocks, ttf))
 
-        n_must = sum(1 for c in clauses if c.kind == "must")
-        n_filter = sum(1 for c in clauses if c.kind == "filter")
-        msm = q.min_should_match
-        scored = self._live(self._scan_and_score(clauses))
-        kinds = {c.clause_id: c.kind for c in clauses}
-        kind_expr = F.create_map(
-            *[x for cid, kd in kinds.items()
-              for x in (F.lit(cid), F.lit(kd))])[F.col("clause_id")]
-        agg = (
-            scored.withColumn("kind", kind_expr)
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.when(F.col("kind") == "must", 1)).alias("mn"),
-                F.count(F.when(F.col("kind") == "should", 1)).alias("sn"),
-                F.count(F.when(F.col("kind") == "filter", 1)).alias("fn"),
-                F.count(F.when(F.col("kind") == "must_not", 1)).alias("nn"),
-            )
-        )
-        req = (F.col("mn") == n_must) & (F.col("fn") == n_filter)
-        if n_must + n_filter == 0:
-            msm_c = req & (F.col("sn") >= max(msm, 1))
-        elif msm > 0:
-            msm_c = req & (F.col("sn") >= msm)
+        ops = ("candidates", "must_pass", "msm_pass", "excluded", "matched")
+        rows = self._local_rows({"": (q, np.float32(1.0))})
+        if rows is not None:
+            cids, docs, _, codes, msm = rows[""]
+            counts = local.profile_counts(cids, docs, codes, msm)
         else:
-            msm_c = req
-        row = agg.agg(
-            F.count("*").alias("candidates"),
-            F.sum(req.cast("long")).alias("must_pass"),
-            F.sum(msm_c.cast("long")).alias("msm_pass"),
-            F.sum((msm_c & (F.col("nn") > 0)).cast("long")).alias("excluded"),
-            F.sum((msm_c & (F.col("nn") == 0)).cast("long")).alias("matched"),
-        ).collect()[0]
-        base = len(leaf_rows)
-        op_rows = [
-            (base + i, node, "", int(row[col] or 0), None, None)
-            for i, (node, col) in enumerate((
-                ("candidates", "candidates"), ("must_pass", "must_pass"),
-                ("msm_pass", "msm_pass"), ("excluded", "excluded"),
-                ("matched", "matched"),
-            ))
-        ]
+            codes, msm = local.kind_codes(clauses), q.min_should_match
+            parts = self._by_doc(
+                self._live(self._scan_and_score(clauses)),
+                lambda cids, docs, _: [pd.DataFrame(
+                    [local.profile_counts(cids, docs, codes, msm)],
+                    columns=ops)],
+                ", ".join(f"{op} long" for op in ops)).collect()
+            counts = [sum(r[i] for r in parts) for i in range(len(ops))]
+        op_rows = [(len(leaf_rows) + i, op, "", n, None, None)
+                   for i, (op, n) in enumerate(zip(ops, counts))]
         return self.spark.createDataFrame(
             leaf_rows + op_rows,
             "seq int, node string, detail string, docs long, blocks long, "
@@ -2032,8 +1946,9 @@ class IndexSearcher:
         postings scan — a capability the reference has no analog for (its
         searcher executes one query at a time): all queries' terms go into
         one pushed-down scan, each decoded block is scored once per
-        (query, clause) pair, and a single groupBy((query, doc)) + per-query
-        rank window produces every query's top-k. At corpus scale this
+        (query, clause) pair, one pass per doc partition combines every
+        query's clauses (``_combine_by_doc``) and a per-query rank window
+        produces every query's top-k. At corpus scale this
         amortizes the dominant cost (scan + decode) across the workload —
         the shape a training-data pipeline needs when probing one corpus
         with hundreds of labeling queries.
@@ -2070,76 +1985,16 @@ class IndexSearcher:
                 np.concatenate([np.zeros(0, np.float32)]
                                + [hits[n][1] for n in names]),
                 query=[n for n in names for _ in range(hits[n][0].size)])
-        per_query = {name: (self._clauses_of(q, boost), q)
-                     for name, (q, boost) in flats.items()}
-
         # global clause table: clause_id space is shared across queries
+        per_query: dict[str, tuple[list[_Clause], int]] = {}
         all_clauses: list[_Clause] = []
-        meta: list[tuple[str, str, int]] = []  # (query, kind, msm) per clause
-        offset = 0
-        for name, (clauses, q) in per_query.items():
-            for c in clauses:
-                all_clauses.append(
-                    _Clause(offset + c.clause_id, c.kind, c.term, c.weight)
-                )
-                meta.append((name, c.kind, q.min_should_match))
-            offset += len(clauses)
-
-        matched = self._scan_and_score(all_clauses)
-        qmap = F.create_map(*[
-            x for cid, (nm, _, _) in enumerate(meta) for x in (F.lit(cid), F.lit(nm))
-        ])
-        kmap = F.create_map(*[
-            x for cid, (_, kd, _) in enumerate(meta) for x in (F.lit(cid), F.lit(kd))
-        ])
-        m = matched.select(
-            qmap[F.col("clause_id")].alias("query"),
-            kmap[F.col("clause_id")].alias("kind"),
-            "doc_id", "score",
-        )
-        agg = m.groupBy("query", "doc_id").agg(
-            F.sum(F.when(F.col("kind") == "must", F.col("score").cast("double"))).alias("must_s"),
-            F.count(F.when(F.col("kind") == "must", 1)).alias("must_n"),
-            F.sum(F.when(F.col("kind") == "should", F.col("score").cast("double"))).alias("should_s"),
-            F.count(F.when(F.col("kind") == "should", 1)).alias("should_n"),
-            F.count(F.when(F.col("kind") == "filter", 1)).alias("filter_n"),
-            F.count(F.when(F.col("kind") == "must_not", 1)).alias("not_n"),
-        )
-        # per-query membership constants joined in via literal maps
-        def _imap(fn):
-            return F.create_map(*[
-                x for name, (clauses, q) in per_query.items()
-                for x in (F.lit(name), F.lit(fn(clauses, q)))
-            ])[F.col("query")]
-
-        n_must_m = _imap(lambda cl, q: sum(1 for c in cl if c.kind == "must"))
-        n_filter_m = _imap(lambda cl, q: sum(1 for c in cl if c.kind == "filter"))
-        n_should_m = _imap(lambda cl, q: sum(1 for c in cl if c.kind == "should"))
-        msm_m = _imap(lambda cl, q: q.min_should_match)
-        cond = (
-            (F.col("must_n") == n_must_m)
-            & (F.col("filter_n") == n_filter_m)
-            & (F.col("not_n") == 0)
-            & F.when(n_must_m + n_filter_m == 0,
-                     F.col("should_n") >= F.greatest(msm_m, F.lit(1)))
-               .otherwise(
-                   F.when(msm_m > 0, F.col("should_n") >= msm_m).otherwise(F.lit(True))
-               )
-        )
-        # the scorer-tree float boundaries per query shape (same rules as
-        # _combine_req_opt, expressed with the per-query constants)
-        must_f = _f32(F.col("must_s"))
-        should_f = _f32(F.coalesce(F.col("should_s"), F.lit(0.0)))
-        score = (
-            # pure filter/must_not queries score a constant 0.0f (must_s is
-            # NULL over zero scoring rows — would otherwise surface as NaN)
-            F.when((n_should_m == 0) & (n_must_m == 0), _f32(F.lit(0.0)))
-            .when(n_should_m == 0, must_f)
-            .when(n_must_m == 0, should_f)
-            .when(msm_m > 0, _f32(F.col("must_s") + should_f.cast("double")))
-            .otherwise(_f32(must_f.cast("double") + should_f.cast("double")))
-        ).alias("score")
-        ranked = self._live(agg.filter(cond).select("query", "doc_id", score))
+        for name, (q, boost) in flats.items():
+            clauses = self._clauses_of(q, boost)
+            per_query[name] = (clauses, q.min_should_match)
+            all_clauses += [_Clause(len(all_clauses) + c.clause_id, c.kind,
+                                    c.term, c.weight) for c in clauses]
+        ranked = self._live(self._combine_by_doc(
+            self._scan_and_score(all_clauses), per_query))
         w = Window.partitionBy("query").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             ranked.withColumn("rn", F.row_number().over(w))
@@ -2181,7 +2036,7 @@ class IndexSearcher:
         clauses = self._clauses_of(q, np.float32(1.0))
         if not any(c.kind in ("must", "should") for c in clauses):
             raise ValueError("filter/not-only queries have no scoring clause")
-        msm = q.min_should_match
+        codes, msm = local.kind_codes(clauses), q.min_should_match
         terms = sorted({c.term for c in clauses})
         rng_sz = int(layout["range_size"])
         sim = self.sim
@@ -2206,8 +2061,8 @@ class IndexSearcher:
                     pdf["data"].to_numpy(object)).items():
                 m = (d >= lo) & (d < hi)
                 postings[term] = (d[m], f[m], nb[m])
-            udocs, usc = local.top_k(
-                *local.combine_scored(postings, clauses, sim, msm), kk)
+            udocs, usc = local.top_k(*local.combine_clauses(
+                *local.clause_rows(postings, clauses, sim), codes, msm), kk)
             return pd.DataFrame({"doc_id": udocs, "score": usc})
 
         leaves = table.groupBy("doc_part").applyInPandas(
@@ -3842,23 +3697,14 @@ class IndexSearcher:
         sim = self.sim
 
         def ds(batches):
-            from lucene_spark.functions.codec import decode_block
+            from lucene_spark.functions.codec import decode_blocks_batch
 
             for pdf in batches:
-                out_d, out_s = [], []
-                for nd, fd, data in zip(
-                    pdf["num_docs"].to_numpy(np.int64),
-                    pdf["first_doc"].to_numpy(np.int64),
-                    pdf["data"].to_numpy(object),
-                ):
-                    d, f, nb = decode_block(data, int(nd), int(fd))
-                    out_d.append(d)
-                    out_s.append(sim.score(f, nb, w))
-                if out_d:
-                    yield pd.DataFrame(
-                        {"doc_id": np.concatenate(out_d),
-                         "score": np.concatenate(out_s)}
-                    )
+                d, f, nb = decode_blocks_batch(
+                    pdf["data"], pdf["num_docs"], pdf["first_doc"])
+                if d.size:
+                    yield pd.DataFrame({"doc_id": d,
+                                        "score": sim.score(f, nb, w)})
 
         return (
             blocks.select("num_docs", "first_doc", "data")
@@ -4173,25 +4019,13 @@ class IndexSearcher:
         )
 
         def decode(batches):
-            from lucene_spark.functions.codec import decode_block
+            from lucene_spark.functions.codec import decode_blocks_batch
 
             for pdf in batches:
-                docs_out, freqs_out = [], []
-                for nd, fd, data in zip(
-                    pdf["num_docs"].to_numpy(np.int64),
-                    pdf["first_doc"].to_numpy(np.int64),
-                    pdf["data"].to_numpy(object),
-                ):
-                    d, f, _ = decode_block(data, int(nd), int(fd))
-                    docs_out.append(d)
-                    freqs_out.append(f)
-                if docs_out:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(docs_out),
-                            "freq": np.concatenate(freqs_out),
-                        }
-                    )
+                d, f, _ = decode_blocks_batch(
+                    pdf["data"], pdf["num_docs"], pdf["first_doc"])
+                if d.size:
+                    yield pd.DataFrame({"doc_id": d, "freq": f})
 
         per_doc = (
             scan.mapInPandas(decode, schema="doc_id long, freq long")
@@ -4250,13 +4084,14 @@ class IndexSearcher:
             return q, boost
         return None
 
-    def _local_topk(self, flats: dict[str, tuple[BooleanQuery, np.float32]],
-                    k: int) -> dict[str, tuple[np.ndarray, np.ndarray]] | None:
-        """Driver-local route (``query/local.py``): name -> top-k (doc ids,
-        float32 scores) of each flat query, from ONE pyarrow read of all
-        their terms' blocks. None — run it on Spark instead — when the
-        distinct terms' doc_freq sum exceeds LOCAL_POSTINGS_MAX or the
-        tombstones exceed BROADCAST_DELETES_MAX."""
+    def _local_rows(self, flats: dict[str, tuple[BooleanQuery, np.float32]]
+                    ) -> dict[str, tuple] | None:
+        """Driver-local route (``query/local.py``): name -> the
+        ``local.combine_clauses`` arguments (clause ids, doc ids, float32
+        scores, clause kind codes, msm) of each flat query's live rows,
+        from ONE pyarrow read of all their terms' blocks. None — run it on
+        Spark instead — when the distinct terms' doc_freq sum exceeds
+        LOCAL_POSTINGS_MAX or the tombstones exceed BROADCAST_DELETES_MAX."""
         rows = self._term_dict_rows(
             [t for q, _ in flats.values() for t in self._flat_terms(q)])
         if sum(r[0] for r in rows.values()) > self.LOCAL_POSTINGS_MAX:
@@ -4273,14 +4108,23 @@ class IndexSearcher:
             blocks.column("data").to_pylist())
         out = {}
         for name, (q, boost) in flats.items():
-            docs, scores = local.combine_scored(
-                postings, self._clauses_of(q, boost, rows), self.sim,
-                q.min_should_match)
+            clauses = self._clauses_of(q, boost, rows)
+            cids, docs, scores = local.clause_rows(postings, clauses, self.sim)
             if dead.size:
                 live = ~np.isin(docs, dead)
-                docs, scores = docs[live], scores[live]
-            out[name] = local.top_k(docs, scores, k)
+                cids, docs, scores = cids[live], docs[live], scores[live]
+            out[name] = (cids, docs, scores, local.kind_codes(clauses),
+                         q.min_should_match)
         return out
+
+    def _local_topk(self, flats: dict[str, tuple[BooleanQuery, np.float32]],
+                    k: int) -> dict[str, tuple[np.ndarray, np.ndarray]] | None:
+        """name -> top-k (doc ids, float32 scores) of each flat query on
+        the driver-local route (``_local_rows``), or None."""
+        rows = self._local_rows(flats)
+        return None if rows is None else {
+            name: local.top_k(*local.combine_clauses(*r), k)
+            for name, r in rows.items()}
 
     def _clauses_of(self, q: BooleanQuery, boost: np.float32,
                     rows: dict | None = None) -> list[_Clause]:
@@ -4335,13 +4179,9 @@ class IndexSearcher:
         wholly outside it are never decoded (metadata filter, pushed to the
         parquet scan), decoded docs outside it are dropped — the
         sorted-index early-termination restriction (exact within range)."""
-        present = [c for c in clauses]
-        terms = sorted({c.term for c in present})
+        terms = sorted({c.term for c in clauses})
         buckets = sorted({term_bucket_of(t, self.buckets) for t in terms})
         sim = self.sim
-        term_clauses: dict[str, list[tuple[int, np.float32]]] = {}
-        for c in present:
-            term_clauses.setdefault(c.term, []).append((c.clause_id, c.weight))
 
         scan = self.postings.filter(
             F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
@@ -4367,31 +4207,15 @@ class IndexSearcher:
         scan = scan.repartition(self.spark.sparkContext.defaultParallelism)
 
         def decode_score(batches):
-            from lucene_spark.functions.codec import decode_block
-
             for pdf in batches:
-                out_cid: list[np.ndarray] = []
-                out_doc: list[np.ndarray] = []
-                out_score: list[np.ndarray] = []
-                for term, nd, fd, data in zip(
+                cids, docs, scores = local.clause_rows(local.decode_terms(
                     pdf["term"].to_numpy(object),
                     pdf["num_docs"].to_numpy(np.int64),
                     pdf["first_doc"].to_numpy(np.int64),
-                    pdf["data"].to_numpy(object),
-                ):
-                    docs, freqs, norms = decode_block(data, int(nd), int(fd))
-                    for cid, w in term_clauses[term]:
-                        out_cid.append(np.full(docs.size, cid, dtype=np.int32))
-                        out_doc.append(docs)
-                        out_score.append(sim.score(freqs, norms, w))
-                if out_doc:
-                    yield pd.DataFrame(
-                        {
-                            "clause_id": np.concatenate(out_cid),
-                            "doc_id": np.concatenate(out_doc),
-                            "score": np.concatenate(out_score),
-                        }
-                    )
+                    pdf["data"].to_numpy(object)), clauses, sim)
+                if docs.size:
+                    yield pd.DataFrame({"clause_id": cids, "doc_id": docs,
+                                        "score": scores})
 
         out = scan.mapInPandas(decode_score, schema=_CLAUSE_SCHEMA)
         if doc_hi is not None:
@@ -4406,44 +4230,62 @@ class IndexSearcher:
                       doc_lo: int | None = None,
                       doc_hi: int | None = None) -> DataFrame | None:
         clauses = self._clauses_of(q, boost)
-        n_must = sum(1 for c in clauses if c.kind == "must")
-        n_filter = sum(1 for c in clauses if c.kind == "filter")
-        n_should = sum(1 for c in clauses if c.kind == "should")
-        msm = q.min_should_match
+        matched = self._scan_and_score(clauses, block_pred, block_keys,
+                                       keyed_terms, doc_lo, doc_hi)
         # single scoring clause: each doc appears exactly once in the scan,
-        # so clause combination is a no-op — skip the groupBy entirely
+        # so clause combination is a no-op — skip the shuffle entirely
         # (TermQuery never needs a BooleanScorer; at 10^7+ matched docs the
         # avoided shuffle dominates query latency)
         if len(clauses) == 1 and clauses[0].kind in ("must", "should"):
-            return self._scan_and_score(
-                clauses, block_pred, block_keys, keyed_terms, doc_lo, doc_hi
-            ).select("doc_id", "score")
-        matched = self._scan_and_score(clauses, block_pred, block_keys,
-                                       keyed_terms, doc_lo, doc_hi)
+            return matched.select("doc_id", "score")
+        return self._combine_by_doc(
+            matched, {"": (clauses, q.min_should_match)}
+        ).select("doc_id", "score")
 
-        kinds = {c.clause_id: c.kind for c in clauses}
-        kind_expr = F.create_map(
-            *[x for cid, kd in kinds.items() for x in (F.lit(cid), F.lit(kd))]
-        )[F.col("clause_id")]
-        m = matched.withColumn("kind", kind_expr)
+    def _by_doc(self, matched: DataFrame, fn, schema: str) -> DataFrame:
+        """Run ``fn(clause_ids, doc_ids, scores)`` — an iterable of pandas
+        frames of ``schema`` — once per doc-hash partition of a
+        ``_scan_and_score`` frame. ``repartition("doc_id")`` sends all of
+        a doc's rows to one of ``spark.sql.shuffle.partitions`` partitions,
+        as a groupBy(doc_id) would (AQE coalescing merges only whole hash
+        partitions, so a doc's rows stay together). The mapInPandas
+        concatenates its partition before calling ``fn``: one shuffle
+        partition's matched rows are held in the Python worker at once."""
+        def run(batches):
+            pdfs = list(batches)
+            if pdfs:
+                pdf = pd.concat(pdfs, ignore_index=True)
+                for out in fn(pdf["clause_id"].to_numpy(np.int64),
+                              pdf["doc_id"].to_numpy(np.int64),
+                              pdf["score"].to_numpy(np.float32)):
+                    if len(out):
+                        yield out
 
-        agg = m.groupBy("doc_id").agg(
-            F.sum(F.when(F.col("kind") == "must", F.col("score").cast("double"))).alias("must_s"),
-            F.count(F.when(F.col("kind") == "must", 1)).alias("must_n"),
-            F.sum(F.when(F.col("kind") == "should", F.col("score").cast("double"))).alias("should_s"),
-            F.count(F.when(F.col("kind") == "should", 1)).alias("should_n"),
-            F.count(F.when(F.col("kind") == "filter", 1)).alias("filter_n"),
-            F.count(F.when(F.col("kind") == "must_not", 1)).alias("not_n"),
-        )
-        cond = (F.col("must_n") == n_must) & (F.col("filter_n") == n_filter) & (F.col("not_n") == 0)
-        if n_must + n_filter == 0:
-            cond = cond & (F.col("should_n") >= max(msm, 1))
-        elif msm > 0:
-            cond = cond & (F.col("should_n") >= msm)
-        score = _combine_req_opt(
-            n_must, n_should, msm, F.col("must_s"), F.col("should_s")
-        ).alias("score")
-        return agg.filter(cond).select("doc_id", score)
+        return matched.repartition("doc_id").mapInPandas(run, schema=schema)
+
+    def _combine_by_doc(self, matched: DataFrame,
+                        queries: dict[str, tuple[list[_Clause], int]]
+                        ) -> DataFrame:
+        """DF(query, doc_id, score): every query's matching docs and float32
+        scores, combined by ``local.combine_clauses`` in each doc partition
+        (``_by_doc``). ``queries`` maps a name to its (clauses,
+        min_should_match); ``matched``'s clause ids number all queries'
+        clauses consecutively, in ``queries`` order."""
+        spans, lo = [], 0
+        for name, (clauses, msm) in queries.items():
+            spans.append((name, lo, lo + len(clauses),
+                          local.kind_codes(clauses), msm))
+            lo += len(clauses)
+
+        def combine(cids, docs, scores):
+            for name, first, end, codes, msm in spans:
+                sel = (cids >= first) & (cids < end)
+                d, sc = local.combine_clauses(cids[sel] - first, docs[sel],
+                                              scores[sel], codes, msm)
+                yield pd.DataFrame({"query": name, "doc_id": d, "score": sc})
+
+        return self._by_doc(matched, combine,
+                            "query string, doc_id long, score float")
 
     def _nested_boolean(self, q: BooleanQuery, boost: np.float32) -> DataFrame | None:
         """General recursive combination (nested booleans): join-based

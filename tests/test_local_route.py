@@ -2,7 +2,11 @@
 (``IndexSearcher._local_topk``, ``query/local.py``) against the Spark
 route. A searcher whose instance-level ``LOCAL_POSTINGS_MAX`` is 0 always
 takes the Spark route, so each check runs one query both ways and requires
-identical rows: doc ids and float32 score bits, in order."""
+identical rows: doc ids and float32 score bits, in order. Both routes
+combine clauses with one kernel (``local.combine_clauses``), so these
+checks cover reading, decoding, scoring and routing, not the combine rule
+itself: the scalar-oracle tests check that on both routes
+(``*_spark_route`` in test_random_queries.py and test_search_extras.py)."""
 
 from __future__ import annotations
 
@@ -16,7 +20,9 @@ from lucene_spark.index.build import IndexConfig, build_index, load_manifest
 from lucene_spark.index.deletes import soft_delete_docs
 from lucene_spark.index.merge import merge_index
 from lucene_spark.index.update import update_docs
-from lucene_spark.query.ast import BooleanQuery, BoostQuery, TermQuery
+from lucene_spark.query.ast import (
+    BooleanQuery, BoostQuery, TermQuery, rewrite_fixpoint,
+)
 from lucene_spark.query.multi import MultiIndexSearcher
 from lucene_spark.query.search import IndexSearcher
 from lucene_spark.sources.transcripts import generate_pandas
@@ -146,6 +152,31 @@ def test_local_route_matches_spark_route_with_deletes(spark, updated_index,
     assert hits and not {d for d, _ in hits} & dead
     # the staged segment's rows are on disk but not committed: invisible
     assert _assert_same(loc, spk, TermQuery("qqstaged"), 1000) == []
+
+
+@pytest.mark.parametrize("include_soft", [False, True])
+def test_count_and_profile_agree_across_routes_with_deletes(
+        spark, updated_index, include_soft):
+    """count() and profile()'s operator counts come from one combine
+    kernel on both routes: equal on both, equal to the live hit count,
+    tombstoned docs left out."""
+    loc, spk = _pair(spark, updated_index,
+                     include_soft_deletes=include_soft)
+    vocab = _vocab(loc)
+    rng = random.Random(f"count-profile-{include_soft}")
+    for q in _fixed_shapes(vocab) + [_random_flat(rng, vocab)
+                                     for _ in range(6)]:
+        q = q.query if isinstance(q, BoostQuery) else q
+        hits = _assert_same(loc, spk, q, 100_000)
+        assert loc.count(q) == spk.count(q) == len(hits), q
+        if not isinstance(rewrite_fixpoint(q), (BooleanQuery, TermQuery)):
+            continue  # rewritten away (e.g. to MatchNoDocs): no profile
+        prof = [r.asDict() for r in loc.profile(q).collect()]
+        assert prof == [r.asDict() for r in spk.profile(q).collect()], q
+        ops = {r["node"]: r["docs"] for r in prof}
+        assert ops["matched"] == len(hits), q
+        assert (ops["candidates"] >= ops["must_pass"] >= ops["msm_pass"]
+                == ops["excluded"] + ops["matched"]), q
 
 
 def test_local_route_matches_spark_route_multi_index(spark, built_index,

@@ -46,6 +46,16 @@ def searcher(spark, built_index):
     return IndexSearcher(spark, built_index)
 
 
+@pytest.fixture(scope="module")
+def spark_route(spark, built_index):
+    """A searcher whose term and flat-Boolean queries take the Spark route
+    (no driver-local execution), so the combine kernel it runs per doc
+    partition is checked against the scalar oracle too."""
+    s = IndexSearcher(spark, built_index)
+    s.LOCAL_POSTINGS_MAX = 0
+    return s
+
+
 def _random_query(rng: random.Random, vocab: list[str], depth: int = 0):
     roll = rng.random()
     if depth >= 2 or roll < 0.45:
@@ -76,6 +86,16 @@ def _random_query(rng: random.Random, vocab: list[str], depth: int = 0):
 
 @pytest.mark.parametrize("seed", SEEDS)
 def test_random_boolean_trees_rank_identical(searcher, oracle_index, seed):
+    _check_boolean_trees(searcher, oracle_index, seed)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_random_boolean_trees_rank_identical_spark_route(
+        spark_route, oracle_index, seed):
+    _check_boolean_trees(spark_route, oracle_index, seed)
+
+
+def _check_boolean_trees(searcher, oracle_index, seed):
     rng = random.Random(seed)
     vocab = sorted(oracle_index.postings)
     common = sorted(vocab, key=lambda t: -oracle_index.doc_freq(t))[:40]
@@ -104,6 +124,16 @@ def test_random_flat_trees_through_search_many(searcher, oracle_index, seed):
     generator produces (after rewrite + expansion) runs through search_many
     in ONE workload and must be bit-identical to the scalar oracle — the
     filter-only-NaN bug lived exactly in this path."""
+    _check_flat_batch(searcher, oracle_index, seed)
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_random_flat_trees_through_search_many_spark_route(
+        spark_route, oracle_index, seed):
+    _check_flat_batch(spark_route, oracle_index, seed)
+
+
+def _check_flat_batch(searcher, oracle_index, seed):
     rng = random.Random(seed ^ 0x5EA11)
     vocab = sorted(oracle_index.postings)
     common = sorted(vocab, key=lambda t: -oracle_index.doc_freq(t))[:40]

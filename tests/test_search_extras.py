@@ -277,9 +277,21 @@ def test_pruned_fallback_small_result(searcher, common_terms):
 
 # ------------------------------------------------ count fast path + k1/b
 
-def test_match_count_equals_scored_count(searcher, common_terms):
-    """FILTER-semantics count (no scoring plan) must equal the scored
-    path's match count for every flat Boolean shape."""
+def test_match_count_equals_scored_count(searcher, common_terms,
+                                        oracle_index):
+    """count() of every flat Boolean shape equals the scored plan's match
+    count and the scalar oracle's."""
+    _check_match_counts(searcher, common_terms, oracle_index)
+
+
+def test_match_count_equals_scored_count_spark_route(
+        spark, built_index, common_terms, oracle_index):
+    s = IndexSearcher(spark, built_index)
+    s.LOCAL_POSTINGS_MAX = 0
+    _check_match_counts(s, common_terms, oracle_index)
+
+
+def _check_match_counts(searcher, common_terms, oracle_index):
     t0, t1 = common_terms[0][0], common_terms[1][0]
     rare = common_terms[-1][0]
     shapes = [
@@ -296,6 +308,7 @@ def test_match_count_equals_scored_count(searcher, common_terms):
         scored = searcher._execute(q, np.float32(1.0))
         expect = 0 if scored is None else scored.count()
         assert searcher.count(q) == expect, q
+        assert len(oracle_index.search(q, 10**9)) == expect, q
 
 
 def test_custom_similarity_k1_b(spark, built_index, searcher, common_terms):
@@ -771,6 +784,38 @@ def test_payloads_artifact_and_payload_score(spark, tmp_path):
         s.payload_score("run", 10, func="median")
 
 
+def test_payload_score_limit_capped_at_doc_count(spark, tmp_path):
+    """An "all hits" k (the payload entries pass 10^9) is capped at the
+    index's doc count before Spark plans the top-k, whose buffer is sized
+    by the limit. Only the plan is read: executing the uncapped top-k
+    allocates a 2*10^9-slot buffer on the driver."""
+    import re
+
+    import pandas as pd
+
+    from lucene_spark.index.build import IndexConfig, build_index
+    from lucene_spark.index.merge import merge_index
+
+    texts = ["run|0.5 jump|1.0", "run|2.0", "walk|3.0"]
+    rows = pd.DataFrame({
+        "conv_id": [f"c{i}" for i in range(len(texts))],
+        "turn_idx": [0] * len(texts), "role": ["doc"] * len(texts),
+        "text": texts, "tool": [None] * len(texts),
+        "ts": pd.to_datetime(["2026-01-01"] * len(texts)),
+    })
+    idx = str(tmp_path / "pay")
+    build_index(spark, spark.createDataFrame(rows), idx,
+                IndexConfig(num_segments=1, term_buckets=2,
+                            analyzer="whitespace_payload", payloads=True))
+    merge_index(spark, idx)
+    s = IndexSearcher(spark, idx)
+    plan = (s.payload_score("run", 1_000_000_000)
+            ._jdf.queryExecution().executedPlan().toString())
+    limits = [int(n) for n in re.findall(r"TakeOrderedAndProject\(limit=(\d+)",
+                                         plan)]
+    assert limits and max(limits) <= s.local_doc_count == len(texts), plan
+
+
 def test_delimited_term_frequency_chain(spark, tmp_path):
     """DelimitedTermFrequencyTokenFilter semantics: 'foo|3' must be
     indistinguishable from literal 'foo foo foo' in a DOCS_AND_FREQS index
@@ -1077,14 +1122,20 @@ def test_function_match_and_range(spark, built_index):
 def test_query_profile(spark, built_index):
     """Profiler breakdown: leaf df/blocks/ttf match the term dictionary,
     operator counts match brute-force set algebra, msm arm, flat guard."""
+    _check_profile(IndexSearcher(spark, built_index))
+
+
+def test_query_profile_spark_route(spark, built_index):
+    s = IndexSearcher(spark, built_index)
+    s.LOCAL_POSTINGS_MAX = 0
+    _check_profile(s)
+
+
+def _check_profile(s):
     import json
 
-    from pyspark.sql import functions as F
-
     from lucene_spark.query.ast import parse_query, rewrite_fixpoint
-    from lucene_spark.query.search import IndexSearcher
 
-    s = IndexSearcher(spark, built_index)
     td = {r["term"]: (r["doc_freq"], r["num_blocks"], r["total_term_freq"])
           for r in s.term_dict.filter(
               F.col("term").isin(["ba", "be", "bi"])).collect()}

@@ -128,6 +128,18 @@ def test_small_queries_run_no_job(spark, built_index, pin_terms):
     assert _jobs_of(spark, lambda: s.search_many(batch, 10).collect()) == 0
 
 
+def test_small_flat_count_runs_no_job(spark, built_index, pin_terms):
+    """count() of a flat two-clause Boolean below LOCAL_POSTINGS_MAX counts
+    the driver-local matches: zero Spark jobs. Above the bound it counts
+    the Spark plan's matches, with the same result."""
+    q = BooleanQuery(must=[TermQuery(pin_terms[0])],
+                     should=[TermQuery(pin_terms[-1])])
+    s = IndexSearcher(spark, built_index)
+    n = []
+    assert _jobs_of(spark, lambda: n.append(s.count(q))) == 0
+    assert n[0] == _spark_route(spark, built_index).count(q) > 0
+
+
 def test_empty_results_run_no_job(spark, built_index):
     """A query that matches nothing before any scan returns a local empty
     frame: collecting it runs no Spark job."""
