@@ -940,8 +940,9 @@ _JA_RES_REL = ("lucene/analysis/kuromoji/src/resources/org/apache/lucene/"
 
 
 def _ja_resource(name: str) -> str:
-    root = os.environ.get("LUCENE_SPARK_REF_DIR", "/root/reference")
-    p = os.path.join(root, _JA_RES_REL, name)
+    from lucene_spark.functions.stempel import ref_dir
+
+    p = os.path.join(ref_dir(), _JA_RES_REL, name)
     if not os.path.exists(p):
         raise KuromojiUnavailable(f"missing ja resource {p!r}")
     return p
@@ -1031,11 +1032,11 @@ def dict_buildable(dict_dir: str, module: str) -> bool:
     (``TokenInfoDictionary$fst.dat``), or the reference tree the parity
     tool builds one from exists: lucene-core's sources and
     ``lucene/analysis/<module>``'s, under ``$LUCENE_SPARK_REF_DIR``."""
-    from lucene_spark.functions.stempel import _REF_DEFAULT
+    from lucene_spark.functions.stempel import ref_dir
 
     if os.path.exists(os.path.join(dict_dir, "TokenInfoDictionary$fst.dat")):
         return True
-    root = os.environ.get("LUCENE_SPARK_REF_DIR", _REF_DEFAULT)
+    root = ref_dir()
     return all(os.path.isdir(os.path.join(root, "lucene", rel))
                for rel in ("core/src/java/org", f"analysis/{module}/src/java"))
 

@@ -60,8 +60,14 @@ class StempelUnavailable(RuntimeError):
     classpath resource is missing)."""
 
 
+def ref_dir() -> str:
+    """The Lucene source tree runtime resources and the dictionary
+    builders read: ``$LUCENE_SPARK_REF_DIR``, default ``_REF_DEFAULT``."""
+    return os.environ.get("LUCENE_SPARK_REF_DIR", _REF_DEFAULT)
+
+
 def _ref_path(rel: str) -> str:
-    root = os.environ.get("LUCENE_SPARK_REF_DIR", _REF_DEFAULT)
+    root = ref_dir()
     p = os.path.join(root, rel)
     if not os.path.exists(p):
         raise StempelUnavailable(

@@ -142,11 +142,14 @@ def expand_complex_phrase(q: ComplexPhraseQuery, searcher) -> Query:
             slots.append(sl)
             continue
         if isinstance(sl, PrefixQuery):
-            cond = F.col("term").startswith(sl.prefix)
+            terms = searcher._dict_terms(sl, MAX_EXPANSIONS + 1)
         elif isinstance(sl, WildcardQuery):
             rx = "^" + re.escape(sl.pattern).replace(
                 r"\*", ".*").replace(r"\?", ".") + "$"
-            cond = F.col("term").rlike(rx)
+            terms = [r["term"] for r in (
+                searcher.term_dict.filter(F.col("term").rlike(rx))
+                .select("term").orderBy("term")
+                .limit(MAX_EXPANSIONS + 1).collect())]
         elif isinstance(sl, FuzzyQuery):
             tlen = len(sl.term)
             cand = searcher.term_dict.filter(
@@ -162,11 +165,9 @@ def expand_complex_phrase(q: ComplexPhraseQuery, searcher) -> Query:
             continue
         else:
             raise TypeError(f"unsupported slot {sl!r}")
-        rows = (searcher.term_dict.filter(cond).select("term")
-                .orderBy("term").limit(MAX_EXPANSIONS + 1).collect())
-        if len(rows) > MAX_EXPANSIONS:
+        if len(terms) > MAX_EXPANSIONS:
             raise ValueError("TooManyClauses: multi-term slot expansion")
-        slots.append(tuple(r["term"] for r in rows))
+        slots.append(tuple(terms))
     if any(not sl for sl in slots):
         return MatchNoDocsQuery()
     if q.slop == 0 and q.in_order:

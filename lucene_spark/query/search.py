@@ -28,6 +28,11 @@ Physical plan (the part that must survive 100 TB):
     Boolean queries skip Spark entirely: the same blocks are read, decoded,
     scored and combined on the driver (``query/local.py``), with identical
     results and no job.
+  - Prefix, TermRange and TermInSet queries expand from a driver-side walk
+    of the sorted term_dict (``_dict_terms``, the reference's in-process
+    ``MultiTermQuery`` rewrite) with no job; a bare one whose expansion is
+    that small runs as its OR on the driver too. Larger bare multi-term
+    queries keep the unbounded postings-join expansion.
 
 Every Lucene pruning trick being score-safe also means: this plan's results
 are *identical* at any parallelism, which is what makes the N -> 4N scaling
@@ -391,6 +396,73 @@ class IndexSearcher:
         cols = [t.column(c).to_pylist() for c in schema.names]
         return {term: (df, ttf, nb) for term, df, ttf, nb in zip(*cols)}
 
+    def _dict_terms(self, q: Query, limit: int) -> list[str]:
+        """The sorted ``term_dict`` terms a PrefixQuery, TermRangeQuery or
+        TermInSetQuery matches, at most ``limit`` of them (the first in
+        term order) — the reference's in-process term-dictionary walk
+        (``MultiTermQuery.java``, ``PrefixQuery.java:29``), with no Spark
+        job. One driver-side pyarrow scan, as ``_term_dict_rows`` reads:
+        a range conjunct prunes the sorted files' row groups, the exact
+        predicate (``starts_with``, the bounds with their inclusive
+        flags, ``isin``) selects the terms, and record batches stream, so
+        the driver holds about ``limit`` terms and one batch. Arrow and
+        Spark both compare strings by UTF-8 bytes, so this is the term
+        set Spark's filter returns.
+
+        Wildcard, Regexp and Fuzzy expansions stay Spark filters: their
+        predicates are Java regexes and ``levenshtein``, whose semantics
+        the driver would have to re-implement."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        term = ds.field("term")
+        if isinstance(q, PrefixQuery):
+            cond = (term >= q.prefix) & pc.starts_with(term, q.prefix)
+            # every term with the prefix sorts below the prefix with its
+            # last code point (past any trailing U+10FFFF) incremented
+            stem = q.prefix.rstrip("\U0010ffff")
+            if stem:
+                nxt = ord(stem[-1]) + 1
+                nxt = 0xE000 if 0xD800 <= nxt < 0xE000 else nxt
+                cond = cond & (term < stem[:-1] + chr(nxt))
+        elif isinstance(q, TermRangeQuery):
+            cond = pc.scalar(True)
+            if q.lower is not None:
+                cond = cond & (term >= q.lower if q.include_lower
+                               else term > q.lower)
+            if q.upper is not None:
+                cond = cond & (term <= q.upper if q.include_upper
+                               else term < q.upper)
+        elif isinstance(q, TermInSetQuery):
+            uniq = sorted(set(q.terms))
+            if not uniq:
+                return []
+            cond = (term >= uniq[0]) & (term <= uniq[-1]) & term.isin(uniq)
+        else:
+            raise TypeError(f"no dictionary walk for {type(q).__name__}")
+        scan = ds.dataset(
+            os.path.join(self.index_dir, "term_dict"),
+            schema=pa.schema([("term", pa.string())]), format="parquet",
+        ).scanner(columns=["term"], filter=cond)
+        out: list[str] = []
+        for batch in scan.to_batches():
+            out += batch.column(0).to_pylist()
+            if len(out) > limit:
+                out = sorted(out)[:limit]
+        return sorted(out)[:limit]
+
+    def _dict_ahead(self) -> bool:
+        """Whether ``term_dict`` already folds in a segment past this
+        searcher's commit point (a staged update's, or one committed after
+        this searcher opened), so its doc_freq counts postings this
+        searcher does not see. Each append writes its term_dict generation
+        with the appended segment's ``_APPLIED_SEG_<id>`` marker."""
+        marks = [int(n.rsplit("_", 1)[1]) for n in os.listdir(
+            os.path.join(self.index_dir, "term_dict"))
+            if n.startswith("_APPLIED_SEG_")]
+        return any(m > self.max_segment_id for m in marks)
+
     def docmap(self) -> DataFrame:
         if self._docmap is None:
             self._docmap = (
@@ -456,15 +528,24 @@ class IndexSearcher:
         the term-at-a-time scan. Both routes return identical rows.
 
         Bare multi-term queries (Prefix/Wildcard/Regexp/TermRange/TermInSet,
-        optionally Boost-wrapped) run through the JOIN-based expansion
-        (``_scored_expansion_join``): the term predicate is pushed into the
-        postings scan itself, per-term df comes from a metadata-only groupBy
-        over the matched blocks, and no term list ever reaches the driver —
-        result-identical to the SHOULD-of-TermQueries rewrite but unbounded
-        and fully distributed."""
+        optionally Boost-wrapped) never raise TooManyClauses. A Prefix,
+        TermRange or TermInSet query is first expanded on the driver
+        (``_dict_terms``); when its terms fit ``max_clause_count`` and the
+        driver-local bound, their OR runs on the driver-local route
+        (``_multi_term_rows``). Every other one runs through the JOIN-based
+        expansion (``_scored_expansion_join``): the term predicate is
+        pushed into the postings scan itself, per-term df comes from a
+        metadata-only groupBy over the matched blocks, and no term list
+        ever reaches the driver — result-identical to the
+        SHOULD-of-TermQueries rewrite but unbounded and fully
+        distributed."""
         q = rewrite_fixpoint(query)
         jp = self._as_multi_term_cond(q)
         if jp is not None:
+            rows = self._multi_term_rows(q)
+            if rows is not None:
+                return local.hits_frame(
+                    self.spark, *local.top_k(*local.combine_clauses(*rows), k))
             scored = self._live(self._scored_expansion_join(*jp))
             return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         q = self._expand_multi_term(q)
@@ -2108,12 +2189,18 @@ class IndexSearcher:
     def _scored_all(self, query: Query) -> DataFrame | None:
         """EVERY matching (doc_id, score float) — no top-k cut. The same
         planning as ``search`` minus the collector: bare multi-term queries
-        run the pushed-down expansion join, everything else the exhaustive
-        executor (the co-located layout is a top-k router, irrelevant when
-        all hits flow into a downstream aggregate)."""
+        take the driver-local route when small (``_multi_term_rows``, a
+        local frame of every match), else the pushed-down expansion join;
+        everything else the exhaustive executor (the co-located layout is
+        a top-k router, irrelevant when all hits flow into a downstream
+        aggregate)."""
         q = rewrite_fixpoint(query)
         jp = self._as_multi_term_cond(q)
         if jp is not None:
+            rows = self._multi_term_rows(q)
+            if rows is not None:
+                return local.hits_frame(self.spark,
+                                        *local.combine_clauses(*rows))
             return self._live(self._scored_expansion_join(*jp))
         q = rewrite_fixpoint(self._expand_multi_term(q))
         return self._live(self._execute(q, np.float32(1.0)))
@@ -2242,8 +2329,9 @@ class IndexSearcher:
     ):
         """Multi-term interval source (``Intervals.prefix`` /
         ``Intervals.wildcard``, ``Intervals.java:64,158-170``): expand the
-        pattern against the term dictionary (row-group-pruned range scan for
-        prefixes) into an OR over term sources, capped at
+        pattern against the term dictionary (the driver-side walk
+        ``_dict_terms`` for prefixes, a Spark filter for wildcards) into
+        an OR over term sources, capped at
         ``max_expansions`` = the reference's DEFAULT_MAX_EXPANSIONS — more
         matches raise, exactly the reference's IllegalStateException
         contract. The collected expansion is at most 128 strings (driver-
@@ -2251,7 +2339,7 @@ class IndexSearcher:
         from lucene_spark.query.intervals import or_
 
         if kind == "prefix":
-            cond = F.col("term").startswith(pattern)
+            terms = self._dict_terms(PrefixQuery(pattern), max_expansions + 1)
         elif kind == "wildcard":
             import fnmatch
             import re as _re
@@ -2264,20 +2352,16 @@ class IndexSearcher:
             lit = _re.split(r"[*?\[]", pattern, 1)[0]
             if lit:
                 cond = F.col("term").startswith(lit) & cond
+            terms = [r["term"] for r in (
+                self.term_dict.filter(cond).select("term").orderBy("term")
+                .limit(max_expansions + 1).collect())]
         else:
             raise ValueError(f"unknown expansion kind {kind!r}")
-        rows = (
-            self.term_dict.filter(cond)
-            .select("term")
-            .orderBy("term")
-            .limit(max_expansions + 1)
-            .collect()
-        )
-        if len(rows) > max_expansions:
+        if len(terms) > max_expansions:
             raise TooManyClauses(
                 f"{kind} {pattern!r} expands to more than {max_expansions} terms"
             )
-        return or_(*[r["term"] for r in rows])
+        return or_(*terms)
 
     def interval_fuzzy(
         self, term: str, max_edits: int = 2, max_expansions: int = 128
@@ -3094,6 +3178,30 @@ class IndexSearcher:
             return None
         return cond, boost, None
 
+    def _multi_term_rows(self, q: Query) -> tuple | None:
+        """``local.combine_clauses`` arguments of a bare (optionally
+        Boost-wrapped) Prefix, TermRange or TermInSet query run as the OR
+        of its ``_dict_terms`` expansion on the driver-local route
+        (``_local_rows``), with df from term_dict as term queries take it.
+        None — run the join path instead — for other query types, when the
+        expansion exceeds ``max_clause_count``, when ``_local_rows``
+        declines, or when term_dict counts segments this searcher does not
+        see (``_dict_ahead``; the join path takes df from the committed
+        postings)."""
+        boost = np.float32(q.boost if isinstance(q, BoostQuery) else 1.0)
+        inner = q.query if isinstance(q, BoostQuery) else q
+        if (not isinstance(inner, (PrefixQuery, TermRangeQuery,
+                                   TermInSetQuery))
+                or self._dict_ahead()):
+            return None
+        terms = self._dict_terms(inner, self.max_clause_count + 1)
+        if len(terms) > self.max_clause_count:
+            return None
+        flat = BooleanQuery(should=[TermQuery(t) for t in terms],
+                            min_should_match=1)
+        rows = self._local_rows({"": (flat, boost)})
+        return None if rows is None else rows[""]
+
     def _scored_expansion_join(
         self, cond, boost: np.float32, verify_pattern: str | None = None
     ) -> DataFrame:
@@ -3261,7 +3369,10 @@ class IndexSearcher:
         (PrefixQuery/WildcardQuery/TermRangeQuery/TermInSetQuery ->
         OR-of-terms; MultiTermQuery.java rewrite framework analog). The
         driver-side term list is bounded by ``max_clause_count``
-        (TooManyClauses, ``IndexSearcher.java:80,898``)."""
+        (TooManyClauses, ``IndexSearcher.java:80,898``). Prefix, TermRange
+        and TermInSet terms come from the driver-side dictionary walk
+        (``_dict_terms``, no Spark job); Wildcard and Regexp terms from a
+        capped Spark collect of the filtered term_dict."""
         verify_pattern = None
         if isinstance(q, RegexpQuery):
             kind, payload = self._regexp_plan(q.pattern)
@@ -3302,16 +3413,18 @@ class IndexSearcher:
         else:
             return q
         cap = self.max_clause_count
-        matched = self.term_dict.filter(cond).select("term")
-        if verify_pattern is not None:
-            matched = self._automaton_term_filter(matched, verify_pattern)
-        rows = matched.limit(cap + 1).collect()
-        if len(rows) > cap:
+        if isinstance(q, (PrefixQuery, TermRangeQuery, TermInSetQuery)):
+            terms = self._dict_terms(q, cap + 1)
+        else:
+            matched = self.term_dict.filter(cond).select("term")
+            if verify_pattern is not None:
+                matched = self._automaton_term_filter(matched, verify_pattern)
+            terms = sorted(r[0] for r in matched.limit(cap + 1).collect())
+        if len(terms) > cap:
             raise TooManyClauses(
                 f"{type(q).__name__} expands to more than {cap} terms "
                 "(max_clause_count); use the join-based search() path"
             )
-        terms = sorted(r[0] for r in rows)
         if not terms:
             return MatchNoDocsQuery()
         if len(terms) == 1:

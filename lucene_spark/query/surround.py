@@ -458,6 +458,8 @@ class _DistancePlan:
     def _expand(self, q, searcher) -> list[str]:
         import pyspark.sql.functions as F
 
+        from lucene_spark.query.ast import PrefixQuery
+
         if isinstance(q, SrndTerm):
             return [q.text]
         if isinstance(q, SrndBool) and q.op == "or":
@@ -467,20 +469,20 @@ class _DistancePlan:
             return out
         if isinstance(q, (SrndPrefix, SrndTrunc)):
             if isinstance(q, SrndPrefix):
-                cond = F.col("term").startswith(q.prefix)
+                terms = searcher._dict_terms(PrefixQuery(q.prefix),
+                                             MAX_BASIC_QUERIES + 1)
             else:
                 rx = "^" + re.escape(q.pattern).replace(
                     r"\*", ".*").replace(r"\?", ".") + "$"
-                cond = F.col("term").rlike(rx)
-            rows = (
-                searcher.term_dict.filter(cond).select("term")
-                .orderBy("term").limit(MAX_BASIC_QUERIES + 1).collect()
-            )
-            if len(rows) > MAX_BASIC_QUERIES:
+                terms = [r["term"] for r in (
+                    searcher.term_dict.filter(F.col("term").rlike(rx))
+                    .select("term").orderBy("term")
+                    .limit(MAX_BASIC_QUERIES + 1).collect())]
+            if len(terms) > MAX_BASIC_QUERIES:
                 raise ValueError(
                     f"Exceeded maximum of {MAX_BASIC_QUERIES} basic "
                     "queries (TooManyBasicQueries)")
-            return [r["term"] for r in rows]
+            return terms
         if isinstance(q, SrndDistance):
             raise ValueError(
                 "nested distance operators are not supported by the "

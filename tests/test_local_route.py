@@ -1,6 +1,6 @@
-"""The driver-local route of term and flat-Boolean queries
-(``IndexSearcher._local_topk``, ``query/local.py``) against the Spark
-route. A searcher whose instance-level ``LOCAL_POSTINGS_MAX`` is 0 always
+"""The driver-local route of term, flat-Boolean and bare multi-term queries
+(``IndexSearcher._local_topk``, ``_multi_term_rows``, ``query/local.py``)
+against the Spark route. A searcher whose instance-level ``LOCAL_POSTINGS_MAX`` is 0 always
 takes the Spark route, so each check runs one query both ways and requires
 identical rows: doc ids and float32 score bits, in order. Both routes
 combine clauses with one kernel (``local.combine_clauses``), so these
@@ -11,6 +11,7 @@ itself: the scalar-oracle tests check that on both routes
 from __future__ import annotations
 
 import random
+import shutil
 
 import numpy as np
 import pytest
@@ -21,7 +22,8 @@ from lucene_spark.index.deletes import soft_delete_docs
 from lucene_spark.index.merge import merge_index
 from lucene_spark.index.update import update_docs
 from lucene_spark.query.ast import (
-    BooleanQuery, BoostQuery, TermQuery, rewrite_fixpoint,
+    BooleanQuery, BoostQuery, PrefixQuery, TermInSetQuery, TermQuery,
+    TermRangeQuery, rewrite_fixpoint,
 )
 from lucene_spark.query.multi import MultiIndexSearcher
 from lucene_spark.query.search import IndexSearcher
@@ -114,12 +116,15 @@ def test_local_route_matches_spark_route(spark, built_index, similarity,
         _assert_same(loc, spk, q, rng.choice([1, 3, 10, 1000]))
 
 
+_BASE = dict(n_convs=24, seed=61, vocab_size=250, max_turns=6)
+
+
 @pytest.fixture(scope="module")
-def updated_index(spark, tmp_path_factory):
-    """An index with hard deletes (update_docs), soft deletes, and a
-    staged segment that was never committed."""
-    base = generate_pandas(n_convs=24, seed=61, vocab_size=250, max_turns=6)
-    idx = str(tmp_path_factory.mktemp("localupd") / "idx")
+def deleted_index(spark, tmp_path_factory):
+    """An index with hard deletes (update_docs) and soft deletes, all
+    committed."""
+    base = generate_pandas(**_BASE)
+    idx = str(tmp_path_factory.mktemp("localdel") / "idx")
     build_index(spark, spark.createDataFrame(base), idx,
                 IndexConfig(num_segments=2, term_buckets=4, hot_term_df=64))
     merge_index(spark, idx)
@@ -129,8 +134,18 @@ def updated_index(spark, tmp_path_factory):
     update_docs(spark, idx, spark.createDataFrame(batch), batch_id=1)
     soft_delete_docs(spark, idx, spark.createDataFrame(
         [(d,) for d in range(1, 60, 4)], "doc_id long"))
-    staged = base[base["conv_id"] == convs[-1]].copy()
-    staged["text"] = "qqstaged " + staged["text"]
+    return idx
+
+
+@pytest.fixture(scope="module")
+def updated_index(spark, deleted_index, tmp_path_factory):
+    """A copy of ``deleted_index`` plus a staged segment that was never
+    committed."""
+    idx = str(tmp_path_factory.mktemp("localupd") / "idx")
+    shutil.copytree(deleted_index, idx)
+    base = generate_pandas(**_BASE)
+    staged = base[base["conv_id"] == sorted(base["conv_id"].unique())[-1]]
+    staged = staged.assign(text="qqstaged " + staged["text"])
     assert stage_batch_segment(spark, spark.createDataFrame(staged), idx,
                                load_manifest(idx), batch_id=2) is not None
     return idx
@@ -223,3 +238,78 @@ def test_search_many_local_route_equals_search(spark, built_index):
                 for r in got if r["query"] == name] == want, name
     assert {r["query"] for r in got} >= {"a_term", "c_conj", "d_filter"}
     assert loc.search_many({}, 7).collect() == []
+
+
+def _multi_term_shapes(vocab: list[str]):
+    """Bare Prefix, Boost(Prefix), TermRange (both bounds, open ends,
+    exclusive ends) and TermInSet (absent terms too) queries."""
+    hot, mid = vocab[0], vocab[13]
+    lo, hi = sorted((vocab[1], vocab[14]))
+    return [
+        PrefixQuery(hot[:2]),
+        PrefixQuery(mid[:3]),
+        PrefixQuery(hot),
+        BoostQuery(PrefixQuery(mid[:2]), 2.5),
+        TermRangeQuery(lo, hi),
+        TermRangeQuery(lo, hi, include_lower=False, include_upper=False),
+        TermRangeQuery(None, lo),
+        TermRangeQuery(hi, None, include_lower=False),
+        TermInSetQuery((hot, mid, ABSENT, "aaaa-absent")),
+    ]
+
+
+def _all_rows(df):
+    return sorted(_rows(df))
+
+
+def test_multi_term_local_route_matches_join_path(spark, built_index):
+    """A small bare multi-term query runs as the OR of its dictionary
+    expansion on the driver; on the bound-0 searcher it takes the
+    expansion join. Rows, every match (``_scored_all``) and count()
+    agree. Over max_clause_count the query falls back to the join path
+    rather than raising."""
+    loc, spk = _pair(spark, built_index)
+    vocab = _vocab(loc)
+    for q in _multi_term_shapes(vocab):
+        assert not _is_local(spk.search(q, 10)), q
+        for k in (3, 1000):
+            hits = _assert_same(loc, spk, q, k)
+        assert hits, q
+        every = loc._scored_all(q)
+        assert _is_local(every), q
+        assert _all_rows(every) == _all_rows(spk._scored_all(q)), q
+        assert loc.count(q) == len(hits), q
+    loc.max_clause_count = 8
+    for q in (PrefixQuery(""), PrefixQuery(vocab[0][:1])):
+        assert len(loc._dict_terms(q, 9)) > 8
+        got = loc.search(q, 10)
+        assert not _is_local(got), q
+        assert _rows(got) == _rows(spk.search(q, 10)), q
+
+
+@pytest.mark.parametrize("include_soft", [False, True])
+def test_multi_term_local_route_with_deletes(spark, deleted_index,
+                                             updated_index, include_soft):
+    """Tombstoned docs stay out of the local route's multi-term hits as
+    they do out of the join path's. A staged segment is already counted
+    in term_dict but not in the committed postings the join path takes
+    df from, so there bare multi-term queries keep the join path; the
+    staged terms match nothing on either route."""
+    loc, spk = _pair(spark, deleted_index,
+                     include_soft_deletes=include_soft)
+    dead = set(loc._tombstones().tolist())
+    assert dead and not loc._dict_ahead()
+    vocab = _vocab(loc)
+    for q in _multi_term_shapes(vocab) + [PrefixQuery("qqupd")]:
+        hits = _assert_same(loc, spk, q, 1000)
+        assert hits and not {d for d, _ in hits} & dead, q
+    assert _assert_same(loc, spk, PrefixQuery("qqstag"), 1000) == []
+
+    loc, spk = _pair(spark, updated_index,
+                     include_soft_deletes=include_soft)
+    assert loc._dict_ahead()
+    for q in _multi_term_shapes(vocab)[:4] + [PrefixQuery("qqstag")]:
+        got = loc.search(q, 1000)
+        assert not _is_local(got), q
+        assert _rows(got) == _rows(spk.search(q, 1000)), q
+    assert _rows(loc.search(PrefixQuery("qqstag"), 1000)) == []

@@ -176,10 +176,30 @@ def test_fuzzy_expansion(searcher, common_terms):
 
 # ------------------------------------------------ join-based expansion path
 
+@pytest.fixture(scope="module")
+def spark_route(spark, built_index):
+    """A searcher whose small queries take the Spark route too: bare
+    multi-term queries run the expansion join, whatever their size."""
+    s = IndexSearcher(spark, built_index)
+    s.LOCAL_POSTINGS_MAX = 0
+    return s
+
+
 def test_join_expansion_equals_boolean_rewrite(searcher, common_terms):
-    """search() routes bare multi-term queries through the postings-join
-    path; it must be result-identical (ids AND float32 scores) to the
-    SHOULD-of-TermQueries rewrite executed via _expand_multi_term."""
+    """search() runs small bare Prefix/TermRange/TermInSet queries as
+    their dictionary expansion on the driver and the rest through the
+    postings-join path; both must be result-identical (ids AND float32
+    scores) to the SHOULD-of-TermQueries rewrite executed via
+    _expand_multi_term."""
+    _check_join_expansion(searcher, common_terms)
+
+
+def test_join_expansion_equals_boolean_rewrite_spark_route(spark_route,
+                                                           common_terms):
+    _check_join_expansion(spark_route, common_terms)
+
+
+def _check_join_expansion(searcher, common_terms):
     from lucene_spark.query.ast import (
         PrefixQuery, TermInSetQuery, TermRangeQuery, WildcardQuery,
         rewrite_fixpoint,
@@ -212,6 +232,14 @@ def test_join_expansion_equals_boolean_rewrite(searcher, common_terms):
 def test_too_many_clauses_guard(searcher):
     """A >cap expansion through the clause-materializing rewrite raises the
     TooManyClauses analog; the join path stays unbounded."""
+    _check_too_many_clauses(searcher)
+
+
+def test_too_many_clauses_guard_spark_route(spark_route):
+    _check_too_many_clauses(spark_route)
+
+
+def _check_too_many_clauses(searcher):
     from lucene_spark.query.ast import PrefixQuery
     from lucene_spark.query.search import TooManyClauses
 
@@ -230,6 +258,18 @@ def test_join_expansion_empty_match(searcher):
     from lucene_spark.query.ast import PrefixQuery
 
     assert searcher.search(PrefixQuery("zzzz-not-a-prefix"), 5).count() == 0
+
+
+def test_join_expansion_empty_match_spark_route(spark_route):
+    """An empty expansion holds no postings, so even the bound-0 searcher
+    answers it on the driver; the join path itself is run directly."""
+    from lucene_spark.query.ast import PrefixQuery
+
+    q = PrefixQuery("zzzz-not-a-prefix")
+    assert spark_route.search(q, 5).count() == 0
+    join = spark_route._scored_expansion_join(
+        *spark_route._as_multi_term_cond(q))
+    assert spark_route._live(join).count() == 0
 
 
 # -------------------------------------------------- boolean block-max pruning
@@ -412,8 +452,9 @@ def test_predicate_pushdown_reaches_parquet(spark, built_index, searcher,
                                             common_terms):
     """Plans must push term predicates into the parquet scan (PushedFilters)
     — the 100TB property that a query reads row groups, not the table.
-    Term and flat-Boolean plans are checked on the Spark route (instance
-    bound 0); below the bound those queries never reach Spark."""
+    Term, flat-Boolean and bare prefix plans are checked on the Spark
+    route (instance bound 0); below the bound those queries never reach
+    Spark."""
     import re
 
     from lucene_spark.query.ast import PrefixQuery
@@ -427,7 +468,7 @@ def test_predicate_pushdown_reaches_parquet(spark, built_index, searcher,
     t = common_terms[0][0]
     assert f"EqualTo(term,{t})" in pushed(spark_route.search(TermQuery(t), 3))
     assert "StringStartsWith(term," in pushed(
-        searcher.search(PrefixQuery(t[:2]), 3)
+        spark_route.search(PrefixQuery(t[:2]), 3)
     )
     t2 = common_terms[1][0]
     q = BooleanQuery(must=[TermQuery(t), TermQuery(t2)])

@@ -135,3 +135,37 @@ def test_polish_chain_end_to_end(spark, tmp_path):
     stats = s.term_stats(["ć", "kot", "dom"])
     assert stats["ć"][0] == 3
     assert stats["kot"][0] == 1 and stats["dom"][0] == 1
+
+
+def test_dictionary_builders_follow_ref_dir(monkeypatch, tmp_path):
+    """The builders ``kuromoji.ensure_ja_dict_dir`` and
+    ``nori.ensure_ko_dict_dir`` load read the Lucene tree under
+    ``$LUCENE_SPARK_REF_DIR``, the tree ``available()`` checks. Only
+    their module constants are read: nothing is compiled or built."""
+    import importlib
+
+    import lucene_spark.functions.stempel as st
+
+    mods = [importlib.import_module(f"tools.{name}") for name in
+            ("kuromoji_parity", "nori_parity", "build_ref_core")]
+    paths = ("REF", "JA_RES", "KO_RES", "UDICT", "REF_CORE", "REF_HUNSPELL",
+             "REF_WIKIPEDIA", "REF_MISC_INDEX", "REF_VHL", "REF_FSQ",
+             "REF_HL")
+
+    def lucene_paths():
+        return [getattr(m, p) for m in mods for p in paths if hasattr(m, p)]
+
+    monkeypatch.setenv("LUCENE_SPARK_REF_DIR", str(tmp_path))
+    try:
+        mods = [importlib.reload(m) for m in mods]
+        kp, nori_p, brc = mods
+        assert kp.REF == nori_p.REF == str(tmp_path / "lucene" / "analysis")
+        assert brc.REF_CORE == f"{tmp_path}/lucene/core/src/java"
+        got = lucene_paths()
+        assert len(got) == 13
+        assert all(p.startswith(f"{tmp_path}/lucene") for p in got), got
+    finally:
+        monkeypatch.delenv("LUCENE_SPARK_REF_DIR")
+        mods = [importlib.reload(m) for m in mods]
+    assert all(p.startswith(f"{st._REF_DEFAULT}/lucene")
+               for p in lucene_paths())

@@ -3,10 +3,10 @@
 ``IndexSearcher.term_stats`` reads ``term_dict/`` with pyarrow on the
 driver instead of running a Spark job. It must return exactly what a Spark
 read of the same directory returns, also right after a commit has swapped
-that directory. The job pins fail as soon as a query path gains a job:
-queries small enough for the driver-local route run none, and the Spark
-route (forced with an instance-level ``LOCAL_POSTINGS_MAX = 0``) keeps its
-own pins."""
+that directory. The job pins fail as soon as a query, build or merge path
+gains a job: queries small enough for the driver-local route run none, and
+the Spark route (forced with an instance-level ``LOCAL_POSTINGS_MAX = 0``)
+keeps its own pins."""
 
 from __future__ import annotations
 
@@ -15,10 +15,12 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from lucene_spark.index.build import IndexConfig, build_index
+from lucene_spark.index.build import (
+    IndexConfig, build_index, build_index_files,
+)
 from lucene_spark.index.merge import merge_index, read_term_dict
 from lucene_spark.index.update import update_docs
-from lucene_spark.query.ast import BooleanQuery, TermQuery
+from lucene_spark.query.ast import BooleanQuery, PrefixQuery, TermQuery
 from lucene_spark.query.search import IndexSearcher
 from lucene_spark.sources.transcripts import generate_pandas
 
@@ -153,3 +155,50 @@ def test_empty_results_run_no_job(spark, built_index):
         assert _jobs_of(spark, hits.collect) == 0
         assert hits.collect() == []
         assert hits.schema.simpleString() == "struct<doc_id:bigint,score:float>"
+
+
+def test_small_multi_term_queries_run_no_job(spark, built_index, pin_terms):
+    """Below LOCAL_POSTINGS_MAX a bare prefix query expands from the term
+    dictionary and runs on the driver: zero Spark jobs for search(),
+    count() and a search_many batch holding it."""
+    s = IndexSearcher(spark, built_index)
+    q = PrefixQuery(pin_terms[-1][:3])
+    assert _jobs_of(spark, lambda: s.search(q, 10).collect()) == 0
+    n = []
+    assert _jobs_of(spark, lambda: n.append(s.count(q))) == 0
+    assert n[0] > 0
+    batch = {"prefix": q, "term": TermQuery(pin_terms[0])}
+    assert _jobs_of(spark, lambda: s.search_many(batch, 10).collect()) == 0
+
+
+def test_bare_prefix_join_path_job_count(spark, built_index, pin_terms):
+    """Above the bound a bare prefix keeps the expansion join's plan."""
+    s = _spark_route(spark, built_index)
+    q = PrefixQuery(pin_terms[-1][:3])
+    assert _jobs_of(spark, lambda: s.search(q, 10).collect()) == 5
+
+
+@pytest.mark.parametrize("positions,build_jobs,merge_jobs", [
+    (False, 2, 7), (True, 2, 10)])
+def test_build_and_merge_job_counts(spark, small_corpus, tmp_path_factory,
+                                    positions, build_jobs, merge_jobs):
+    """The file-aligned build and the merge of the test corpus, split into
+    four conv_id-ranged parquet files, each run a fixed number of jobs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = tmp_path_factory.mktemp("jobpin-build")
+    src = root / "corpus"
+    src.mkdir()
+    frame = small_corpus.sort_values(["conv_id", "turn_idx"])
+    convs = sorted(frame["conv_id"].unique())
+    n = len(convs)
+    for i in range(4):
+        part = frame[frame["conv_id"].isin(convs[i * n // 4:(i + 1) * n // 4])]
+        pq.write_table(pa.Table.from_pandas(part, preserve_index=False),
+                       str(src / f"part-{i}.parquet"))
+    idx = str(root / "idx")
+    cfg = IndexConfig(term_buckets=8, hot_term_df=64, positions=positions)
+    assert _jobs_of(spark, lambda: build_index_files(
+        spark, str(src), idx, cfg)) == build_jobs
+    assert _jobs_of(spark, lambda: merge_index(spark, idx)) == merge_jobs

@@ -27,23 +27,25 @@ import shutil
 import subprocess
 import sys
 
-REF_CORE = "/root/reference/lucene/core/src/java"
-REF_HUNSPELL = ("/root/reference/lucene/analysis/common/src/java/org/"
-                "apache/lucene/analysis/hunspell")
-REF_WIKIPEDIA = ("/root/reference/lucene/analysis/common/src/java/org/"
-                 "apache/lucene/analysis/wikipedia")
-REF_MISC_INDEX = "/root/reference/lucene/misc/src/java/org/apache/lucene/misc/index"
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from lucene_spark.functions.stempel import ref_dir  # noqa: E402
+
+#: the Lucene source tree: $LUCENE_SPARK_REF_DIR (``stempel.ref_dir``)
+REF = os.path.join(ref_dir(), "lucene")
+REF_CORE = f"{REF}/core/src/java"
+REF_HUNSPELL = f"{REF}/analysis/common/src/java/org/apache/lucene/analysis/hunspell"
+REF_WIKIPEDIA = f"{REF}/analysis/common/src/java/org/apache/lucene/analysis/wikipedia"
+REF_MISC_INDEX = f"{REF}/misc/src/java/org/apache/lucene/misc/index"
 # only the BP reordering classes (the rest of misc/index pulls module deps)
 MISC_FILES = ("AbstractBPReorderer.java", "IndexReorderer.java",
               "BPIndexReorderer.java")
-REF_VHL = ("/root/reference/lucene/highlighter/src/java/org/apache/"
-           "lucene/search/vectorhighlight")
+REF_VHL = f"{REF}/highlighter/src/java/org/apache/lucene/search/vectorhighlight"
 # FieldQuery's single queries-module dependency (core-only imports itself)
-REF_FSQ = ("/root/reference/lucene/queries/src/java/org/apache/lucene/"
+REF_FSQ = (f"{REF}/queries/src/java/org/apache/lucene/"
            "queries/function/FunctionScoreQuery.java")
 # vectorhighlight's only highlight-package deps
-REF_HL = ("/root/reference/lucene/highlighter/src/java/org/apache/lucene/"
-          "search/highlight")
+REF_HL = f"{REF}/highlighter/src/java/org/apache/lucene/search/highlight"
 HL_FILES = ("Encoder.java", "DefaultEncoder.java")
 SRC = "/tmp/lucsrc_auto"
 OUT = "/tmp/lucore"

@@ -35,13 +35,15 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lucene_spark.functions.stempel import ref_dir  # noqa: E402
+
 LUCORE = "/tmp/lucore"
 ROOT = "/tmp/kuromojiparity"
 SRC = os.path.join(ROOT, "src")
 OUT = os.path.join(ROOT, "classes")
 MECAB = os.path.join(ROOT, "mecab")
 DICT_OUT = os.path.join(ROOT, "dict")
-REF = "/root/reference/lucene/analysis"
+REF = os.path.join(ref_dir(), "lucene/analysis")
 JA_RES = f"{REF}/kuromoji/src/resources"
 REAL_CHARDEF = (f"{JA_RES}/org/apache/lucene/analysis/ja/dict/"
                 "CharacterDefinition.dat")
@@ -332,8 +334,7 @@ def _unb64(s: str) -> str:
     return base64.b64decode(s).decode("utf-16-be", "surrogatepass")
 
 
-UDICT = ("/root/reference/lucene/analysis/kuromoji/src/test/org/apache/"
-         "lucene/analysis/ja/userdict.txt")
+UDICT = f"{REF}/kuromoji/src/test/org/apache/lucene/analysis/ja/userdict.txt"
 
 
 def py_stream(dicts, text, mode, discard_punct, user_dict=None):

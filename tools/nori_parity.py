@@ -25,13 +25,15 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from lucene_spark.functions.stempel import ref_dir  # noqa: E402
+
 LUCORE = "/tmp/lucore"
 ROOT = "/tmp/noriparity"
 SRC = os.path.join(ROOT, "src")
 OUT = os.path.join(ROOT, "classes")
 MECAB = os.path.join(ROOT, "mecab")
 DICT_OUT = os.path.join(ROOT, "dict")
-REF = "/root/reference/lucene/analysis"
+REF = os.path.join(ref_dir(), "lucene/analysis")
 KO_RES = f"{REF}/nori/src/resources"
 REAL_CHARDEF = (f"{KO_RES}/org/apache/lucene/analysis/ko/dict/"
                 "CharacterDefinition.dat")
