@@ -25,13 +25,14 @@ A from-scratch numpy implementation of the reference postings block layout
 
 Encoding is array-at-a-time numpy, one term (``encode_postings``) or many
 terms (``encode_postings_batch``) per call. Decoding comes in two forms:
-``decode_block`` decodes one block, for the query paths, which read a few
-dozen blocks per query, and for ``check_index``, the independent scalar
-oracle. ``decode_blocks_batch`` decodes many blocks in one numpy pass, for
-the merge's cold-term re-gather, which reads tens of thousands of small
-tail blocks; its VInt-tail structure walk loops over posting ordinals
-(< 256), not over blocks. Round-trip identity and batch/scalar decode
-equality are property-tested in tests/test_codec.py, mirroring
+``decode_block`` decodes one block, for ``check_index``, the independent
+scalar oracle, and for the block-rewriting index paths (BP reordering,
+expunge). ``decode_blocks_batch`` decodes many blocks in one numpy pass,
+for the query paths (one call per Arrow batch) and the merge's cold-term
+re-gather, which reads tens of thousands of small tail blocks; its
+VInt-tail structure walk loops over posting ordinals (< 256), not over
+blocks. Round-trip identity and batch/scalar decode equality are
+property-tested in tests/test_codec.py, mirroring
 ``BasePostingsFormatTestCase`` randomized round-trips.
 """
 

@@ -148,7 +148,7 @@ class OracleIndex:
             candidates -= docs
 
         # combine with the reference's exact float boundaries (scorer tree,
-        # mirrored by the engine's _combine_req_opt):
+        # mirrored by the engine's local.combine_clauses):
         #   required-only / optional-only: (float) double-sum
         #   req + opt, msm == 0: ReqOptSumScorer float32 addition
         #   req + opt, msm > 0: WAND(should) float joins the conjunction's

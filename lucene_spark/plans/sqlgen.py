@@ -760,7 +760,7 @@ def topk_sql(
         msm_cond = f"should_n >= {msm}"
     else:
         msm_cond = "TRUE"
-    # final combination mirrors the engine's _combine_req_opt (the scorer
+    # final combination mirrors the engine's local.combine_clauses (the scorer
     # tree's float boundaries: ConjunctionScorer / DisjunctionSumScorer /
     # ReqOptSumScorer.java:242-258 / WAND-under-conjunction)
     n_should = sum(1 for c in clauses if c[1] == "should")

@@ -48,28 +48,16 @@ def _decode_freqs(searcher, terms: list[str]) -> DataFrame:
     )
 
     def decode(batches):
-        from lucene_spark.functions.codec import decode_block
+        from lucene_spark.functions.codec import decode_blocks_batch
 
         for pdf in batches:
-            out_t, out_d, out_f = [], [], []
-            for term, nd, fd, data in zip(
-                pdf["term"].to_numpy(object),
-                pdf["num_docs"].to_numpy(np.int64),
-                pdf["first_doc"].to_numpy(np.int64),
-                pdf["data"].to_numpy(object),
-            ):
-                d, f, _ = decode_block(data, int(nd), int(fd))
-                out_t.append(np.full(d.size, term, dtype=object))
-                out_d.append(d)
-                out_f.append(f)
-            if out_d:
-                yield pd.DataFrame(
-                    {
-                        "term": np.concatenate(out_t),
-                        "doc_id": np.concatenate(out_d),
-                        "freq": np.concatenate(out_f),
-                    }
-                )
+            if len(pdf):
+                nd = pdf["num_docs"].to_numpy(np.int64)
+                d, f, _ = decode_blocks_batch(pdf["data"], nd,
+                                              pdf["first_doc"])
+                yield pd.DataFrame({
+                    "term": np.repeat(pdf["term"].to_numpy(object), nd),
+                    "doc_id": d, "freq": f})
 
     return scan.mapInPandas(decode, schema="term string, doc_id long, freq long")
 

@@ -1,4 +1,5 @@
-"""Driver-local execution of small term and flat-Boolean queries.
+"""Driver-local execution of small term and flat-Boolean queries, and
+the Boolean combine kernel every route shares.
 
 A term or flat Boolean whose terms hold few postings (``term_dict``
 ``doc_freq`` summed, ``IndexSearcher.LOCAL_POSTINGS_MAX``) is cheaper to
@@ -14,10 +15,12 @@ quarter-million postings in numpy. This module holds that route's pieces:
   - ``clause_rows`` / ``combine_clauses``: score every clause, then
     combine the clauses per doc with the reference's scorer-tree float
     boundaries. ``clause_masks`` is the per-doc membership rule both the
-    combine and ``profile_counts`` apply. This kernel is the only copy of
-    the flat-Boolean combine rule: the Spark route runs it on executors
-    too, once per doc-hash partition (``IndexSearcher._by_doc``), and so
-    does ``search_colocated``'s per-doc-range leaf.
+    combine and ``profile_counts`` apply. This kernel is the engine's only
+    copy of the Boolean combine rule: the Spark route runs it on executors
+    too, once per doc-hash partition (``IndexSearcher._by_doc``) for every
+    Boolean level, nested ones included (a non-term child's rows carry its
+    clause id); ``search_colocated``'s per-doc-range leaf and ``explain``
+    run it as well.
   - ``top_k`` and ``hits_frame``: (score desc, doc_id asc) top-k and a
     DataFrame over a local Arrow table, whose ``collect()`` runs no job.
 
@@ -91,7 +94,7 @@ def decode_terms(terms, num_docs, first_docs, datas
 
 def kind_codes(clauses) -> np.ndarray:
     """Kind code (``KIND_CODES``) of each clause, indexed by clause id:
-    a flat Boolean's clause ids number its clauses 0..n-1 in order."""
+    a Boolean's clause ids number its children 0..n-1 in order."""
     return np.array([KIND_CODES[c.kind] for c in clauses], dtype=np.int8)
 
 
@@ -116,7 +119,7 @@ def clause_rows(postings: dict, clauses, sim
 
 def clause_masks(cids: np.ndarray, docs: np.ndarray, codes: np.ndarray,
                  msm: int):
-    """The flat-Boolean membership rule, per doc, over (clause_id, doc_id)
+    """The Boolean membership rule, per doc, over (clause_id, doc_id)
     rows; ``codes`` holds the clauses' kind codes (``kind_codes``).
 
     Returns (docs ascending, each row's doc ordinal, required, passed,
@@ -145,13 +148,19 @@ def clause_masks(cids: np.ndarray, docs: np.ndarray, codes: np.ndarray,
 def combine_clauses(cids: np.ndarray, docs: np.ndarray, scores: np.ndarray,
                     codes: np.ndarray, msm: int
                     ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-doc flat-Boolean combination in numpy: (clause_id, doc_id,
+    """Per-doc Boolean combination in numpy: (clause_id, doc_id,
     float32 clause score) rows in, the matching docs (ascending,
     ``clause_masks``) and their float32 scores out.
 
-    Scores follow ``_combine_req_opt``'s float boundaries: double sums per
-    side, cast to float32 where the reference's scorer tree casts; a query
-    with no scoring clause (filter and must_not only) scores 0.0f."""
+    Scores follow the reference's scorer-tree float boundaries: double sums
+    per side, cast to float32 where it casts. Required-only or
+    optional-only (``ConjunctionScorer.java:57-63``,
+    ``DisjunctionSumScorer.java:40-46``): the side's sum, cast. Required +
+    optional at msm 0 (``ReqOptSumScorer.java:242-258``): the float32
+    addition of the two cast sums. At msm > 0 the SHOULD group is a
+    required sub-scorer whose cast sum joins the MUST double sum
+    (``BooleanScorerSupplier.java:546-553``). A query with no scoring
+    clause (filter and must_not only) scores 0.0f."""
     uniq, inv, _, passed, excluded = clause_masks(cids, docs, codes, msm)
     kinds = codes[cids]
     n_must, n_should = int((codes == 0).sum()), int((codes == 1).sum())

@@ -16,14 +16,16 @@ Physical plan (the part that must survive 100 TB):
     pushes ``term_bucket IN (...) AND term IN (...)`` down to parquet
     (partition pruning + row-group min/max on the sorted term column), the
     Arrow UDF decodes blocks and scores all clauses of that term in one pass.
-  - flat-Boolean clause combination is one ``repartition(doc_id)`` plus a
-    per-partition numpy kernel (``local.combine_clauses``, the same one
-    the driver-local route runs) — no per-clause joins, no driver-side
-    iteration. Shuffle volume = matched postings only.
+  - every Boolean combines its clauses with one ``repartition(doc_id)``
+    per level plus a per-partition numpy kernel (``local.combine_clauses``,
+    the same one the driver-local route and ``explain`` run): the level's
+    term leaves come from its one scan, each other child's rows are tagged
+    with its clause id and unioned in — no per-clause joins, no
+    driver-side iteration. Shuffle volume = matched postings only.
   - exhaustive scoring + exact sort is rank-identical to the reference
     because every Lucene pruning mechanism (WAND, block-max, MAXSCORE) is
     score-safe (SURVEY.md §4); block-max pruning is a pure optimization here
-    (impact metadata is in the table, see prune_blocks).
+    (impact metadata is in the table, see ``search_pruned``).
   - below ``IndexSearcher.LOCAL_POSTINGS_MAX`` postings, term and flat
     Boolean queries skip Spark entirely: the same blocks are read, decoded,
     scored and combined on the driver (``query/local.py``), with identical
@@ -41,6 +43,7 @@ criterion meaningful.
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass
 
@@ -92,44 +95,6 @@ class TooManyClauses(RuntimeError):
 
 def _f32(col):
     return col.cast("float")
-
-
-def _combine_req_opt(n_must: int, n_should: int, msm: int, must_s, should_s):
-    """Combine required/optional double-sum accumulators with the reference's
-    exact float boundaries (scorer-tree semantics, NOT one flat double sum).
-    ``_nested_boolean`` only: flat Booleans combine in
-    ``local.combine_clauses``, which follows the same boundaries.
-
-      - required-only (ConjunctionScorer.java:57-63): (float) double-sum.
-      - optional-only (DisjunctionSumScorer.java:40-46 / WANDScorer): same.
-      - required + optional, msm == 0 (ReqOptSumScorer.java:242-258):
-        ``float score = req; score += opt;`` — a FLOAT32 addition of the two
-        float-cast sums. (double-add of two exact f32 values then f32-cast
-        is bit-identical to the f32 addition.)
-      - required + optional, msm > 0: the SHOULD group becomes a required
-        WAND sub-scorer — its float-cast sum joins the conjunction's DOUBLE
-        sum (BooleanScorerSupplier.java:546-553 -> ConjunctionScorer).
-    """
-    if n_should == 0:
-        if n_must == 0:
-            # pure filter/must_not query: no scoring clause at all — the
-            # reference's BooleanWeight emits constant 0.0f scores (filter
-            # clauses never contribute score). must_s is NULL here (sum
-            # over zero rows), which would surface as NaN.
-            return _f32(F.lit(0.0))
-        return _f32(must_s)
-    if n_must == 0:
-        # filters (if any) contribute no score; absent should-sum means the
-        # optional side simply didn't match -> 0
-        return _f32(F.coalesce(should_s, F.lit(0.0)))
-    if msm > 0:
-        return _f32(
-            must_s + _f32(F.coalesce(should_s, F.lit(0.0))).cast("double")
-        )
-    return _f32(
-        _f32(must_s).cast("double")
-        + _f32(F.coalesce(should_s, F.lit(0.0))).cast("double")
-    )
 
 
 _DYN_REPLAY_SCHEMA = (
@@ -220,7 +185,7 @@ def _replay_dynamic_segment(runs, pid, target, count, accu, vsum, vmin):
 class _Clause:
     clause_id: int
     kind: str  # must | should | filter | must_not
-    term: str
+    term: str | None  # None: a child that is not a term leaf
     weight: np.float32
 
 
@@ -596,7 +561,6 @@ class IndexSearcher:
             rows = self._local_rows({"": (q, np.float32(1.0))})
             if rows is not None:
                 return int(local.combine_clauses(*rows[""])[0].size)
-            return self._live(self._flat_boolean(q, np.float32(1.0))).count()
         scored = self._live(self._execute(q, np.float32(1.0)))
         return 0 if scored is None else scored.count()
 
@@ -1862,8 +1826,8 @@ class IndexSearcher:
                 ).select("doc_id", F.lit(1.0).cast("float").alias("score"))
             else:
                 qq = q if isinstance(q, BooleanQuery) else BooleanQuery(must=[q])
-                scored = self._flat_boolean(qq, np.float32(1.0),
-                                            doc_lo=lo, doc_hi=hi)
+                scored = self._boolean(qq, np.float32(1.0),
+                                       doc_lo=lo, doc_hi=hi)
             scored = self._live(scored)
             with_f = scored.join(
                 dm.filter((F.col("doc_id") >= lo) & (F.col("doc_id") <= hi))
@@ -1934,10 +1898,10 @@ class IndexSearcher:
         total plus per-clause components; ``explain(...)['value']`` must
         equal the score the search produced (asserted in tests)."""
         q = rewrite_fixpoint(self._expand_multi_term(rewrite_fixpoint(query)))
-        if not isinstance(q, (TermQuery, BooleanQuery)):
-            raise TypeError("explain supports flat term/boolean queries")
         if isinstance(q, TermQuery):
             q = BooleanQuery(must=[q])
+        if not (isinstance(q, BooleanQuery) and self._is_flat(q)):
+            raise TypeError("explain supports flat term/boolean queries")
         clauses = self._clauses_of(q, np.float32(1.0))
         norm_row = self.docmap().filter(F.col("doc_id") == doc_id).select(
             "norm_byte", "field_len").collect()
@@ -1961,21 +1925,17 @@ class IndexSearcher:
         ).select("term", "num_docs", "first_doc", "data")
 
         def decode_freq(batches):
-            from lucene_spark.functions.codec import decode_block
-
             for pdf in batches:
                 out_t, out_f = [], []
-                for term, ndd, fdd, data in zip(
-                    pdf["term"].to_numpy(object),
-                    pdf["num_docs"].to_numpy(np.int64),
-                    pdf["first_doc"].to_numpy(np.int64),
-                    pdf["data"].to_numpy(object),
-                ):
-                    d, f, _ = decode_block(data, int(ndd), int(fdd))
-                    hit = np.searchsorted(d, doc_id)
-                    if hit < d.size and d[hit] == doc_id:
+                for term, (d, f, _) in local.decode_terms(
+                        pdf["term"].to_numpy(object),
+                        pdf["num_docs"].to_numpy(np.int64),
+                        pdf["first_doc"].to_numpy(np.int64),
+                        pdf["data"].to_numpy(object)).items():
+                    hit = np.flatnonzero(d == doc_id)
+                    if hit.size:
                         out_t.append(term)
-                        out_f.append(int(f[hit]))
+                        out_f.append(int(f[hit[0]]))
                 if out_t:
                     yield pd.DataFrame({"term": out_t, "freq": out_f})
 
@@ -1984,16 +1944,14 @@ class IndexSearcher:
             for r in blocks.mapInPandas(
                 decode_freq, schema="term string, freq long").collect()
         }
-        details = []
-        acc = np.float64(0.0)
+        details, cids, scores = [], [], []
         for c in clauses:
             freq = freq_of.get(c.term, 0)
-            s = (
-                float(self.sim.score(np.array([freq]), np.array([nb]), c.weight)[0])
-                if freq else 0.0
-            )
-            if c.kind in ("must", "should") and freq:
-                acc += np.float64(np.float32(s))
+            s = (self.sim.score(np.array([freq]), np.array([nb]), c.weight)[0]
+                 if freq else np.float32(0.0))
+            if freq:
+                cids.append(c.clause_id)
+                scores.append(s)
             details.append({
                 "kind": c.kind, "term": c.term, "freq": freq,
                 # stats-based similarities carry an opaque TermWeight —
@@ -2005,20 +1963,17 @@ class IndexSearcher:
                                                    list)}),
                 "norm_byte": nb,
                 "field_len": int(norm_row[0]["field_len"]),
-                "score": s,
+                "score": float(s),
             })
-        matches = all(d["freq"] > 0 for d in details if d["kind"] in ("must", "filter"))
-        matches = matches and not any(
-            d["freq"] > 0 for d in details if d["kind"] == "must_not"
-        )
-        n_should = sum(1 for d in details if d["kind"] == "should" and d["freq"] > 0)
-        has_pos = any(d["kind"] in ("must", "filter") for d in details)
-        msm = q.min_should_match if isinstance(q, BooleanQuery) else 0
-        matches = matches and (n_should >= (msm if has_pos else max(msm, 1))
-                               or (has_pos and msm == 0))
+        # match and value from the one combine kernel search() runs
+        _, value = local.combine_clauses(
+            np.array(cids, dtype=np.int64),
+            np.full(len(cids), doc_id, dtype=np.int64),
+            np.array(scores, dtype=np.float32), local.kind_codes(clauses),
+            q.min_should_match)
         return {
-            "match": bool(matches),
-            "value": float(np.float32(acc)) if matches else 0.0,
+            "match": bool(value.size),
+            "value": float(value[0]) if value.size else 0.0,
             "details": details,
         }
 
@@ -2112,7 +2067,7 @@ class IndexSearcher:
             # be lost) — with live deletes take the exhaustive plan, which
             # anti-joins before its limit. expunge_deletes restores the
             # doc-at-a-time path.
-            scored = self._live(self._flat_boolean(q, np.float32(1.0)))
+            scored = self._live(self._boolean(q, np.float32(1.0)))
             return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         clauses = self._clauses_of(q, np.float32(1.0))
         if not any(c.kind in ("must", "should") for c in clauses):
@@ -3043,25 +2998,14 @@ class IndexSearcher:
         )
 
         def decode(batches):
-            from lucene_spark.functions.codec import decode_block
+            from lucene_spark.functions.codec import decode_blocks_batch
 
             for pdf in batches:
-                docs_out, freqs_out = [], []
-                for nd, fd, data in zip(
-                    pdf["num_docs"].to_numpy(np.int64),
-                    pdf["first_doc"].to_numpy(np.int64),
-                    pdf["data"].to_numpy(object),
-                ):
-                    docs, freqs, _ = decode_block(data, int(nd), int(fd))
-                    docs_out.append(docs)
-                    freqs_out.append(freqs)
-                if docs_out:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(docs_out),
-                            "freq": np.concatenate(freqs_out).astype(np.int32),
-                        }
-                    )
+                if len(pdf):
+                    docs, freqs, _ = decode_blocks_batch(
+                        pdf["data"], pdf["num_docs"], pdf["first_doc"])
+                    yield pd.DataFrame({"doc_id": docs,
+                                        "freq": freqs.astype(np.int32)})
 
         return scan.mapInPandas(decode, schema="doc_id long, freq int")
 
@@ -3239,27 +3183,24 @@ class IndexSearcher:
         boost_f = np.float32(boost)
 
         def decode_score(batches):
-            from lucene_spark.functions.codec import decode_block
+            from lucene_spark.functions.codec import decode_blocks_batch
 
             for pdf in batches:
-                out_d, out_s = [], []
-                for nd, fd, data, dfv in zip(
-                    pdf["num_docs"].to_numpy(np.int64),
-                    pdf["first_doc"].to_numpy(np.int64),
-                    pdf["data"].to_numpy(object),
-                    pdf["df"].to_numpy(np.int64),
-                ):
-                    d, f, nb = decode_block(data, int(nd), int(fd))
+                if not len(pdf):
+                    continue
+                nd = pdf["num_docs"].to_numpy(np.int64)
+                d, f, nb = decode_blocks_batch(pdf["data"], nd,
+                                               pdf["first_doc"])
+                dfs = np.repeat(pdf["df"].to_numpy(np.int64), nd)
+                scores = np.empty(d.size, dtype=np.float32)
+                for dfv in np.unique(dfs).tolist():
                     # per-term weight computed executor-side from the
                     # metadata df (exact float32 op order via the sim)
-                    w = np.float32(boost_f * sim.idf(int(dfv), n_docs))
-                    out_d.append(d)
-                    out_s.append(sim.score(f, nb, w))
-                if out_d:
-                    yield pd.DataFrame(
-                        {"doc_id": np.concatenate(out_d),
-                         "score": np.concatenate(out_s)}
-                    )
+                    sel = dfs == dfv
+                    scores[sel] = sim.score(
+                        f[sel], nb[sel],
+                        np.float32(boost_f * sim.idf(dfv, n_docs)))
+                yield pd.DataFrame({"doc_id": d, "score": scores})
 
         per_clause = scan.mapInPandas(decode_score, schema="doc_id long, score float")
         return per_clause.groupBy("doc_id").agg(
@@ -3508,8 +3449,7 @@ class IndexSearcher:
                 "doc_id", F.lit(float(boost)).cast("float").alias("score")
             )
         if isinstance(q, TermQuery):
-            df = self._flat_boolean(BooleanQuery(must=[q]), boost)
-            return df
+            return self._boolean(BooleanQuery(must=[q]), boost)
         if isinstance(q, (FieldRangeQuery, FieldEqualsQuery)):
             return self._field_filter(q, boost)
         if isinstance(q, PhraseQuery):
@@ -3532,9 +3472,7 @@ class IndexSearcher:
                 "doc_id", F.lit(float(boost)).cast("float").alias("score")
             )
         if isinstance(q, BooleanQuery):
-            if self._is_flat(q):
-                return self._flat_boolean(q, boost)
-            return self._nested_boolean(q, boost)
+            return self._boolean(q, boost)
         raise TypeError(f"cannot execute {type(q).__name__}")
 
     def _field_filter(self, q, boost: np.float32) -> DataFrame | None:
@@ -3572,8 +3510,9 @@ class IndexSearcher:
         as threshold θ (a lower bound of the final kth score).
         Pass 2: decode only blocks whose upper bound ≥ θ.
 
-        The bound is computed in float64 with a safety margin so float32
-        rounding can never push a real score above it."""
+        The bound is ``w * _impact_ub_unit()``: float64 with a relative
+        safety margin, so float32 rounding can never push a real score
+        above it."""
         if self.sim.name != "bm25":
             raise ValueError(
                 "block-max pruning derives impact upper bounds from the "
@@ -3589,20 +3528,7 @@ class IndexSearcher:
         ).select("block_id", "segment_id", "num_docs", "first_doc", "data",
                  "impact_freqs", "impact_norms")
 
-        inv_lit = F.array(*[F.lit(float(x)) for x in self.cache])
-        wd = float(w)
-        ub_pair = F.zip_with(
-            F.col("impact_freqs").cast("array<double>"),
-            F.transform(
-                F.col("impact_norms"),
-                lambda nb: F.element_at(inv_lit, (nb.bitwiseAND(F.lit(255))) + 1),
-            ).cast("array<double>"),
-            lambda f, i: F.lit(wd) - F.lit(wd) / (F.lit(1.0) + f * i),
-        )
-        ub = (
-            F.aggregate(ub_pair, F.lit(0.0), lambda a, x: F.greatest(a, x))
-            * F.lit(1.0 + 1e-5) + F.lit(1e-6)
-        ).alias("ub")
+        ub = (F.lit(float(w)) * self._impact_ub_unit()).alias("ub")
         with_ub = blocks.select("*", ub)
 
         probe = with_ub.orderBy(F.desc("ub")).limit(probe_blocks)
@@ -3735,7 +3661,7 @@ class IndexSearcher:
             if others and df_r * 16 <= self.doc_count and df_r * 4 <= min_other:
                 cand = self.term_postings(rare.term).select("doc_id")
                 keys = self._range_pruned_keys(others, cand)
-                scored = self._live(self._flat_boolean(
+                scored = self._live(self._boolean(
                     q, np.float32(1.0), block_keys=keys, keyed_terms=others
                 ))
                 return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -3782,13 +3708,13 @@ class IndexSearcher:
         key_lits = [f"{t}|{s}|{b}" for t, s, b in probe_keys]
         in_scoring = F.col("term").isin(sterms)
         probe_pred = (~in_scoring) | key_col.isin(key_lits)
-        probed = self._live(self._flat_boolean(q, np.float32(1.0),
-                                               block_pred=probe_pred))
+        probed = self._live(self._boolean(q, np.float32(1.0),
+                                          block_pred=probe_pred))
         top = (
             probed.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
         )
         if len(top) < k:
-            scored = self._live(self._flat_boolean(q, np.float32(1.0)))
+            scored = self._live(self._boolean(q, np.float32(1.0)))
             return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         theta = float(top[-1]["score"])
         # per-term survivor threshold on the weight-free bound: keep a block
@@ -3802,8 +3728,8 @@ class IndexSearcher:
             thr_entries += [F.lit(t), F.lit(float(thr))]
         thr_map = F.create_map(*thr_entries)
         surv_pred = (~in_scoring) | (F.col("ubu") >= thr_map[F.col("term")])
-        scored = self._live(self._flat_boolean(q, np.float32(1.0),
-                                               block_pred=surv_pred))
+        scored = self._live(self._boolean(q, np.float32(1.0),
+                                          block_pred=surv_pred))
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def _decode_score_blocks(self, blocks: DataFrame, w: np.float32) -> DataFrame:
@@ -4170,17 +4096,27 @@ class IndexSearcher:
         )
 
     @staticmethod
-    def _is_flat(q: BooleanQuery) -> bool:
-        def leaf(c: Query) -> bool:
-            return isinstance(c, TermQuery) or (
-                isinstance(c, BoostQuery) and isinstance(c.query, TermQuery)
-            )
-        return all(leaf(c) for c in q.must + q.should + q.filter + q.must_not)
+    def _children(q: BooleanQuery) -> list[Query]:
+        """A Boolean's children in clause-id order: must, should, filter,
+        must_not."""
+        return [*q.must, *q.should, *q.filter, *q.must_not]
 
     @staticmethod
-    def _flat_terms(q: BooleanQuery) -> list[str]:
-        return [c.query.term if isinstance(c, BoostQuery) else c.term
-                for c in q.must + q.should + q.filter + q.must_not]
+    def _leaf(c: Query) -> TermQuery | None:
+        """The TermQuery of a term leaf (a TermQuery, optionally in one
+        BoostQuery), else None."""
+        inner = c.query if isinstance(c, BoostQuery) else c
+        return inner if isinstance(inner, TermQuery) else None
+
+    @classmethod
+    def _is_flat(cls, q: BooleanQuery) -> bool:
+        return all(cls._leaf(c) is not None for c in cls._children(q))
+
+    @classmethod
+    def _flat_terms(cls, q: BooleanQuery) -> list[str]:
+        """The terms of ``q``'s term leaves."""
+        return [t.term for t in map(cls._leaf, cls._children(q))
+                if t is not None]
 
     @classmethod
     def _as_flat(cls, q: Query) -> tuple[BooleanQuery, np.float32] | None:
@@ -4241,21 +4177,25 @@ class IndexSearcher:
 
     def _clauses_of(self, q: BooleanQuery, boost: np.float32,
                     rows: dict | None = None) -> list[_Clause]:
-        """Weighted clauses of a flat Boolean. ``rows`` (optional) are the
-        query's ``_term_dict_rows``, when the caller has read them already."""
+        """One clause per child of ``q``, numbered in ``_children`` order:
+        term leaves weighted, any other child with term None and weight 0.
+        ``rows`` (optional) are the query's ``_term_dict_rows``, when the
+        caller has read them already."""
         stats = (self._term_dict_rows(self._flat_terms(q))
                  if rows is None else rows)
         clauses: list[_Clause] = []
-        cid = 0
         for kind, group in (
             ("must", q.must), ("should", q.should),
             ("filter", q.filter), ("must_not", q.must_not),
         ):
             for c in group:
-                if isinstance(c, BoostQuery):
-                    inner, b = c.query, np.float32(boost * np.float32(c.boost))
-                else:
-                    inner, b = c, boost
+                cid = len(clauses)
+                inner = self._leaf(c)
+                if inner is None:
+                    clauses.append(_Clause(cid, kind, None, np.float32(0.0)))
+                    continue
+                b = (np.float32(boost * np.float32(c.boost))
+                     if isinstance(c, BoostQuery) else boost)
                 term = inner.term
                 df_ttf = stats.get(term)
                 # BlendedTermQuery df override (fuzzy rewrite blending,
@@ -4272,7 +4212,6 @@ class IndexSearcher:
                     else np.float32(0.0)
                 )
                 clauses.append(_Clause(cid, kind, term, w))
-                cid += 1
         return clauses
 
     def _scan_and_score(self, clauses: list[_Clause], block_pred=None,
@@ -4337,15 +4276,41 @@ class IndexSearcher:
             out = out.filter(F.col("doc_id") >= doc_lo)
         return out
 
-    def _flat_boolean(self, q: BooleanQuery, boost: np.float32,
-                      block_pred=None, block_keys: DataFrame | None = None,
-                      keyed_terms: list[str] | None = None,
-                      doc_lo: int | None = None,
-                      doc_hi: int | None = None) -> DataFrame | None:
+    def _boolean(self, q: BooleanQuery, boost: np.float32,
+                 block_pred=None, block_keys: DataFrame | None = None,
+                 keyed_terms: list[str] | None = None,
+                 doc_lo: int | None = None,
+                 doc_hi: int | None = None) -> DataFrame | None:
+        """Every Boolean, one level at a time. The term leaves are weighted
+        by ``_clauses_of`` and scored by ONE ``_scan_and_score`` (which
+        alone takes the scan restrictions); every other child runs through
+        ``_execute`` — MUST/SHOULD at the level's boost, FILTER/MUST_NOT at
+        0 — tagged with its clause id. ``_combine_by_doc`` combines the
+        union per doc partition with ``local.combine_clauses``. A MUST or
+        FILTER child that executes to None makes the Boolean None; a SHOULD
+        or MUST_NOT one adds no rows but keeps its kind code, so fewer
+        matching SHOULD clauses than min_should_match match nothing
+        (``BooleanWeight.scorerSupplier``)."""
         clauses = self._clauses_of(q, boost)
-        matched = self._scan_and_score(clauses, block_pred, block_keys,
-                                       keyed_terms, doc_lo, doc_hi)
-        # single scoring clause: each doc appears exactly once in the scan,
+        leaves = [c for c in clauses if c.term is not None]
+        parts = []
+        if leaves:
+            parts.append(self._scan_and_score(leaves, block_pred, block_keys,
+                                              keyed_terms, doc_lo, doc_hi))
+        for c, child in zip(clauses, self._children(q)):
+            if c.term is not None:
+                continue
+            scoring = c.kind in ("must", "should")
+            d = self._execute(child, boost if scoring else np.float32(0.0))
+            if d is None and c.kind in ("must", "filter"):
+                return None
+            if d is not None:
+                parts.append(d.select(F.lit(c.clause_id).alias("clause_id"),
+                                      "doc_id", "score"))
+        if not parts:
+            return None
+        matched = functools.reduce(DataFrame.unionByName, parts)
+        # single scoring clause: each doc appears exactly once in its rows,
         # so clause combination is a no-op — skip the shuffle entirely
         # (TermQuery never needs a BooleanScorer; at 10^7+ matched docs the
         # avoided shuffle dominates query latency)
@@ -4399,65 +4364,3 @@ class IndexSearcher:
 
         return self._by_doc(matched, combine,
                             "query string, doc_id long, score float")
-
-    def _nested_boolean(self, q: BooleanQuery, boost: np.float32) -> DataFrame | None:
-        """General recursive combination (nested booleans): join-based
-        BS2 scorer-tree analog (BooleanScorerSupplier.java:95-174)."""
-        must_dfs = [self._execute(c, boost) for c in q.must]
-        if any(d is None for d in must_dfs):
-            return None
-        should_dfs = [self._execute(c, boost) for c in q.should]
-        should_dfs = [d for d in should_dfs if d is not None]
-        filter_dfs = [self._execute(c, np.float32(0.0)) for c in q.filter]
-        if q.filter and any(d is None for d in filter_dfs):
-            return None
-        not_dfs = [d for d in (self._execute(c, np.float32(0.0)) for c in q.must_not) if d is not None]
-        msm = q.min_should_match
-
-        base: DataFrame | None = None
-        if must_dfs:
-            base = must_dfs[0].select("doc_id", F.col("score").cast("double").alias("acc"))
-            for d in must_dfs[1:]:
-                base = base.join(d, "doc_id").select(
-                    "doc_id", (F.col("acc") + F.col("score").cast("double")).alias("acc")
-                )
-        for d in filter_dfs:
-            sel = d.select("doc_id")
-            base = sel.withColumn("acc", F.lit(0.0)) if base is None else base.join(sel, "doc_id", "left_semi")
-
-        should_agg = None
-        if should_dfs:
-            u = should_dfs[0].select("doc_id", "score")
-            for d in should_dfs[1:]:
-                u = u.unionAll(d.select("doc_id", "score"))
-            should_agg = u.groupBy("doc_id").agg(
-                F.sum(F.col("score").cast("double")).alias("s_acc"),
-                F.count("*").alias("s_n"),
-            )
-
-        # combination uses the same reference float boundaries as the flat
-        # path (see _combine_req_opt); `acc` carries the required DOUBLE sum,
-        # `s_acc` the optional DOUBLE sum
-        n_must_scoring = len(must_dfs)
-        if base is None:
-            if should_agg is None:
-                return None
-            res = should_agg.filter(F.col("s_n") >= max(msm, 1)).select(
-                "doc_id",
-                _combine_req_opt(0, 1, msm, F.lit(None), F.col("s_acc")).alias("score"),
-            )
-        elif should_agg is not None:
-            joined = base.join(should_agg, "doc_id", "left")
-            if msm > 0:
-                joined = joined.filter(F.coalesce(F.col("s_n"), F.lit(0)) >= msm)
-            res = joined.select(
-                "doc_id",
-                _combine_req_opt(
-                    max(n_must_scoring, 1), 1, msm, F.col("acc"), F.col("s_acc")
-                ).alias("score"),
-            )
-        else:
-            res = base.select("doc_id", _f32(F.col("acc")).alias("score"))
-        for d in not_dfs:
-            res = res.join(d.select("doc_id"), "doc_id", "left_anti")
-        return res.select("doc_id", "score")

@@ -70,6 +70,28 @@ def test_explain_recomputes_search_scores(searcher, term):
     assert searcher.explain(q, missing)["match"] is False
 
 
+@pytest.mark.parametrize("msm", [0, 1])
+def test_explain_value_equals_score_mixed_must_should(searcher, msm):
+    """explain() combines clause scores with search()'s kernel: the MUST
+    and SHOULD sides are cast separately (``ReqOptSumScorer``), so its
+    value equals the score on mixed shapes, not one double sum cast."""
+    c = [r["term"] for r in searcher.term_dict.orderBy(
+        F.desc("doc_freq"), F.asc("term")).limit(6).collect()]
+    for q in (
+        BooleanQuery(must=[TermQuery(c[0]), TermQuery(c[1])],
+                     should=[TermQuery(c[2])], min_should_match=msm),
+        BooleanQuery(must=[TermQuery(c[3])],
+                     should=[TermQuery(c[4]), TermQuery(c[5])],
+                     min_should_match=msm),
+    ):
+        top = searcher.search(q, 40).collect()
+        assert len(top) == 40
+        for r in top:
+            ex = searcher.explain(q, int(r["doc_id"]))
+            assert ex["match"], (q, r)
+            assert np.float32(ex["value"]) == np.float32(r["score"]), (q, r)
+
+
 def test_highlight(spark, searcher, small_corpus, term):
     from lucene_spark.operators.highlight import highlight_hits
 

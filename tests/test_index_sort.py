@@ -121,8 +121,8 @@ def test_block_range_restriction_pushed_to_scan(spark, sorted_index):
 
     s = _searcher(spark, sorted_index)
     term = s.term_dict.orderBy(F.desc("doc_freq")).first()["term"]
-    df = s._flat_boolean(BooleanQuery(must=[TermQuery(term)]),
-                         np.float32(1.0), doc_hi=100)
+    df = s._boolean(BooleanQuery(must=[TermQuery(term)]),
+                    np.float32(1.0), doc_hi=100)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "first_doc" in plan
     # read the scan's Filter node, not the PushedFilters summary — the

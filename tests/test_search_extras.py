@@ -351,6 +351,50 @@ def _check_match_counts(searcher, common_terms, oracle_index):
         assert len(oracle_index.search(q, 10**9)) == expect, q
 
 
+# ------------------------------------------------ nested Booleans
+
+def test_nested_msm_unmet_when_should_children_match_nothing(searcher,
+                                                             common_terms):
+    """Regression: SHOULD children that execute to no result (phrases over
+    an absent term) still count toward min_should_match — the reference's
+    BooleanWeight has no scorer when fewer SHOULD scorers exist than msm.
+    The join-based nested executor dropped them and returned the MUST
+    side's hits."""
+    _check_nested_msm_unmet(searcher, common_terms)
+
+
+def test_nested_msm_unmet_when_should_children_match_nothing_spark_route(
+        spark_route, common_terms):
+    _check_nested_msm_unmet(spark_route, common_terms)
+
+
+def _check_nested_msm_unmet(searcher, common_terms):
+    from lucene_spark.query.ast import PhraseQuery
+
+    c0, c1, c2 = (t for t, _ in common_terms[:3])
+    q = BooleanQuery(
+        must=[TermQuery(c0),
+              BooleanQuery(should=[TermQuery(c1), TermQuery(c2)])],
+        should=[PhraseQuery(("zz-absent-a", c1)),
+                PhraseQuery(("zz-absent-b", c2))],
+        min_should_match=1)
+    assert searcher.search(q, 10).collect() == []
+    assert searcher.count(q) == 0
+
+
+def test_nested_boolean_scans_postings_once_per_level(searcher, common_terms):
+    """A nested Boolean runs one postings scan per Boolean level, its term
+    leaves scored together, not one scan per term leaf."""
+    import re
+
+    t = [TermQuery(term) for term, _ in common_terms[:4]]
+    q = BooleanQuery(must=t[:2], should=[BooleanQuery(must=t[2:])])
+    plan = searcher.search(q, 10)._jdf.queryExecution().executedPlan()
+    scans = re.findall(r"FileScan parquet .*?Location: [^\n]*/postings\]",
+                       plan.toString())
+    assert len(scans) == 2, plan.toString()
+
+
 def test_custom_similarity_k1_b(spark, built_index, searcher, common_terms):
     """k1/b change the norm cache exactly like BM25Similarity(k1, b);
     scores must differ from the defaults and reproduce the formula."""
