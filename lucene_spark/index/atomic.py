@@ -1,4 +1,5 @@
-"""Crash-safe directory swap shared by expunge / append / layout builds.
+"""Crash-safe directory swap shared by expunge / BP / doc-values updates /
+rollback / layout builds.
 
 The swap must survive a crash at ANY point and a replay afterwards:
   - a leftover ``<final>.old`` from a crashed prior swap is cleared first
@@ -40,3 +41,18 @@ def recover_dir(final: str) -> None:
     old = final + ".old"
     if not os.path.exists(final) and os.path.exists(old):
         os.rename(old, final)
+
+
+def finish_swaps(spark: SparkSession, swaps) -> None:
+    """Swap each staged ``(tmp, final)`` pair in. A pair whose ``tmp`` is
+    gone was swapped by an earlier, crashed attempt: clear its leftover
+    ``final.old`` (or restore it, see ``recover_dir``) and refresh the
+    listing."""
+    for tmp, final in swaps:
+        if os.path.exists(tmp):
+            swap_dir(spark, tmp, final)
+            continue
+        if os.path.exists(final) and os.path.exists(final + ".old"):
+            shutil.rmtree(final + ".old")
+        recover_dir(final)
+        spark.catalog.refreshByPath(final)

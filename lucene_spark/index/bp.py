@@ -294,6 +294,7 @@ def reorder_index(
     from pyspark.sql import functions as F
 
     from lucene_spark.index.build import load_manifest
+    from lucene_spark.index.merge import max_segment_id, write_term_stats
 
     manifest = load_manifest(index_dir)
     if manifest is None or not manifest.get("merged"):
@@ -596,23 +597,14 @@ def reorder_index(
         )
         swaps.append((tmp, p))
 
-    # ---- term_dict from the new block metadata (block counts changed)
+    # ---- term_dict from the new block metadata (block counts changed) of
+    # the committed segments
     td_path = os.path.join(index_dir, "term_dict")
-    new_post = spark.read.parquet(post_path + ".bp")
-    tmp = td_path + ".bp"
-    (
-        new_post.groupBy("term")
-        .agg(
-            F.sum("num_docs").cast("long").alias("doc_freq"),
-            F.sum("ttf").cast("long").alias("total_term_freq"),
-            F.count("*").cast("long").alias("num_blocks"),
-        )
-        .repartitionByRange(
-            max(spark.sparkContext.defaultParallelism // 4, 1), "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(tmp)
-    )
-    swaps.append((tmp, td_path))
+    write_term_stats(
+        spark, spark.read.parquet(post_path + ".bp").filter(
+            F.col("segment_id") <= max_segment_id(manifest)),
+        td_path + ".bp")
+    swaps.append((td_path + ".bp", td_path))
 
     import json as _json
 
@@ -633,19 +625,12 @@ def _finish_reorder(spark, index_dir: str, manifest: dict,
     the doc-range layout dropped (stale on both axes)."""
     import shutil
 
-    from lucene_spark.index.atomic import swap_dir
+    from lucene_spark.index.atomic import finish_swaps
     from lucene_spark.index.build import write_manifest
+    from lucene_spark.index.merge import fold_term_deltas
 
-    for t, final in swaps:
-        if os.path.exists(t):
-            swap_dir(spark, t, final)
-        else:
-            old = final + ".old"
-            if os.path.exists(old) and os.path.exists(final):
-                shutil.rmtree(old)
-            elif os.path.exists(old) and not os.path.exists(final):
-                os.rename(old, final)
-            spark.catalog.refreshByPath(final)
+    finish_swaps(spark, swaps)
+    fold_term_deltas(index_dir, manifest)
 
     layout_dir = os.path.join(index_dir, "postings_by_doc")
     if manifest.pop("doc_layout", None) is not None and os.path.exists(

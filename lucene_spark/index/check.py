@@ -6,7 +6,8 @@ Validates, as distributed jobs over the index tables:
   - postings (local + merged): within each (term, segment) block sequence,
     first_doc <= last_doc, block ranges strictly increasing, num_docs ==
     decoded count, doc deltas > 0 (sorted, no dup), freqs >= 1.
-  - stats: term_dict doc_freq/total_term_freq == recomputed sums from blocks;
+  - stats: committed term statistics (``merge.read_term_dict``)
+    doc_freq/total_term_freq == sums recomputed from committed blocks;
     manifest per-segment num_docs/sum_field_len == docmap aggregates.
 
 Raises AssertionError with a description on the first violated invariant.
@@ -23,6 +24,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from lucene_spark.index.build import collection_stats, load_manifest
+from lucene_spark.index.build import read_postings_local
+from lucene_spark.index.merge import max_segment_id, read_term_dict
 
 
 def check_index(spark: SparkSession, index_dir: str) -> dict:
@@ -132,20 +135,21 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
         assert dup == 0, f"{sub}: duplicate block ids"
         report[f"{sub}_blocks"] = posts.count()
 
-    # term_dict consistency vs local blocks
-    td_path = os.path.join(index_dir, "term_dict")
-    if os.path.exists(td_path):
-        td = spark.read.parquet(td_path)
-        local = spark.read.parquet(os.path.join(index_dir, "postings_local"))
+    # committed term statistics vs the committed segments' local blocks
+    if os.path.exists(os.path.join(index_dir, "term_dict")):
+        td = read_term_dict(spark, index_dir, manifest)
+        local = read_postings_local(spark, index_dir).filter(
+            F.col("segment_id") <= max_segment_id(manifest))
         recomputed = local.groupBy("term").agg(
             F.sum("num_docs").cast("long").alias("df2"),
             F.sum("ttf").cast("long").alias("ttf2"),
         )
+        # null-safe: a term on one side only is a mismatch too
         bad = (
             td.join(recomputed, "term", "full")
             .filter(
-                (F.col("doc_freq") != F.col("df2"))
-                | (F.col("total_term_freq") != F.col("ttf2"))
+                ~F.col("doc_freq").eqNullSafe(F.col("df2"))
+                | ~F.col("total_term_freq").eqNullSafe(F.col("ttf2"))
             )
             .count()
         )

@@ -32,6 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucene_spark.index.build import load_manifest, write_manifest
+from lucene_spark.index.merge import (
+    fold_term_deltas, max_segment_id, write_term_stats,
+)
 
 DELETES_DIR = "deletes"
 STAGING_DIR = "deletes_expunge_staging"
@@ -318,7 +321,8 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
                   (remap monotonicity preserves block-range disjointness;
                   emptied blocks drop out)
       positions   filter + remap (plain columns, no decode)
-      term_dict   recomputed from the new block metadata
+      term_dict   recomputed from the new block metadata (folding in the
+                  appended segments' term-statistics deltas)
       manifest    per-segment doc counts/lengths refreshed, has_deletes
                   cleared, generation bumped — written atomically LAST
 
@@ -640,23 +644,13 @@ def expunge_deletes(spark: SparkSession, index_dir: str,
         )
         swaps.append((tmp, pos_path))
 
-    # ---- term_dict from the new block metadata
+    # ---- term_dict from the new block metadata of the committed segments
     td_path = os.path.join(index_dir, "term_dict")
-    new_post = spark.read.parquet(post_path + ".expunge")
-    tmp = td_path + ".expunge"
-    (
-        new_post.groupBy("term")
-        .agg(
-            F.sum("num_docs").cast("long").alias("doc_freq"),
-            F.sum("ttf").cast("long").alias("total_term_freq"),
-            F.count("*").cast("long").alias("num_blocks"),
-        )
-        .repartitionByRange(
-            max(spark.sparkContext.defaultParallelism // 4, 1), "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(tmp)
-    )
-    swaps.append((tmp, td_path))
+    write_term_stats(
+        spark, spark.read.parquet(post_path + ".expunge").filter(
+            F.col("segment_id") <= max_segment_id(manifest)),
+        td_path + ".expunge")
+    swaps.append((td_path + ".expunge", td_path))
 
     # ---- retained soft deletes: remap into the post-purge docID space
     # executor-side (same closed form and staged ranges as everything
@@ -709,23 +703,10 @@ def _finish_expunge(spark: SparkSession, index_dir: str, manifest: dict,
     Idempotent: safe to re-enter after a crash at any point."""
     import shutil
 
-    from lucene_spark.index.atomic import swap_dir
+    from lucene_spark.index.atomic import finish_swaps
 
-    for t, final in swaps:
-        if os.path.exists(t):
-            swap_dir(spark, t, final)
-        else:
-            # already swapped by a prior attempt — clear a leftover .old
-            # from its crash window and refresh the listing cache
-            old = final + ".old"
-            if os.path.exists(old) and os.path.exists(final):
-                shutil.rmtree(old)
-            elif os.path.exists(old) and not os.path.exists(final):
-                # crashed between the two renames with tmp already gone is
-                # impossible (tmp->final precedes old removal); old alone
-                # means final was never moved — restore it
-                os.rename(old, final)
-            spark.catalog.refreshByPath(final)
+    finish_swaps(spark, swaps)
+    fold_term_deltas(index_dir, manifest)
 
     # ---- manifest: per-segment stats from the (now live) docmap
     dm_path = os.path.join(index_dir, "docmap")

@@ -30,6 +30,16 @@ shuffle; the re-gather (applyInPandas) unioned with the hot pass-through;
 the postings write. ``postings_local`` and ``term_dict`` are read with
 explicit schemas, so no schema-inference job runs. Positions, when indexed,
 add their own relayout jobs.
+
+This module owns the term-statistics layout, the reference's per-segment
+model: each segment has its own term dictionary and ``IndexSearcher`` sums
+``TermStatistics`` over the segments its reader sees
+(``IndexSearcher.java:1119-1149``). The base ``term_dict/`` folds in the
+segments up to the manifest's ``TERM_DICT_FOLD`` (merge, expunge and the
+BP reorder rewrite it); each later append writes only its own segment's
+statistics to ``term_dict_delta/segment=<sid>/``. Readers sum the base and
+the deltas up to their commit point, the filter postings and docmap take,
+so idf always matches the visible postings.
 """
 
 from __future__ import annotations
@@ -56,6 +66,12 @@ _TERM_DICT_SCHEMA = (
     "term string, doc_freq long, total_term_freq long, num_blocks long"
 )
 
+_STAT_COLS = ("doc_freq", "total_term_freq", "num_blocks")
+
+#: manifest key: the last segment the base term_dict folds in. A manifest
+#: without it predates the deltas: every delta on disk is newer.
+TERM_DICT_FOLD = "term_dict_max_segment"
+
 
 def merge_index(spark: SparkSession, index_dir: str) -> dict:
     """Produce ``term_dict/`` and query-facing ``postings/`` from
@@ -64,24 +80,13 @@ def merge_index(spark: SparkSession, index_dir: str) -> dict:
     if manifest is None:
         raise ValueError(f"no manifest at {index_dir}; build first")
     config = IndexConfig(**manifest["config"])
-    local = read_postings_local(spark, index_dir)
+    # committed segments only: a crashed append's replay rewrites its own
+    local = read_postings_local(spark, index_dir).filter(
+        F.col("segment_id") <= max_segment_id(manifest))
 
     # ---- 1. term_dict (map-side combine handles skew)
-    term_dict = (
-        local.groupBy("term")
-        .agg(
-            F.sum("num_docs").cast("long").alias("doc_freq"),
-            F.sum("ttf").cast("long").alias("total_term_freq"),
-            F.count("*").cast("long").alias("num_blocks"),
-        )
-    )
-    td_path = os.path.join(index_dir, "term_dict")
-    (
-        term_dict.repartitionByRange(max(spark.sparkContext.defaultParallelism // 4, 1), "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(td_path)
-    )
+    write_term_stats(spark, local, os.path.join(index_dir, "term_dict"))
+    fold_term_deltas(index_dir, manifest)
 
     # ---- 2. global postings
     # the hot-term list comes to the driver ONCE and tags rows as a literal
@@ -89,7 +94,7 @@ def merge_index(spark: SparkSession, index_dir: str) -> dict:
     # head). A broadcast join would run its broadcast once per side: the
     # optimizer plans the hot side as an inner join, so they share no exchange.
     hot_terms = [
-        r["term"] for r in read_term_dict(spark, index_dir)
+        r["term"] for r in read_term_dict(spark, index_dir, manifest)
         .filter(F.col("doc_freq") >= config.hot_term_df).select("term").collect()
     ]
     is_hot = F.col("term").isin(hot_terms)
@@ -196,9 +201,93 @@ def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(index_dir, "postings"))
 
 
-def read_term_dict(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.schema(_TERM_DICT_SCHEMA).parquet(
-        os.path.join(index_dir, "term_dict"))
+def max_segment_id(manifest: dict) -> int:
+    """The highest committed segment id: readers' commit point."""
+    return max(int(k) for k in manifest["completed"])
+
+
+def write_term_stats(spark: SparkSession, blocks: DataFrame, path: str,
+                     one_file: bool = False) -> None:
+    """Overwrite ``path`` with the (term, doc_freq, total_term_freq,
+    num_blocks) aggregate of the posting-block metadata ``blocks``, sorted
+    by term: range-partitioned into a quarter of the default parallelism's
+    files, or into one file with no range exchange."""
+    stats = blocks.groupBy("term").agg(
+        F.sum("num_docs").cast("long").alias("doc_freq"),
+        F.sum("ttf").cast("long").alias("total_term_freq"),
+        F.count("*").cast("long").alias("num_blocks"),
+    )
+    stats = stats.coalesce(1) if one_file else stats.repartitionByRange(
+        max(spark.sparkContext.defaultParallelism // 4, 1), "term")
+    stats.sortWithinPartitions("term").write.mode("overwrite").parquet(path)
+
+
+def term_delta_dir(index_dir: str, segment_id) -> str:
+    """Where an appended segment writes its own term statistics."""
+    return os.path.join(index_dir, "term_dict_delta", f"segment={segment_id}")
+
+
+def _deltas(index_dir: str) -> dict[int, str]:
+    import glob
+
+    return {int(p.rsplit("=", 1)[1]): p
+            for p in glob.glob(term_delta_dir(index_dir, "*"))}
+
+
+def fold_term_deltas(index_dir: str, manifest: dict) -> None:
+    """Record in ``manifest`` (the caller writes it) that the base just
+    written folds in every committed segment; delete the deltas it folded
+    in (a staged one past the commit point stays for its replay)."""
+    import shutil
+
+    fold = manifest[TERM_DICT_FOLD] = max_segment_id(manifest)
+    for sid, path in _deltas(index_dir).items():
+        if sid <= fold:
+            shutil.rmtree(path)
+
+
+def _term_dict_dirs(index_dir: str, manifest: dict) -> list[str]:
+    """The dirs a reader at ``manifest``'s commit point sums: the base,
+    then the deltas above its fold point, up to the commit point."""
+    top, fold = max_segment_id(manifest), manifest.get(TERM_DICT_FOLD, -1)
+    return [os.path.join(index_dir, "term_dict")] + [
+        p for sid, p in sorted(_deltas(index_dir).items())
+        if fold < sid <= top]
+
+
+def read_term_dict(spark: SparkSession, index_dir: str,
+                   manifest: dict | None = None) -> DataFrame:
+    """DF(term, doc_freq, total_term_freq, num_blocks): the term statistics
+    at ``manifest``'s commit point (default: the current one) with an
+    explicit schema, so no schema-inference job runs. The base as it is
+    when no delta is visible, else each term's sums over all of them."""
+    dirs = _term_dict_dirs(index_dir, manifest or load_manifest(index_dir))
+    df = spark.read.schema(_TERM_DICT_SCHEMA).parquet(*dirs)
+    return df if len(dirs) == 1 else df.groupBy("term").agg(
+        *[F.sum(c).cast("long").alias(c) for c in _STAT_COLS])
+
+
+def scan_term_dict(index_dir: str, manifest: dict, filter, columns=None):
+    """``read_term_dict``'s rows matching the pyarrow expression ``filter``,
+    read on the driver: record batches of ``columns`` (default all), each
+    term once. Without a visible delta the base's batches stream, else the
+    matching rows are read whole and summed. ``_``/``.``-prefixed files
+    are skipped, as Spark skips them."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    schema = pa.schema([("term", pa.string())]
+                       + [(c, pa.int64()) for c in _STAT_COLS])
+    columns = columns or schema.names
+    parts = [ds.dataset(d, schema=schema, format="parquet")
+             for d in _term_dict_dirs(index_dir, manifest)]
+    if len(parts) == 1:
+        yield from parts[0].scanner(columns=columns, filter=filter).to_batches()
+        return
+    t = ds.dataset(parts).to_table(columns=columns, filter=filter).group_by(
+        "term").aggregate([(c, "sum") for c in columns if c != "term"])
+    yield from pa.table({c: t[c if c == "term" else c + "_sum"]
+                         for c in columns}).to_batches()
 
 
 def term_bucket_col(buckets: int):

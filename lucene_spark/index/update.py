@@ -13,20 +13,20 @@ Spark-first mechanics (no reference code followed):
   - victims = docmap ⋈ distinct new-batch keys (committed segments only),
     one keyed join — never a driver-side key set;
   - the new segment stages through the streaming-append machinery
-    (``stage_batch_segment``): its published posting rows are INVISIBLE
-    to readers until commit because every searcher filters to its
-    manifest's max committed segment id;
+    (``stage_batch_segment``): its posting rows and its own term
+    statistics are INVISIBLE to readers until commit because every
+    searcher filters both to its manifest's max committed segment id;
   - the tombstones stage as a fresh delete GENERATION dir that no
     manifest references yet (``stage_delete_generation``);
   - ``commit_staged_segment(write=False)`` + the delete-generation keys
     land in one ``write_manifest`` — the atomic flip.
 
 Crash/replay: every stage is idempotent (segment ``_APPLIED_SEG``
-markers keyed by a batch fingerprint; the delete generation is a
-deterministic overwrite). A crash anywhere before the manifest write
-leaves readers on the old commit point; re-running ``update_docs`` with
-the same batch skips completed stages and finishes the commit —
-verified by the kill-between-stages pytest.
+markers keyed by a batch fingerprint; term statistics and the delete
+generation are deterministic overwrites). A crash anywhere before the
+manifest write leaves readers on the old commit point; re-running
+``update_docs`` with the same batch skips completed stages and finishes
+the commit — verified by the kill-between-stages pytest.
 """
 
 from __future__ import annotations
@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucene_spark.index.build import load_manifest, write_manifest
+from lucene_spark.index.merge import max_segment_id
 
 
 def update_docs(
@@ -68,9 +69,8 @@ def update_docs(
     # victims: live committed docs sharing a key with the batch. The
     # committed-segment filter keeps a previously-crashed staged segment's
     # docmap rows out of the victim set (they were never visible).
-    max_sid = max(int(k) for k in manifest["completed"])
     dm = spark.read.parquet(os.path.join(index_dir, "docmap")).filter(
-        F.col("segment") <= max_sid)
+        F.col("segment") <= max_segment_id(manifest))
     keys = new_batch.select(*key_cols).distinct()
     victims = dm.join(keys, on=list(key_cols)).select("doc_id")
 

@@ -22,8 +22,8 @@ A tiny from-scratch query algebra mirroring the reference's query model
 
 from __future__ import annotations
 
-import fnmatch
 import json
+import re
 from dataclasses import dataclass, field as dc_field
 
 
@@ -202,9 +202,32 @@ class PrefixQuery(Query):
 
 @dataclass(frozen=True)
 class WildcardQuery(Query):
-    pattern: str  # fnmatch-style * and ?
+    pattern: str  # Lucene's wildcard grammar, see wildcard_regex
     def __repr__(self) -> str:
         return f"Wildcard({self.pattern!r})"
+
+
+def wildcard_regex(pattern: str) -> tuple[str, str]:
+    """(regex, literal prefix) of a pattern in Lucene's wildcard grammar
+    (``WildcardQuery.toAutomaton``): ``*`` is any string, ``?`` one code
+    point, a backslash escapes the next character (a trailing one is
+    literal), all else is literal. The regex matches whole terms alike in
+    Java (``rlike`` searches) and Python ``re``: ``(?!.)`` ends the input
+    in both, where ``$`` also matches before a final newline."""
+    parts, prefix, wild, i = [], "", False, 0
+    while i < len(pattern):
+        c = pattern[i]
+        i += 1
+        if c == "\\" and i < len(pattern):
+            c = pattern[i]
+            i += 1
+        elif c in "*?":
+            parts.append(".*" if c == "*" else ".")
+            wild = True
+            continue
+        parts.append(re.escape(c))
+        prefix += "" if wild else c
+    return "(?s)^" + "".join(parts) + "(?!.)", prefix
 
 
 @dataclass(frozen=True)
@@ -379,11 +402,10 @@ def expand_multi_term(q: Query, terms_sorted: list[str]) -> Query:
         hits = [t for t in terms_sorted if t.startswith(q.prefix)]
         return _or_terms(hits)
     if isinstance(q, WildcardQuery):
-        hits = fnmatch.filter(terms_sorted, q.pattern)
-        return _or_terms(hits)
+        pat = re.compile(wildcard_regex(q.pattern)[0])
+        return _or_terms([t for t in terms_sorted if pat.search(t)])
     if isinstance(q, RegexpQuery):
-        import re as _re
-        pat = _re.compile("^(?:" + q.pattern + ")$")
+        pat = re.compile("^(?:" + q.pattern + ")$")
         return _or_terms([t for t in terms_sorted if pat.match(t)])
     if isinstance(q, TermRangeQuery):
         def ok(t: str) -> bool:

@@ -144,10 +144,8 @@ def expand_complex_phrase(q: ComplexPhraseQuery, searcher) -> Query:
         if isinstance(sl, PrefixQuery):
             terms = searcher._dict_terms(sl, MAX_EXPANSIONS + 1)
         elif isinstance(sl, WildcardQuery):
-            rx = "^" + re.escape(sl.pattern).replace(
-                r"\*", ".*").replace(r"\?", ".") + "$"
             terms = [r["term"] for r in (
-                searcher.term_dict.filter(F.col("term").rlike(rx))
+                searcher.term_dict.filter(searcher._multi_term_cond(sl))
                 .select("term").orderBy("term")
                 .limit(MAX_EXPANSIONS + 1).collect())]
         elif isinstance(sl, FuzzyQuery):

@@ -39,9 +39,10 @@ KIND_CODES = {"must": 0, "should": 1, "filter": 2, "must_not": 3}
 
 
 def read_blocks(index_dir: str, terms: list[str], buckets: int,
-                max_segment_id: int):
+                max_segment_id: int, doc_id: int | None = None):
     """``pa.Table(term, num_docs, first_doc, data)``: every committed
-    posting block of ``terms``, read on the driver. The filter prunes
+    posting block of ``terms`` (with ``doc_id``, only the blocks whose doc
+    range holds it), read on the driver. The filter prunes
     ``term_bucket`` partitions, then row groups by the terms' [min, max]
     span, and keeps segments up to ``max_segment_id`` so a staged,
     uncommitted segment stays invisible. The directory is listed on every
@@ -54,7 +55,8 @@ def read_blocks(index_dir: str, terms: list[str], buckets: int,
     uniq = sorted(set(terms))
     schema = pa.schema([("term", pa.string()), ("segment_id", pa.int32()),
                         ("num_docs", pa.int32()), ("first_doc", pa.int64()),
-                        ("data", pa.binary()), ("term_bucket", pa.int32())])
+                        ("last_doc", pa.int64()), ("data", pa.binary()),
+                        ("term_bucket", pa.int32())])
     if not uniq:
         return schema.empty_table().select(
             ["term", "num_docs", "first_doc", "data"])
@@ -66,26 +68,30 @@ def read_blocks(index_dir: str, terms: list[str], buckets: int,
             sorted({term_bucket_of(t, buckets) for t in uniq}))
         & (term >= uniq[0]) & (term <= uniq[-1]) & term.isin(uniq)
         & (ds.field("segment_id") <= max_segment_id))
+    if doc_id is not None:
+        cond = (cond & (ds.field("first_doc") <= doc_id)
+                & (ds.field("last_doc") >= doc_id))
     return ds.dataset(os.path.join(index_dir, "postings"), schema=schema,
                       format="parquet", partitioning=part).to_table(
         columns=["term", "num_docs", "first_doc", "data"], filter=cond)
 
 
-def decode_terms(terms, num_docs, first_docs, datas
+def decode_terms(blocks
                  ) -> dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]]:
-    """Decode posting blocks in one ``decode_blocks_batch`` pass -> term ->
-    (doc_ids, freqs, norm_bytes), each term's blocks concatenated."""
+    """Decode a (pandas or Arrow) table of posting blocks in one
+    ``decode_blocks_batch`` pass -> term -> (doc_ids, freqs, norm_bytes),
+    each term's blocks concatenated."""
     from lucene_spark.functions.codec import decode_blocks_batch
 
-    terms = np.asarray(terms, dtype=object)
+    terms = np.asarray(blocks["term"], dtype=object)
     if terms.size == 0:
         return {}
     order = np.argsort(terms, kind="stable")
     terms = terms[order]
-    nd = np.asarray(num_docs, dtype=np.int64)[order]
+    nd = np.asarray(blocks["num_docs"], dtype=np.int64)[order]
     docs, freqs, norms = decode_blocks_batch(
-        [datas[i] for i in order.tolist()], nd,
-        np.asarray(first_docs, dtype=np.int64)[order])
+        np.asarray(blocks["data"], dtype=object)[order], nd,
+        np.asarray(blocks["first_doc"], dtype=np.int64)[order])
     starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
     bounds = np.r_[0, np.cumsum(nd)][np.r_[starts, terms.size]].tolist()
     return {terms[s]: (docs[lo:hi], freqs[lo:hi], norms[lo:hi])

@@ -55,7 +55,9 @@ from pyspark.sql import functions as F
 
 from lucene_spark.functions import bm25
 from lucene_spark.index.build import collection_stats, load_manifest
-from lucene_spark.index.merge import term_bucket_of
+from lucene_spark.index.merge import (
+    read_term_dict, scan_term_dict, term_bucket_of,
+)
 from lucene_spark.query import local
 from lucene_spark.query.ast import (
     BlendedTermQuery,
@@ -80,6 +82,7 @@ from lucene_spark.query.ast import (
     TermRangeQuery,
     WildcardQuery,
     rewrite_fixpoint,
+    wildcard_regex,
 )
 
 _CLAUSE_SCHEMA = "clause_id int, doc_id long, score float"
@@ -246,7 +249,8 @@ class IndexSearcher:
         self.postings = (
             spark.read.parquet(os.path.join(index_dir, "postings"))
             .filter(F.col("segment_id") <= self.max_segment_id))
-        self.term_dict = spark.read.parquet(os.path.join(index_dir, "term_dict"))
+        #: the term statistics of the committed segments
+        self.term_dict = read_term_dict(spark, index_dir, manifest)
         self._docmap: DataFrame | None = None
         self._positions: DataFrame | None = None
         #: tombstone deletes (PendingDeletes analog): stats keep counting
@@ -337,47 +341,42 @@ class IndexSearcher:
 
     def _term_dict_rows(self, terms: list[str]
                         ) -> dict[str, tuple[int, int, int]]:
-        """term -> (doc_freq, total_term_freq, num_blocks) from a driver-side
-        pyarrow read of ``term_dict/``. Its files are range-partitioned and
+        """term -> (doc_freq, total_term_freq, num_blocks) of this
+        searcher's commit point, read on the driver (``merge.scan_term_dict``:
+        the base term_dict plus the visible deltas, summed). The files are
         sorted by term, so row-group statistics prune the read to the
         terms' [min, max] span (pyarrow prunes on the range, not on
-        ``isin``). The directory is listed on every call and
-        ``_``/``.``-prefixed files are skipped as Spark skips them, so after
-        a term_dict swap this sees the files Spark's refreshed listing
-        would."""
+        ``isin``)."""
         if not terms:
             return {}
-        import pyarrow as pa
         import pyarrow.dataset as ds
 
         uniq = sorted(set(terms))
         col = ds.field("term")
-        schema = pa.schema([("term", pa.string()), ("doc_freq", pa.int64()),
-                            ("total_term_freq", pa.int64()),
-                            ("num_blocks", pa.int64())])
-        t = ds.dataset(os.path.join(self.index_dir, "term_dict"),
-                       schema=schema, format="parquet").to_table(
-            filter=(col >= uniq[0]) & (col <= uniq[-1]) & col.isin(uniq))
-        cols = [t.column(c).to_pylist() for c in schema.names]
-        return {term: (df, ttf, nb) for term, df, ttf, nb in zip(*cols)}
+        out: dict[str, tuple[int, int, int]] = {}
+        for batch in scan_term_dict(
+                self.index_dir, self.manifest,
+                (col >= uniq[0]) & (col <= uniq[-1]) & col.isin(uniq)):
+            term, *stats = (c.to_pylist() for c in batch.columns)
+            out.update(zip(term, zip(*stats)))
+        return out
 
     def _dict_terms(self, q: Query, limit: int) -> list[str]:
-        """The sorted ``term_dict`` terms a PrefixQuery, TermRangeQuery or
+        """The sorted committed terms a PrefixQuery, TermRangeQuery or
         TermInSetQuery matches, at most ``limit`` of them (the first in
         term order) — the reference's in-process term-dictionary walk
         (``MultiTermQuery.java``, ``PrefixQuery.java:29``), with no Spark
-        job. One driver-side pyarrow scan, as ``_term_dict_rows`` reads:
-        a range conjunct prunes the sorted files' row groups, the exact
-        predicate (``starts_with``, the bounds with their inclusive
-        flags, ``isin``) selects the terms, and record batches stream, so
-        the driver holds about ``limit`` terms and one batch. Arrow and
-        Spark both compare strings by UTF-8 bytes, so this is the term
-        set Spark's filter returns.
+        job. One driver-side pyarrow scan (``merge.scan_term_dict``, as
+        ``_term_dict_rows`` reads): a range conjunct prunes the sorted
+        files' row groups, the exact predicate (``starts_with``, the
+        bounds with their inclusive flags, ``isin``) selects the terms,
+        and record batches stream, so the driver holds about ``limit``
+        terms and one batch. Arrow and Spark both compare strings by UTF-8
+        bytes, so this is the term set Spark's filter returns.
 
         Wildcard, Regexp and Fuzzy expansions stay Spark filters: their
         predicates are Java regexes and ``levenshtein``, whose semantics
         the driver would have to re-implement."""
-        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
 
@@ -406,27 +405,13 @@ class IndexSearcher:
             cond = (term >= uniq[0]) & (term <= uniq[-1]) & term.isin(uniq)
         else:
             raise TypeError(f"no dictionary walk for {type(q).__name__}")
-        scan = ds.dataset(
-            os.path.join(self.index_dir, "term_dict"),
-            schema=pa.schema([("term", pa.string())]), format="parquet",
-        ).scanner(columns=["term"], filter=cond)
         out: list[str] = []
-        for batch in scan.to_batches():
+        for batch in scan_term_dict(self.index_dir, self.manifest, cond,
+                                    ["term"]):
             out += batch.column(0).to_pylist()
             if len(out) > limit:
                 out = sorted(out)[:limit]
         return sorted(out)[:limit]
-
-    def _dict_ahead(self) -> bool:
-        """Whether ``term_dict`` already folds in a segment past this
-        searcher's commit point (a staged update's, or one committed after
-        this searcher opened), so its doc_freq counts postings this
-        searcher does not see. Each append writes its term_dict generation
-        with the appended segment's ``_APPLIED_SEG_<id>`` marker."""
-        marks = [int(n.rsplit("_", 1)[1]) for n in os.listdir(
-            os.path.join(self.index_dir, "term_dict"))
-            if n.startswith("_APPLIED_SEG_")]
-        return any(m > self.max_segment_id for m in marks)
 
     def docmap(self) -> DataFrame:
         if self._docmap is None:
@@ -499,11 +484,12 @@ class IndexSearcher:
         driver-local bound, their OR runs on the driver-local route
         (``_multi_term_rows``). Every other one runs through the JOIN-based
         expansion (``_scored_expansion_join``): the term predicate is
-        pushed into the postings scan itself, per-term df comes from a
-        metadata-only groupBy over the matched blocks, and no term list
-        ever reaches the driver — result-identical to the
+        pushed into the postings scan and the term statistics alike, and
+        no term list ever reaches the driver — result-identical to the
         SHOULD-of-TermQueries rewrite but unbounded and fully
-        distributed."""
+        distributed. Every route weights terms with the statistics of this
+        searcher's commit point (``merge.read_term_dict``): a staged or
+        crashed update changes no score."""
         q = rewrite_fixpoint(query)
         jp = self._as_multi_term_cond(q)
         if jp is not None:
@@ -1902,48 +1888,34 @@ class IndexSearcher:
             q = BooleanQuery(must=[q])
         if not (isinstance(q, BooleanQuery) and self._is_flat(q)):
             raise TypeError("explain supports flat term/boolean queries")
+        import pyarrow.dataset as ds
+
         clauses = self._clauses_of(q, np.float32(1.0))
-        norm_row = self.docmap().filter(F.col("doc_id") == doc_id).select(
-            "norm_byte", "field_len").collect()
+        doc = ds.field("doc_id") == doc_id
+        # the doc's norm and tombstone, read on the driver
+        norm_row = ds.dataset(os.path.join(self.index_dir, "docmap"),
+                              partitioning="hive").to_table(
+            columns=["norm_byte", "field_len"],
+            filter=doc & (ds.field("segment") <= self.max_segment_id)
+        ).to_pylist()
         if not norm_row:
             return {"match": False, "value": 0.0, "details": []}
-        live = self._live(
-            self.docmap().filter(F.col("doc_id") == doc_id).select("doc_id")
-        )
-        if live is not None and self.has_deletes and live.count() == 0:
-            return {"match": False, "value": 0.0, "details": [],
-                    "deleted": True}
+        if self.has_deletes:
+            from lucene_spark.index.deletes import tombstone_dirs
+
+            if any(ds.dataset(d).count_rows(filter=doc)
+                   for d in tombstone_dirs(
+                       self.index_dir, self.manifest,
+                       include_soft=not self.include_soft_deletes)):
+                return {"match": False, "value": 0.0, "details": [],
+                        "deleted": True}
         nb = int(norm_row[0]["norm_byte"])
-        # ONE pushed-down scan over all the query's terms (docID-driven
-        # block skip: only blocks whose range contains the doc decode),
-        # instead of one Spark job per clause
-        terms = sorted({c.term for c in clauses})
-        buckets = sorted({term_bucket_of(t, self.buckets) for t in terms})
-        blocks = self.postings.filter(
-            F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-            & (F.col("first_doc") <= doc_id) & (F.col("last_doc") >= doc_id)
-        ).select("term", "num_docs", "first_doc", "data")
-
-        def decode_freq(batches):
-            for pdf in batches:
-                out_t, out_f = [], []
-                for term, (d, f, _) in local.decode_terms(
-                        pdf["term"].to_numpy(object),
-                        pdf["num_docs"].to_numpy(np.int64),
-                        pdf["first_doc"].to_numpy(np.int64),
-                        pdf["data"].to_numpy(object)).items():
-                    hit = np.flatnonzero(d == doc_id)
-                    if hit.size:
-                        out_t.append(term)
-                        out_f.append(int(f[hit[0]]))
-                if out_t:
-                    yield pd.DataFrame({"term": out_t, "freq": out_f})
-
-        freq_of = {
-            r["term"]: int(r["freq"])
-            for r in blocks.mapInPandas(
-                decode_freq, schema="term string, freq long").collect()
-        }
+        # the query's blocks whose doc range holds the doc, decoded on the
+        # driver (a doc appears at most once in a term's postings)
+        freq_of = {t: int(f[d == doc_id].sum()) for t, (d, f, _) in
+                   local.decode_terms(local.read_blocks(
+                       self.index_dir, [c.term for c in clauses],
+                       self.buckets, self.max_segment_id, doc_id)).items()}
         details, cids, scores = [], [], []
         for c in clauses:
             freq = freq_of.get(c.term, 0)
@@ -2090,11 +2062,7 @@ class IndexSearcher:
             part = int(key[0])
             lo, hi = part * rng_sz, (part + 1) * rng_sz
             postings = {}
-            for term, (d, f, nb) in local.decode_terms(
-                    pdf["term"].to_numpy(object),
-                    pdf["num_docs"].to_numpy(np.int64),
-                    pdf["first_doc"].to_numpy(np.int64),
-                    pdf["data"].to_numpy(object)).items():
+            for term, (d, f, nb) in local.decode_terms(pdf).items():
                 m = (d >= lo) & (d < hi)
                 postings[term] = (d[m], f[m], nb[m])
             udocs, usc = local.top_k(*local.combine_clauses(
@@ -2296,19 +2264,10 @@ class IndexSearcher:
         if kind == "prefix":
             terms = self._dict_terms(PrefixQuery(pattern), max_expansions + 1)
         elif kind == "wildcard":
-            import fnmatch
-            import re as _re
-
-            # rlike is a PARTIAL match — anchor both ends (same as the
-            # WildcardQuery expansion below)
-            rx = "^" + fnmatch.translate(pattern).replace("\\Z", "$")
-            cond = F.col("term").rlike(rx)
-            # prefix-prune the dictionary scan up to the first wildcard char
-            lit = _re.split(r"[*?\[]", pattern, 1)[0]
-            if lit:
-                cond = F.col("term").startswith(lit) & cond
             terms = [r["term"] for r in (
-                self.term_dict.filter(cond).select("term").orderBy("term")
+                self.term_dict.filter(
+                    self._multi_term_cond(WildcardQuery(pattern)))
+                .select("term").orderBy("term")
                 .limit(max_expansions + 1).collect())]
         else:
             raise ValueError(f"unknown expansion kind {kind!r}")
@@ -3020,8 +2979,10 @@ class IndexSearcher:
         if isinstance(q, PrefixQuery):
             return F.col("term").startswith(q.prefix)
         if isinstance(q, WildcardQuery):
-            import fnmatch
-            return F.col("term").rlike("^" + fnmatch.translate(q.pattern).replace("\\Z", "$"))
+            rx, lit = wildcard_regex(q.pattern)
+            cond = F.col("term").rlike(rx)
+            # the literal prefix prunes the sorted term column's row groups
+            return F.col("term").startswith(lit) & cond if lit else cond
         if isinstance(q, RegexpQuery):
             # Lucene RegExp SYNTAX (not Java regex): translate the grammar
             # (predefined classes, <n-m> intervals, quoted strings, '#'/'@',
@@ -3126,17 +3087,14 @@ class IndexSearcher:
         """``local.combine_clauses`` arguments of a bare (optionally
         Boost-wrapped) Prefix, TermRange or TermInSet query run as the OR
         of its ``_dict_terms`` expansion on the driver-local route
-        (``_local_rows``), with df from term_dict as term queries take it.
-        None — run the join path instead — for other query types, when the
-        expansion exceeds ``max_clause_count``, when ``_local_rows``
-        declines, or when term_dict counts segments this searcher does not
-        see (``_dict_ahead``; the join path takes df from the committed
-        postings)."""
+        (``_local_rows``), with df from the committed term statistics as
+        term queries and the join path take it. None — run the join path
+        instead — for other query types, when the expansion exceeds
+        ``max_clause_count``, or when ``_local_rows`` declines."""
         boost = np.float32(q.boost if isinstance(q, BoostQuery) else 1.0)
         inner = q.query if isinstance(q, BoostQuery) else q
-        if (not isinstance(inner, (PrefixQuery, TermRangeQuery,
-                                   TermInSetQuery))
-                or self._dict_ahead()):
+        if not isinstance(inner, (PrefixQuery, TermRangeQuery,
+                                  TermInSetQuery)):
             return None
         terms = self._dict_terms(inner, self.max_clause_count + 1)
         if len(terms) > self.max_clause_count:
@@ -3156,8 +3114,8 @@ class IndexSearcher:
         of its filter rewrites, which have no cap).
 
         Plan: push ``cond`` into the postings scan (row-group pruning on the
-        sorted term column for prefix/range); per-term df = metadata-only
-        groupBy(sum(num_docs)) over the matched blocks (no postings decode);
+        sorted term column for prefix/range); per-term df from the committed
+        term statistics under the same predicate (no postings decode);
         broadcast-join df back; decode+score each block with its term's
         weight (idf computed in the UDF with the exact float32 op order);
         one groupBy(doc_id) sums clause scores in double and casts to f32 —
@@ -3165,9 +3123,8 @@ class IndexSearcher:
         blocks = self.postings.filter(cond).select(
             "term", "num_docs", "first_doc", "data"
         )
-        df_by_term = blocks.groupBy("term").agg(
-            F.sum("num_docs").cast("long").alias("df")
-        )
+        df_by_term = self.term_dict.filter(cond).select(
+            "term", F.col("doc_freq").alias("df"))
         if verify_pattern is not None:
             # cond was a superset pushdown; exact automaton verify on the
             # distinct-term frame (vocabulary-sized) — the subsequent inner
@@ -4148,13 +4105,8 @@ class IndexSearcher:
         dead = self._tombstones()
         if dead is None:
             return None
-        blocks = local.read_blocks(self.index_dir, list(rows), self.buckets,
-                                   self.max_segment_id)
-        postings = local.decode_terms(
-            blocks.column("term").to_numpy(zero_copy_only=False),
-            blocks.column("num_docs").to_numpy(),
-            blocks.column("first_doc").to_numpy(),
-            blocks.column("data").to_pylist())
+        postings = local.decode_terms(local.read_blocks(
+            self.index_dir, list(rows), self.buckets, self.max_segment_id))
         out = {}
         for name, (q, boost) in flats.items():
             clauses = self._clauses_of(q, boost, rows)
@@ -4260,11 +4212,8 @@ class IndexSearcher:
 
         def decode_score(batches):
             for pdf in batches:
-                cids, docs, scores = local.clause_rows(local.decode_terms(
-                    pdf["term"].to_numpy(object),
-                    pdf["num_docs"].to_numpy(np.int64),
-                    pdf["first_doc"].to_numpy(np.int64),
-                    pdf["data"].to_numpy(object)), clauses, sim)
+                cids, docs, scores = local.clause_rows(
+                    local.decode_terms(pdf), clauses, sim)
                 if docs.size:
                     yield pd.DataFrame({"clause_id": cids, "doc_id": docs,
                                         "score": scores})

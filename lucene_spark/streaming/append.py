@@ -16,12 +16,11 @@ Reference semantics mirrored (public Apache Lucene source):
     per-segment filenames are deterministic, so a replayed batch overwrites
     its own files idempotently (sequence-number analog of
     ``IndexWriter.java:1488`` seqNo).
-
-Scale note: appends write per-batch segment files + pass-through bucket rows;
-nothing re-reads old segments. term_dict is recomputed with one groupBy over
-block metadata (not postings!) per commit — at 10^12 turns swap in the
-delta-aggregation (old term_dict UNION new-segment stats, groupBy-sum), which
-is the same job keyed the same way.
+  - each appended segment carries its own term statistics
+    (``term_dict_delta/segment=<sid>/``, ``merge.write_term_stats``), as
+    each reference segment carries its own term dictionary; readers sum
+    them over the segments they see. Nothing re-reads old segments or the
+    base ``term_dict/``.
 """
 
 from __future__ import annotations
@@ -41,7 +40,9 @@ from lucene_spark.index.build import (
     read_postings_local,
     write_manifest,
 )
-from lucene_spark.index.merge import term_bucket_col
+from lucene_spark.index.merge import (
+    term_bucket_col, term_delta_dir, write_term_stats,
+)
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -80,13 +81,14 @@ def stage_batch_segment(
 ) -> dict | None:
     """Everything ``append_batch`` does EXCEPT the manifest commit: build
     the new segment's artifacts, publish its posting/position rows, and
-    delta-merge term_dict — all invisible to readers (searchers filter to
-    committed segment ids; see ``IndexSearcher.max_segment_id``) until
+    write its own term statistics — all invisible to readers (they filter
+    to committed segment ids; see ``IndexSearcher.max_segment_id``) until
     ``commit_staged_segment`` writes the manifest. Split out so
     ``update_docs`` can fold tombstones + a new segment into ONE commit
     (``IndexWriter.updateDocuments``'s atomicity). Returns the staged-
-    segment descriptor, or None for an empty batch. Idempotent on replay
-    via the per-step ``_APPLIED_SEG`` markers."""
+    segment descriptor, or None for an empty batch. Idempotent on replay:
+    the appending publishes skip via their ``_APPLIED_SEG`` markers, and
+    the term statistics are an overwrite."""
     config = IndexConfig(**manifest["config"])
     next_sid = max(int(k) for k in manifest["completed"]) + 1
     doc_base = sum(int(v["num_docs"]) for v in manifest["completed"].values())
@@ -178,57 +180,9 @@ def stage_batch_segment(
             open(pos_marker, "w").write(batch_fp)
             spark.catalog.refreshByPath(os.path.join(index_dir, "positions"))
 
-    # DELTA term-stats refresh: old term_dict ∪ THIS batch's block metadata,
-    # one groupBy-sum — never re-aggregates prior segments (at 10^12 turns
-    # the full recompute scans every segment's metadata per micro-batch).
-    # Written to a generation-suffixed dir then swapped in, because Spark
-    # cannot safely overwrite a path it is lazily reading from.
-    td_path = os.path.join(index_dir, "term_dict")
-    from lucene_spark.index.atomic import recover_dir
-
-    # a crash inside a previous append's term_dict swap can leave the live
-    # dir moved aside as .old — restore it before reading (the delta below
-    # then re-runs against the restored pre-swap generation)
-    recover_dir(td_path)
-    td_marker = os.path.join(td_path, f"_APPLIED_SEG_{next_sid}")
-    if not _marker_ok(td_marker):
-        new_stats = (
-            new_local.groupBy("term")
-            .agg(
-                F.sum("num_docs").cast("long").alias("doc_freq"),
-                F.sum("ttf").cast("long").alias("total_term_freq"),
-                F.count("*").cast("long").alias("num_blocks"),
-            )
-        )
-        old_stats = spark.read.parquet(td_path).select(
-            "term", "doc_freq", "total_term_freq", "num_blocks"
-        )
-        merged = (
-            old_stats.unionByName(new_stats)
-            .groupBy("term")
-            .agg(
-                F.sum("doc_freq").cast("long").alias("doc_freq"),
-                F.sum("total_term_freq").cast("long").alias("total_term_freq"),
-                F.sum("num_blocks").cast("long").alias("num_blocks"),
-            )
-        )
-        tmp_td = td_path + f".g{int(manifest['generation']) + 1}"
-        (
-            merged
-            .repartitionByRange(max(spark.sparkContext.defaultParallelism // 4, 1), "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(tmp_td)
-        )
-        # idempotence marker travels INSIDE the new dir: a replay after the
-        # swap (but before the manifest commit) sees it and skips the delta
-        # — without it the delta would double-count this segment's stats
-        open(os.path.join(tmp_td, f"_APPLIED_SEG_{next_sid}"), "w").write(batch_fp)
-        from lucene_spark.index.atomic import swap_dir
-
-        # crash-safe swap (clears leftover .old, tolerates missing live
-        # dir); includes the parquet file-listing refresh (CLAUDE.md)
-        swap_dir(spark, tmp_td, td_path)
+    # this segment's term statistics, beside (not folded into) the base
+    write_term_stats(spark, new_local, term_delta_dir(index_dir, next_sid),
+                     one_file=True)
 
     # the doc-range co-located layout (if built) indexes only the BASE
     # segments' blocks — appended docs would be silently invisible to the
@@ -273,6 +227,26 @@ def commit_staged_segment(index_dir: str, manifest: dict, staged: dict,
     return manifest
 
 
+def _stream(spark: SparkSession, source_dir: str, checkpoint_dir: str,
+            handle, available_now: bool):
+    """readStream(parquet transcripts) -> foreachBatch(``handle``).
+
+    ``available_now=True`` drains what's there and stops (NRT catch-up /
+    testable); False runs continuously with the default trigger."""
+    writer = (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", 4)
+        .parquet(source_dir)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        return q
+    return writer.start()
+
+
 def stream_update(
     spark: SparkSession,
     source_dir: str,
@@ -290,24 +264,11 @@ def stream_update(
     batch-id + marker discipline as ``stream_append``."""
     from lucene_spark.index.update import update_docs
 
-    src = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         update_docs(spark, index_dir, batch_df, key_cols=key_cols,
                     batch_id=batch_id)
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _stream(spark, source_dir, checkpoint_dir, handle, available_now)
 
 
 def stream_append(
@@ -317,24 +278,9 @@ def stream_append(
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """readStream(parquet transcripts) -> foreachBatch(append_batch).
-
-    ``available_now=True`` drains what's there and stops (NRT catch-up /
-    testable); False runs continuously with the default trigger."""
-    src = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
+    """readStream(parquet transcripts) -> foreachBatch(append_batch)."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         append_batch(spark, batch_df, index_dir, batch_id)
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    return _stream(spark, source_dir, checkpoint_dir, handle, available_now)

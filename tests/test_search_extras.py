@@ -1253,3 +1253,32 @@ def _check_profile(s):
     import pytest as _pt
     with _pt.raises(ValueError, match="flat"):
         s.profile(rewrite_fixpoint(parse_query('{"phrase": ["ba", "be"]}')))
+
+
+def test_wildcard_follows_lucene_grammar(spark):
+    """WildcardQuery patterns follow Lucene's grammar in the Spark
+    expansion (a Java regex) and in the Python oracle alike: ``*`` is any
+    string, ``?`` one code point, a backslash escapes the next character
+    (a trailing one is literal), and ``[``, ``]`` and ``!`` are literal."""
+    from lucene_spark.query.ast import WildcardQuery, expand_multi_term
+
+    vocab = ["a[bc]", "a[bc]d", "a[b", "ab", "ac", "abd", "fo", "fo*",
+             "fo*o", "foo", "fo\\", "x!y", "xy", "é\U0001d11ez", "éz"]
+    cases = {
+        "a[bc]*": {"a[bc]", "a[bc]d"},
+        "fo\\*": {"fo*"},
+        "fo\\": {"fo\\"},
+        "fo*": {"fo", "fo*", "fo*o", "foo", "fo\\"},
+        "a?": {"ab", "ac"},
+        "x!y": {"x!y"},
+        "é?z": {"é\U0001d11ez"},
+    }
+    frame = spark.createDataFrame([(t,) for t in vocab], "term string")
+    for pattern, want in cases.items():
+        cond = IndexSearcher._multi_term_cond(WildcardQuery(pattern))
+        assert {r["term"] for r in frame.filter(cond).collect()} == want, \
+            pattern
+        got = expand_multi_term(WildcardQuery(pattern), vocab)
+        terms = ({c.term for c in got.should} if isinstance(got, BooleanQuery)
+                 else {got.term})
+        assert terms == want, pattern

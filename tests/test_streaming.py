@@ -134,18 +134,17 @@ def test_exactly_once_on_restart(spark, setup):
 
 
 def test_delta_term_dict_equals_full_recompute(spark, setup):
-    """The append path maintains term_dict incrementally (old ∪ new batch,
-    groupBy-sum); it must equal a from-scratch aggregation over ALL
-    segments' block metadata."""
-    import os
-
+    """Each append writes its own segment's term statistics; the committed
+    view (the base term_dict plus the deltas, summed) must equal a
+    from-scratch aggregation over ALL segments' block metadata."""
     from pyspark.sql import functions as F
 
     from lucene_spark.index.build import read_postings_local
+    from lucene_spark.index.merge import read_term_dict
 
     index_dir = setup["idx"]
     got = (
-        spark.read.parquet(os.path.join(index_dir, "term_dict"))
+        read_term_dict(spark, index_dir)
         .select("term", "doc_freq", "total_term_freq", "num_blocks")
         .orderBy("term")
         .collect()
@@ -378,8 +377,7 @@ def test_append_batch_replay_is_idempotent(spark, tmp_path_factory):
     """A re-delivered micro-batch (same batch_id) must change NOTHING:
     no duplicate postings rows, no double-counted term_dict stats, no
     manifest bump (foreachBatch replays after a crash)."""
-    from pyspark.sql import functions as F
-
+    from lucene_spark.index.merge import read_term_dict
     from lucene_spark.streaming.append import append_batch
 
     root = tmp_path_factory.mktemp("replay")
@@ -398,10 +396,7 @@ def test_append_batch_replay_is_idempotent(spark, tmp_path_factory):
     m1 = load_manifest(idx)
     post1 = spark.read.parquet(os.path.join(idx, "postings"))
     rows1 = post1.count()
-    td1 = sorted(
-        tuple(r) for r in spark.read.parquet(
-            os.path.join(idx, "term_dict")).collect()
-    )
+    td1 = sorted(tuple(r) for r in read_term_dict(spark, idx).collect())
 
     # full replay of the committed batch: the manifest guard short-circuits
     append_batch(spark, spark.createDataFrame(extra), idx, batch_id=7)
@@ -409,15 +404,13 @@ def test_append_batch_replay_is_idempotent(spark, tmp_path_factory):
     assert m2["generation"] == m1["generation"]
     assert len(m2["completed"]) == len(m1["completed"])
     assert spark.read.parquet(os.path.join(idx, "postings")).count() == rows1
-    td2 = sorted(
-        tuple(r) for r in spark.read.parquet(
-            os.path.join(idx, "term_dict")).collect()
-    )
+    td2 = sorted(tuple(r) for r in read_term_dict(spark, idx).collect())
     assert td2 == td1
 
     # partial replay (crash just BEFORE the manifest commit): restore the
     # pre-append manifest — all data writes already landed, markers in
-    # place — and re-run; every publish step must skip via its marker
+    # place — and re-run; every publish step must skip via its marker and
+    # the segment's term statistics rewrite the same rows
     from lucene_spark.index.build import write_manifest
 
     write_manifest(idx, m0)
@@ -426,10 +419,7 @@ def test_append_batch_replay_is_idempotent(spark, tmp_path_factory):
     assert m3["generation"] == m1["generation"]
     assert sorted(m3["completed"]) == sorted(m1["completed"])
     assert spark.read.parquet(os.path.join(idx, "postings")).count() == rows1
-    td3 = sorted(
-        tuple(r) for r in spark.read.parquet(
-            os.path.join(idx, "term_dict")).collect()
-    )
+    td3 = sorted(tuple(r) for r in read_term_dict(spark, idx).collect())
     assert td3 == td1
     assert check_index(spark, idx)["ok"]
 
@@ -668,30 +658,6 @@ def test_expunge_resumes_after_crash_mid_swap(spark, tmp_path_factory):
     b = [(r["doc_id"], np.float32(r["score"]))
          for r in s2.search(TermQuery(t), 30).collect()]
     assert a == b
-
-
-def test_append_recovers_term_dict_from_swap_gap(spark, tmp_path_factory):
-    """A previous append crashed between swap_dir's two renames: term_dict
-    is gone, term_dict.old holds the pre-swap generation. The next append
-    must restore it and complete."""
-    from lucene_spark.streaming.append import append_batch
-
-    root = tmp_path_factory.mktemp("tdgap")
-    idx = str(root / "idx")
-    base = generate_pandas(n_convs=15, seed=18, vocab_size=150, max_turns=5)
-    extra = generate_pandas(n_convs=5, seed=19, vocab_size=150, max_turns=5)
-    extra["conv_id"] = "zz-" + extra["conv_id"]
-    cfg = IndexConfig(num_segments=2, term_buckets=4, hot_term_df=64)
-    build_index(spark, spark.createDataFrame(base), idx, cfg)
-    merge_index(spark, idx)
-
-    td = os.path.join(idx, "term_dict")
-    os.rename(td, td + ".old")  # simulate the crash window
-    append_batch(spark, spark.createDataFrame(extra), idx, batch_id=1)
-    assert os.path.exists(td) and not os.path.exists(td + ".old")
-    assert check_index(spark, idx)["ok"]
-    s = IndexSearcher(spark, idx)
-    assert s.doc_count == len(base) + len(extra)
 
 
 def test_legacy_empty_markers_still_skip(spark, tmp_path_factory):

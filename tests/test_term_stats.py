@@ -1,17 +1,19 @@
 """Driver-side term statistics and the per-query Spark job budget.
 
-``IndexSearcher.term_stats`` reads ``term_dict/`` with pyarrow on the
-driver instead of running a Spark job. It must return exactly what a Spark
-read of the same directory returns, also right after a commit has swapped
-that directory. The job pins fail as soon as a query, build or merge path
-gains a job: queries small enough for the driver-local route run none, and
-the Spark route (forced with an instance-level ``LOCAL_POSTINGS_MAX = 0``)
-keeps its own pins."""
+``IndexSearcher.term_stats`` reads the committed term statistics (the
+base ``term_dict/`` plus the appended segments' deltas) with pyarrow on
+the driver instead of running a Spark job. It must return exactly what
+the Spark read of the same view (``merge.read_term_dict``) returns, also
+right after a commit. The job pins fail as soon as a query, build, merge,
+update or searcher-open path gains a job: queries small enough for the
+driver-local route run none, and the Spark route (forced with an
+instance-level ``LOCAL_POSTINGS_MAX = 0``) keeps its own pins."""
 
 from __future__ import annotations
 
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,8 +53,8 @@ def test_driver_term_stats_equal_spark_read(spark, built_index):
 
 
 def test_reopened_searcher_stats_follow_update_commit(spark, tmp_path_factory):
-    """update_docs swaps term_dict for a new generation; a searcher opened
-    after the commit reads the swapped directory, new terms included."""
+    """update_docs writes its segment's term statistics beside the base; a
+    searcher opened after the commit sums them in, new terms included."""
     base = generate_pandas(n_convs=20, seed=51, vocab_size=200, max_turns=5)
     batch = base[base["conv_id"] == sorted(base["conv_id"].unique())[0]].copy()
     batch["text"] = "qqmarker " + batch["text"]
@@ -172,10 +174,11 @@ def test_small_multi_term_queries_run_no_job(spark, built_index, pin_terms):
 
 
 def test_bare_prefix_join_path_job_count(spark, built_index, pin_terms):
-    """Above the bound a bare prefix keeps the expansion join's plan."""
+    """Above the bound a bare prefix keeps the expansion join's plan; its
+    df comes from the committed term statistics, with no aggregation."""
     s = _spark_route(spark, built_index)
     q = PrefixQuery(pin_terms[-1][:3])
-    assert _jobs_of(spark, lambda: s.search(q, 10).collect()) == 5
+    assert _jobs_of(spark, lambda: s.search(q, 10).collect()) == 4
 
 
 @pytest.mark.parametrize("positions,build_jobs,merge_jobs", [
@@ -202,3 +205,63 @@ def test_build_and_merge_job_counts(spark, small_corpus, tmp_path_factory,
     assert _jobs_of(spark, lambda: build_index_files(
         spark, str(src), idx, cfg)) == build_jobs
     assert _jobs_of(spark, lambda: merge_index(spark, idx)) == merge_jobs
+
+
+@pytest.fixture(scope="module")
+def small_update(spark, tmp_path_factory):
+    """(index dir, Spark jobs of one small update_docs on it): the batch
+    replaces one conversation's turns and inserts a new conversation."""
+    import pandas as pd
+
+    base = generate_pandas(n_convs=20, seed=52, vocab_size=200, max_turns=5)
+    convs = sorted(base["conv_id"].unique())
+    repl = base[base["conv_id"] == convs[0]].copy()
+    repl["text"] = "qqrepl " + repl["text"]
+    new = base[base["conv_id"] == convs[1]].copy()
+    new["conv_id"] = "zz-new"
+    idx = str(tmp_path_factory.mktemp("jobpin-update") / "idx")
+    build_index(spark, spark.createDataFrame(base), idx,
+                IndexConfig(num_segments=2, term_buckets=4, hot_term_df=64))
+    merge_index(spark, idx)
+    batch = spark.createDataFrame(pd.concat([repl, new], ignore_index=True))
+    return idx, _jobs_of(spark, lambda: update_docs(spark, idx, batch,
+                                                    batch_id=1))
+
+
+def test_small_update_docs_job_count(small_update):
+    """update_docs writes only its segment's term statistics (its block
+    metadata's aggregate and one write): no schema inference, rewrite or
+    swap of the base term_dict, which took 23 jobs here."""
+    assert small_update[1] == 20
+
+
+def test_searcher_open_runs_one_job(spark, small_update):
+    """Opening a searcher infers the postings schema (one job); the term
+    statistics are read with an explicit schema."""
+    assert _jobs_of(spark, lambda: IndexSearcher(spark, small_update[0])) == 1
+
+
+def test_explain_runs_no_job(spark, built_index, small_update, pin_terms):
+    """explain() reads the doc's norm, its tombstone and the query's blocks
+    on the driver: no Spark job, with or without deletes, and its value
+    is the searched score."""
+    for idx, q in (
+            (built_index, BooleanQuery(must=[TermQuery(pin_terms[0])],
+                                       should=[TermQuery(pin_terms[-1])])),
+            (small_update[0], BooleanQuery(should=[TermQuery("qqrepl"),
+                                                   TermQuery(pin_terms[0])]))):
+        s = IndexSearcher(spark, idx)
+        hits = s.search(q, 5).collect()
+        assert hits
+        for h in hits:
+            got = []
+            assert _jobs_of(spark, lambda: got.append(
+                s.explain(q, int(h["doc_id"])))) == 0
+            assert got[0]["match"]
+            assert np.float32(got[0]["value"]) == np.float32(h["score"])
+    s = IndexSearcher(spark, small_update[0])
+    dead = int(s._tombstones()[0])
+    got = []
+    assert _jobs_of(spark, lambda: got.append(
+        s.explain(BooleanQuery(should=[TermQuery(pin_terms[0])]), dead))) == 0
+    assert got[0]["deleted"] and not got[0]["match"]

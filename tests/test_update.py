@@ -28,6 +28,37 @@ def _build(spark, idx, pdf):
     merge_index(spark, idx)
 
 
+def _committed_term_stats(spark, idx, max_sid):
+    """term -> (Σ num_docs, Σ ttf) over the posting blocks of the segments
+    up to ``max_sid``, and every term of every segment on disk (staged
+    ones included)."""
+    from lucene_spark.index.build import read_postings_local
+
+    local = read_postings_local(spark, idx)
+    stats = {r["term"]: (r["df"], r["ttf"]) for r in (
+        local.filter(F.col("segment_id") <= max_sid).groupBy("term")
+        .agg(F.sum("num_docs").alias("df"), F.sum("ttf").alias("ttf"))
+        .collect())}
+    return stats, [r["term"] for r in local.select("term").distinct().collect()]
+
+
+def _crash_before_commit(spark, idx, batch, batch_id):
+    """update_docs stopped just before its manifest write: everything is
+    staged (segment published, term statistics and tombstone generation
+    written), nothing committed."""
+    import lucene_spark.index.update as upd
+
+    real_write = upd.write_manifest
+    upd.write_manifest = lambda *a, **k: (_ for _ in ()).throw(
+        RuntimeError("simulated crash before commit"))
+    try:
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            update_docs(spark, idx, spark.createDataFrame(batch),
+                        batch_id=batch_id)
+    finally:
+        upd.write_manifest = real_write
+
+
 def _updated_corpus(base, repl, extra):
     """base with ``repl``'s keyed rows swapped in, plus ``extra``."""
     import pandas as pd
@@ -84,8 +115,11 @@ def test_update_then_expunge_equals_fresh_build(spark, tmp_path_factory,
     for c, t in zip(repl.conv_id, repl.turn_idx):
         assert by_key[(c, int(t))][0] >= base_docs  # the NEW version
 
-    # post-expunge: bit-identical to a fresh build over the updated corpus
+    # post-expunge: bit-identical to a fresh build over the updated corpus;
+    # the base term_dict folds the update's term-statistics delta in
+    assert os.listdir(os.path.join(idx, "term_dict_delta"))
     expunge_deletes(spark, idx)
+    assert not os.listdir(os.path.join(idx, "term_dict_delta"))
     assert check_index(spark, idx)["ok"]
     updated = _updated_corpus(base, repl, extra)
     _build(spark, fresh, updated)
@@ -122,25 +156,17 @@ def test_update_crash_before_commit_is_invisible_then_resumes(
     before = {(r["conv_id"], int(r["turn_idx"]))
               for r in s0.docmap().select("conv_id", "turn_idx").collect()}
 
-    # kill between staging and the commit: everything is staged (segment
-    # published, tombstone generation written) but no manifest write
-    import lucene_spark.index.update as upd
-
-    real_write = upd.write_manifest
-    upd.write_manifest = lambda *a, **k: (_ for _ in ()).throw(
-        RuntimeError("simulated crash before commit"))
-    try:
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            update_docs(spark, idx, spark.createDataFrame(batch), batch_id=9)
-    finally:
-        upd.write_manifest = real_write
+    # kill between staging and the commit
+    _crash_before_commit(spark, idx, batch, 9)
 
     # a reader opened NOW sees exactly the OLD commit point: the staged
-    # segment is filtered out (max committed sid), the staged tombstone
-    # generation is unreferenced
+    # segment is filtered out (max committed sid), its term statistics
+    # are not counted, the staged tombstone generation is unreferenced
     s_mid = IndexSearcher(spark, idx)
     assert not s_mid.has_deletes
     assert s_mid.count(MatchAllDocsQuery()) == n_old
+    want, vocab = _committed_term_stats(spark, idx, s_mid.max_segment_id)
+    assert s_mid.term_stats(vocab) == want
     mid = {(r["conv_id"], int(r["turn_idx"]))
            for r in s_mid.docmap().select("conv_id", "turn_idx").collect()}
     assert mid == before  # no zz- conv leaked in, no victim vanished
@@ -151,12 +177,45 @@ def test_update_crash_before_commit_is_invisible_then_resumes(
     assert m["has_deletes"]
     s2 = IndexSearcher(spark, idx)
     assert s2.count(MatchAllDocsQuery()) == n_old + len(batch) - len(repl)
+    want2, vocab = _committed_term_stats(spark, idx, s2.max_segment_id)
+    assert want2 != want and s2.term_stats(vocab) == want2
     assert check_index(spark, idx)["ok"]
 
     # exactly-once: a second replay of the committed batch changes nothing
     g = load_manifest(idx)["generation"]
     update_docs(spark, idx, spark.createDataFrame(batch), batch_id=9)
     assert load_manifest(idx)["generation"] == g
+
+
+def test_staged_update_leaves_term_stats_at_the_commit_point(
+        spark, tmp_path_factory, corpus):
+    """A searcher opened on a staged, uncommitted update weights terms with
+    the committed segments' statistics only: for every term on disk,
+    ``term_stats`` equals Σ num_docs / Σ ttf of the committed blocks. Bare
+    prefix queries over the staged terms take the driver-local route and
+    return what the bound-0 Spark searcher returns."""
+    from lucene_spark.query.ast import PrefixQuery
+
+    base, _, _, batch = corpus
+    batch = batch.assign(text="qqstaged " + batch["text"])
+    idx = str(tmp_path_factory.mktemp("updstaged") / "idx")
+    _build(spark, idx, base)
+    _crash_before_commit(spark, idx, batch, 4)
+
+    s = IndexSearcher(spark, idx)
+    want, vocab = _committed_term_stats(spark, idx, s.max_segment_id)
+    assert "qqstaged" in vocab and "qqstaged" not in want
+    assert s.term_stats(vocab) == want
+    spk = IndexSearcher(spark, idx)
+    spk.LOCAL_POSTINGS_MAX = 0
+    for prefix in ["qq"] + [t[:2] for t in sorted(vocab)[::40]]:
+        got = s.search(PrefixQuery(prefix), 1000)
+        assert "LocalRelation" in got._jdf.queryExecution().analyzed(
+        ).toString(), prefix
+        rows = [(r["doc_id"], np.float32(r["score"])) for r in got.collect()]
+        assert rows == [(r["doc_id"], np.float32(r["score"]))
+                        for r in spk.search(PrefixQuery(prefix), 1000)
+                        .collect()], prefix
 
 
 def test_update_insert_only_sets_no_deletes(spark, tmp_path_factory):
