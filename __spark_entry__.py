@@ -78,8 +78,8 @@ _WILDCARD = "s?an"       # scan, span...
 _REGEXP = "(s.an|m[ae]rge)&[a-z]{4,5}&.*e.*"
 #: NESTED intersection — no lookahead-free regex translation exists, so
 #: the engine routes this through the derivative-automaton layer
-#: (query/automaton.py): superset rlike pushdown + exact DFA verify on the
-#: term dictionary. The DuckDB oracle uses the hand-derived equivalent
+#: (query/automaton.py): superset regex + exact DFA check in the term
+#: dictionary walk. The DuckDB oracle uses the hand-derived equivalent
 #: plain-regex form (equivalence brute-force-proven in tests/test_automaton.py):
 #:   s[a-z]* ∩ [a-z]*n ∩ .{3,6}  =  s[a-z]{1,4}n
 #:   (t[a-z]* ∩ [a-z]*e)s?       =  t[a-z]*es?

@@ -174,6 +174,47 @@ def write_manifest(index_dir: str, manifest: dict) -> None:
 
 # ------------------------------------------------------------------ build
 
+def _check_config(config: IndexConfig) -> None:
+    """Reject an IndexConfig no build can honour, before any Spark job:
+    offsets and payloads need positions and their analyzer base, the
+    Polish chain its stempel resources, and tf-override chains no
+    positions. Both builds call it."""
+    from lucene_spark.functions.analysis import CHAIN_BASE, TF_CHAINS
+
+    if config.offsets:
+        if not config.positions:
+            raise ValueError("offsets require positions=True")
+        if CHAIN_BASE.get(config.analyzer) not in ("simple", "standard"):
+            raise ValueError(
+                "offsets require a simple- or standard-base analyzer "
+                "(their regexes report the exact token spans)"
+            )
+    if config.payloads:
+        if not config.positions:
+            raise ValueError("payloads require positions=True")
+        if CHAIN_BASE.get(config.analyzer) != "whitespace":
+            raise ValueError(
+                "payloads require a whitespace-base payload chain "
+                "(DelimitedPayloadTokenFilter semantics); use "
+                "analyzer='whitespace_payload'"
+            )
+    if config.analyzer == "polish":
+        from lucene_spark.functions import stempel
+
+        # the chain's table and stop file are read at run time; without
+        # them the first analyze task would fail, wrapped by Spark
+        stempel.require()
+    if config.analyzer in TF_CHAINS and config.positions:
+        # DelimitedTermFrequencyTokenFilter contract: the field must be
+        # indexed DOCS_AND_FREQS with no positions or offsets (the filter's
+        # javadoc; IndexingChain rejects posIncr attributes alongside a
+        # custom TermFrequencyAttribute)
+        raise ValueError(
+            "tf-override chains require positions=False "
+            "(DOCS_AND_FREQS only, DelimitedTermFrequencyTokenFilter)"
+        )
+
+
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -190,6 +231,7 @@ def build_index(
       manifest.json             config + boundaries + per-segment lineage
     """
     config = config or IndexConfig()
+    _check_config(config)
     manifest = load_manifest(index_dir) if resume else None
 
     if config.index_sort:
@@ -233,44 +275,6 @@ def build_index(
                     "index_sort on a TIMESTAMP column requires "
                     "spark.sql.session.timeZone=UTC (session tz "
                     f"{tz!r} can reorder across DST folds)")
-    if config.offsets:
-        from lucene_spark.functions.analysis import CHAIN_BASE
-
-        if not config.positions:
-            raise ValueError("offsets require positions=True")
-        if CHAIN_BASE.get(config.analyzer) not in ("simple", "standard"):
-            raise ValueError(
-                "offsets require a simple- or standard-base analyzer "
-                "(their regexes report the exact token spans)"
-            )
-    if config.payloads:
-        from lucene_spark.functions.analysis import CHAIN_BASE
-
-        if not config.positions:
-            raise ValueError("payloads require positions=True")
-        if CHAIN_BASE.get(config.analyzer) != "whitespace":
-            raise ValueError(
-                "payloads require a whitespace-base payload chain "
-                "(DelimitedPayloadTokenFilter semantics); use "
-                "analyzer='whitespace_payload'"
-            )
-    if config.analyzer == "polish":
-        from lucene_spark.functions import stempel
-
-        # the chain's table and stop file are read at run time; without
-        # them the first analyze task would fail, wrapped by Spark
-        stempel.require()
-    from lucene_spark.functions.analysis import TF_CHAINS
-
-    if config.analyzer in TF_CHAINS and config.positions:
-        # DelimitedTermFrequencyTokenFilter contract: the field must be
-        # indexed DOCS_AND_FREQS with no positions or offsets (the filter's
-        # javadoc; IndexingChain rejects posIncr attributes alongside a
-        # custom TermFrequencyAttribute)
-        raise ValueError(
-            "tf-override chains require positions=False "
-            "(DOCS_AND_FREQS only, DelimitedTermFrequencyTokenFilter)"
-        )
 
     if manifest is None:
         nseg = config.num_segments
@@ -333,9 +337,7 @@ def build_index(
     if pending:
         part = assigned.filter(F.col("shard_id").isin(pending))
         meta = part.groupBy("shard_id").applyInPandas(
-            _make_segment_builder(index_dir, offsets, config.analyzer,
-                                  config.positions, config.index_sort,
-                                  config.offsets, config.payloads),
+            _make_segment_builder(index_dir, offsets, config),
             schema=SEGMENT_META_SCHEMA,
         )
         rows = meta.collect()
@@ -514,11 +516,11 @@ def _assign_shards(transcripts: DataFrame, boundaries: list[str]) -> DataFrame:
 
 
 def _make_segment_builder(index_dir: str, offsets: dict[int, int],
-                          analyzer: str = "standard", positions: bool = False,
-                          index_sort: str | None = None,
-                          store_offsets: bool = False,
-                          store_payloads: bool = False):
-    """Returns the applyInPandas function building one segment per shard.
+                          config: IndexConfig):
+    """Returns the function building one segment per shard, called as
+    ``build(key, pdf)`` with ``key[0]`` the segment id (an applyInPandas
+    group function). Every segment build goes through it: both builds
+    and the append.
 
     The analyzer SPEC (tokenizer fn + chain filters) is resolved on the
     DRIVER and shipped through the closure: executors re-import the
@@ -528,13 +530,15 @@ def _make_segment_builder(index_dir: str, offsets: dict[int, int],
         get_chain_filters, get_raw_tokenizer,
     )
 
-    spec = (get_raw_tokenizer(analyzer), get_chain_filters(analyzer))
+    spec = (get_raw_tokenizer(config.analyzer),
+            get_chain_filters(config.analyzer))
 
     def build_segment(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(key[0])
-        return _build_segment_frame(pdf, sid, offsets[sid], analyzer, index_dir,
-                                    positions, index_sort, spec, store_offsets,
-                                    store_payloads)
+        return _build_segment_frame(
+            pdf, sid, offsets[sid], config.analyzer, index_dir,
+            config.positions, config.index_sort, spec, config.offsets,
+            config.payloads)
 
     return build_segment
 
@@ -1032,13 +1036,7 @@ def build_index_files(
             "index_sort needs the shuffle build (build_index): the "
             "file-aligned path takes doc order from the input files"
         )
-    from lucene_spark.functions.analysis import TF_CHAINS as _TF
-
-    if config.analyzer in _TF and config.positions:
-        raise ValueError(
-            "tf-override chains require positions=False "
-            "(DOCS_AND_FREQS only, DelimitedTermFrequencyTokenFilter)"
-        )
+    _check_config(config)
     manifest = load_manifest(index_dir) if resume else None
 
     if manifest is None:
@@ -1075,16 +1073,14 @@ def build_index_files(
     done = {int(k) for k in manifest["completed"]}
     pending = [e for e in plan if e["segment_id"] not in done]
     if pending:
-        analyzer = config.analyzer
-        idx_dir = index_dir
+        build = _make_segment_builder(
+            index_dir, {e["segment_id"]: e["offset"] for e in pending}, config)
         pending_pdf = pd.DataFrame(
-            [(e["path"], e["segment_id"], e["offset"]) for e in pending],
-            columns=["path", "segment_id", "offset"],
+            [(e["path"], e["segment_id"]) for e in pending],
+            columns=["path", "segment_id"],
         )
         # round-robin: exactly one file per task (hash-by-key could collide)
         tasks = spark.createDataFrame(pending_pdf).repartition(len(pending))
-
-        store_pos = config.positions
 
         def run_file(batches):
             import pyarrow as pa2
@@ -1095,14 +1091,13 @@ def build_index_files(
             # N*cores threads and thrash — the task itself IS the parallelism
             pa2.set_cpu_count(1)
             for pdf in batches:
-                for path, sid, offset in pdf.itertuples(index=False):
+                for path, sid in pdf.itertuples(index=False):
                     frame = pq2.read_table(
                         path,
                         columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
                         use_threads=False,
                     ).to_pandas(use_threads=False)
-                    yield _build_segment_frame(frame, int(sid), int(offset),
-                                               analyzer, idx_dir, store_pos)
+                    yield build((sid,), frame)
 
         rows = tasks.mapInPandas(run_file, schema=SEGMENT_META_SCHEMA).collect()
         for r in rows:

@@ -211,9 +211,9 @@ def wildcard_regex(pattern: str) -> tuple[str, str]:
     """(regex, literal prefix) of a pattern in Lucene's wildcard grammar
     (``WildcardQuery.toAutomaton``): ``*`` is any string, ``?`` one code
     point, a backslash escapes the next character (a trailing one is
-    literal), all else is literal. The regex matches whole terms alike in
-    Java (``rlike`` searches) and Python ``re``: ``(?!.)`` ends the input
-    in both, where ``$`` also matches before a final newline."""
+    literal), all else is literal. A term matches when the regex matches
+    it whole: Python's ``re.fullmatch`` here, RE2 with ``\\z`` appended
+    in the engine's term rule (``search._term_rule``)."""
     parts, prefix, wild, i = [], "", False, 0
     while i < len(pattern):
         c = pattern[i]
@@ -227,7 +227,7 @@ def wildcard_regex(pattern: str) -> tuple[str, str]:
             continue
         parts.append(re.escape(c))
         prefix += "" if wild else c
-    return "(?s)^" + "".join(parts) + "(?!.)", prefix
+    return "(?s)^" + "".join(parts), prefix
 
 
 @dataclass(frozen=True)
@@ -403,7 +403,7 @@ def expand_multi_term(q: Query, terms_sorted: list[str]) -> Query:
         return _or_terms(hits)
     if isinstance(q, WildcardQuery):
         pat = re.compile(wildcard_regex(q.pattern)[0])
-        return _or_terms([t for t in terms_sorted if pat.search(t)])
+        return _or_terms([t for t in terms_sorted if pat.fullmatch(t)])
     if isinstance(q, RegexpQuery):
         pat = re.compile("^(?:" + q.pattern + ")$")
         return _or_terms([t for t in terms_sorted if pat.match(t)])

@@ -1,7 +1,7 @@
 """Lucene ``RegExp`` -> executable automaton (Brzozowski derivatives).
 
 ``query/regexp.py`` translates the reference's RegExp grammar
-(``core/util/automaton/RegExp.java:354``) into Java-regex/RE2 patterns,
+(``core/util/automaton/RegExp.java:354``) into RE2 patterns,
 which covers everything EXCEPT intersection (``&``) nested below the top
 level — a conjunction of full-match regexes can express ``a&b`` but not
 ``(a&b)c`` (no lookahead in RE2). The reference has no such limit because
@@ -19,16 +19,17 @@ This module is the engine's automaton layer for exactly that residue:
   over canonicalized nodes build a lazy DFA — each distinct (state, char)
   transition is computed once, so matching a term dictionary costs
   O(total chars) dict lookups after warm-up.
-- ``superset_condition(ast)`` — a regex for the language with every
-  ``&`` weakened to ``|`` (union ⊇ intersection), used to PUSH DOWN a
-  sound pre-filter into the postings/term-dict parquet scan; the matcher
-  then verifies candidates exactly. This mirrors the reference's
-  ``CompiledAutomaton`` common-suffix/prefix acceleration in spirit:
-  cheap necessary condition first, exact automaton second.
+- ``superset_regex(ast)`` — a regex for the language with every
+  ``&`` weakened to ``|`` (union ⊇ intersection), the sound pre-filter of
+  the term rule (``search._term_rule``); the matcher then checks the
+  candidates exactly. This mirrors the reference's ``CompiledAutomaton``
+  common-suffix/prefix acceleration in spirit: cheap necessary condition
+  first, exact automaton second.
 
-The matcher is used on the DISTINCT TERM DICTIONARY (vocabulary-sized,
-never the corpus row path) inside an Arrow-batched pandas stage —
-the same place the reference runs its automata (``Terms.intersect``).
+The matcher runs on the DISTINCT TERM DICTIONARY (vocabulary-sized,
+never the corpus row path), in the term rule's walk over Arrow record
+batches — the same place the reference runs its automata
+(``Terms.intersect``).
 
 Scale note: repetition desugaring (``a{n,m}`` -> n copies + (m-n)
 optionals) is bounded by ``_MAX_DESUGAR`` total nodes; the reference's
@@ -519,10 +520,10 @@ class RegexpMatcher:
         return [m(t) for t in terms]
 
 
-# --------------------------------------------------- superset regex (pushdown)
+# --------------------------------------------- superset regex (pre-filter)
 
 def _to_regex(node):
-    """AST -> Java/RE2 full-match regex body, with ``inter`` weakened to
+    """AST -> RE2 full-match regex body, with ``inter`` weakened to
     union — the result matches a SUPERSET of the AST's language (exact
     when the AST has no intersection). Emitted dialect = the same common
     subset regexp.py emits."""
@@ -551,5 +552,5 @@ def _to_regex(node):
 def superset_regex(ast):
     """Full-match regex body matching every term the AST's language
     contains (possibly more, when intersections were weakened). Sound as
-    a pushed-down pre-filter; pair with ``RegexpMatcher`` for exactness."""
+    a pre-filter; pair with ``RegexpMatcher`` for exactness."""
     return _to_regex(ast)

@@ -134,28 +134,16 @@ def expand_complex_phrase(q: ComplexPhraseQuery, searcher) -> Query:
     (MultiPhraseQuery scoring == the reference's SpanNear(0, true) over
     the expanded alternatives on single-position spans); slop>0 keeps a
     ComplexPhraseQuery with literal slots for the span matcher."""
-    import pyspark.sql.functions as F
-
     slots: list[tuple[str, ...]] = []
     for sl in q.slots:
         if isinstance(sl, tuple):
             slots.append(sl)
             continue
-        if isinstance(sl, PrefixQuery):
+        if isinstance(sl, (PrefixQuery, WildcardQuery)):
             terms = searcher._dict_terms(sl, MAX_EXPANSIONS + 1)
-        elif isinstance(sl, WildcardQuery):
-            terms = [r["term"] for r in (
-                searcher.term_dict.filter(searcher._multi_term_cond(sl))
-                .select("term").orderBy("term")
-                .limit(MAX_EXPANSIONS + 1).collect())]
         elif isinstance(sl, FuzzyQuery):
-            tlen = len(sl.term)
-            cand = searcher.term_dict.filter(
-                (F.length("term") >= tlen - sl.max_edits)
-                & (F.length("term") <= tlen + sl.max_edits))
-            cond = F.levenshtein(F.col("term"), F.lit(sl.term)) \
-                <= sl.max_edits
-            rows = (cand.filter(cond).select("term").orderBy("term")
+            rows = (searcher._fuzzy_candidates(sl.term, sl.max_edits)
+                    .select("term").orderBy("term")
                     .limit(MAX_EXPANSIONS + 1).collect())
             slots.append(tuple(r["term"] for r in rows[:MAX_EXPANSIONS]))
             if len(rows) > MAX_EXPANSIONS:

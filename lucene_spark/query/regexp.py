@@ -1,4 +1,4 @@
-"""Lucene ``RegExp`` syntax -> dual-dialect (Java regex / RE2) translation.
+"""Lucene ``RegExp`` syntax -> RE2 regex translation.
 
 The reference's RegexpQuery parses its own regular-expression syntax
 (``core/util/automaton/RegExp.java:354``, the dk.brics grammar), which
@@ -29,17 +29,22 @@ pattern is passed through verbatim:
 ``translate_regexp(pattern)`` parses the full grammar (flags = RegExp.ALL,
 the RegexpQuery default) and returns a CONJUNCTION of full-match regex
 bodies — a list because top-level intersection maps to "term matches ALL
-of these", which both Spark ``rlike`` and DuckDB ``regexp_full_match`` can
-evaluate without lookahead (RE2 has none). Intersection nested anywhere
-other than the top level has no lookahead-free regex form and raises
-``UnsupportedRegexpError`` with a clear message (the one documented
-divergence). ``<identifier>`` named automata raise, matching the
-reference's behavior with no AutomatonProvider.
+of these", which RE2 evaluates without lookahead (it has none). The engine
+runs the bodies in one dialect, RE2: pyarrow's ``match_substring_regex``
+in the RegexpQuery term rule (``search._term_rule``, on the driver and
+inside Spark alike) and DuckDB's ``regexp_full_match`` in the oracle.
+Intersection nested anywhere other than the top level has no
+lookahead-free regex form and raises ``UnsupportedRegexpError`` with a
+clear message; the term rule then takes the derivative automaton
+(``query/automaton.py``) instead. ``<identifier>`` named automata raise,
+matching the reference's behavior with no AutomatonProvider.
 
-Emitted syntax is restricted to the Java-regex/RE2 common subset:
-non-capturing groups, ``{n,m}``, alternation, and ``[\\x{hhhh}-...]``
-classes built from explicit code-point ranges (never raw user class text,
-so class-syntax dialect differences cannot leak through). ``.`` is kept as
+Emitted syntax is also valid Java regex — non-capturing groups,
+``{n,m}``, alternation, and ``[\\x{hhhh}-...]`` classes built from explicit
+code-point ranges (never raw user class text, so class-syntax dialect
+differences cannot leak through) — because one caller outside term
+expansion, the completion suggester (``operators/suggesters.py``
+``suggest_regex``), matches a body with Spark ``rlike``. ``.`` is kept as
 ``.``: analyzer terms never contain a newline, the one character where the
 dialects' ``.`` differ.
 """
@@ -334,8 +339,8 @@ class _Parser:
 
 
 def translate_regexp(pattern: str) -> list[str]:
-    """Lucene RegExp -> list of full-match regex bodies (Java/RE2 common
-    subset) whose CONJUNCTION is the pattern's language. Raises
+    """Lucene RegExp -> list of full-match RE2 regex bodies (valid Java
+    regex too) whose CONJUNCTION is the pattern's language. Raises
     ``UnsupportedRegexpError`` for nested intersection / named automata,
     plain ``ValueError`` for syntax errors (same cases the reference
     rejects)."""

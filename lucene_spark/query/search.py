@@ -30,11 +30,12 @@ Physical plan (the part that must survive 100 TB):
     Boolean queries skip Spark entirely: the same blocks are read, decoded,
     scored and combined on the driver (``query/local.py``), with identical
     results and no job.
-  - Prefix, TermRange and TermInSet queries expand from a driver-side walk
-    of the sorted term_dict (``_dict_terms``, the reference's in-process
-    ``MultiTermQuery`` rewrite) with no job; a bare one whose expansion is
-    that small runs as its OR on the driver too. Larger bare multi-term
-    queries keep the unbounded postings-join expansion.
+  - Prefix, TermRange, TermInSet, Wildcard and Regexp queries expand from
+    a driver-side walk of the sorted term_dict (``_dict_terms``, the
+    reference's in-process ``MultiTermQuery`` rewrite) with no job; a bare
+    one whose expansion is that small runs as its OR on the driver too.
+    Larger bare multi-term queries keep the unbounded postings-join
+    expansion, which selects its terms with the same rule (``_term_rule``).
 
 Every Lucene pruning trick being score-safe also means: this plan's results
 are *identical* at any parallelism, which is what makes the N -> 4N scaling
@@ -54,7 +55,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucene_spark.functions import bm25
-from lucene_spark.index.build import collection_stats, load_manifest
+from lucene_spark.index.build import (
+    POSTINGS_SCHEMA, collection_stats, load_manifest,
+)
 from lucene_spark.index.merge import (
     read_term_dict, scan_term_dict, term_bucket_of,
 )
@@ -192,6 +195,126 @@ class _Clause:
     weight: np.float32
 
 
+#: the multi-term queries whose terms ``_term_rule`` selects
+_MULTI_TERM = (PrefixQuery, TermRangeQuery, TermInSetQuery, WildcardQuery,
+               RegexpQuery)
+
+
+@dataclass(frozen=True)
+class _TermRule:
+    """The terms one multi-term query matches — the analog of the
+    reference's walk of the terms dictionary with the query's
+    CompiledAutomaton (``Terms.intersect``, ``core/index/Terms.java:60``).
+
+    ``bounds`` is a superset over the sorted term column (a range, and a
+    TermInSet's own terms) that prunes parquet row groups, on the driver
+    and in Spark scans alike. ``regexes`` (RE2 whole-term patterns, all
+    must match, evaluated by pyarrow) and ``check`` (a Regexp pattern with
+    a nested intersection, decided by ``automaton.RegexpMatcher``) narrow
+    it to the exact set; ``select`` applies all three."""
+    lower: str | None = None
+    include_lower: bool = True
+    upper: str | None = None
+    include_upper: bool = True
+    terms: tuple[str, ...] | None = None
+    regexes: tuple[str, ...] = ()
+    check: str | None = None
+
+    def bounds(self, term, cond):
+        """``cond`` AND the pruning superset over ``term``: a pyarrow field
+        or a Spark column, which share these operators. Arrow and Spark
+        both compare strings by UTF-8 bytes (code point order)."""
+        if self.lower is not None:
+            cond = cond & (term >= self.lower if self.include_lower
+                           else term > self.lower)
+        if self.upper is not None:
+            cond = cond & (term <= self.upper if self.include_upper
+                           else term < self.upper)
+        if self.terms is not None:
+            cond = cond & term.isin(list(self.terms))
+        return cond
+
+    def expression(self):
+        """The exact rule but ``check``, as one pyarrow expression."""
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        term = ds.field("term")
+        cond = self.bounds(term, pc.scalar(True))
+        for rx in self.regexes:
+            cond = cond & pc.match_substring_regex(term, pattern=rx)
+        return cond
+
+    def select(self, batches):
+        """The rows of Arrow record ``batches`` (a ``term`` column among
+        others) whose term the rule matches, as record batches."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        expr = self.expression()
+        if self.check is not None:
+            from lucene_spark.query.automaton import RegexpMatcher
+
+            matcher = RegexpMatcher(self.check)
+        for b in batches:
+            t = ds.Scanner.from_batches([b], schema=b.schema, filter=expr,
+                                        use_threads=False).to_table()
+            if self.check is not None and t.num_rows:
+                t = t.filter(pa.array([matcher.matches(x) for x in
+                                       t.column("term").to_pylist()]))
+            if t.num_rows:
+                yield from t.combine_chunks().to_batches()
+
+
+def _prefix_rule(prefix: str, **kw) -> _TermRule:
+    """The terms starting with ``prefix``: every one sorts at or above it
+    and below the prefix with its last code point (past any trailing
+    U+10FFFF) incremented, and every term in that range starts with it."""
+    stem = prefix.rstrip("\U0010ffff")
+    upper = None
+    if stem:
+        nxt = ord(stem[-1]) + 1
+        upper = stem[:-1] + chr(0xE000 if 0xD800 <= nxt < 0xE000 else nxt)
+    return _TermRule(prefix or None, True, upper, False, **kw)
+
+
+def _term_rule(q: Query) -> _TermRule:
+    """The one term rule of a Prefix, TermRange, TermInSet, Wildcard or
+    Regexp query, in RE2 (the dialect ``query/regexp.py`` emits and the
+    DuckDB oracle runs). A Wildcard's literal prefix bounds its range; a
+    Regexp ANDs its top-level intersection operands, and one with a nested
+    intersection matches ``automaton.superset_regex`` and then its exact
+    ``RegexpMatcher`` check."""
+    if isinstance(q, PrefixQuery):
+        return _prefix_rule(q.prefix)
+    if isinstance(q, WildcardQuery):
+        rx, lit = wildcard_regex(q.pattern)
+        return _prefix_rule(lit, regexes=(rx + r"\z",))
+    if isinstance(q, RegexpQuery):
+        from lucene_spark.query.automaton import parse_ast, superset_regex
+        from lucene_spark.query.regexp import (
+            UnsupportedRegexpError, translate_regexp,
+        )
+
+        check = None
+        try:
+            bodies = translate_regexp(q.pattern)
+        except UnsupportedRegexpError:
+            # nested intersection: parse_ast accepts it (and raises the
+            # same error for named automata and oversized repetitions)
+            bodies, check = [superset_regex(parse_ast(q.pattern))], q.pattern
+        return _TermRule(regexes=tuple(f"^(?:{b})\\z" for b in bodies),
+                         check=check)
+    if isinstance(q, TermRangeQuery):
+        return _TermRule(q.lower, q.include_lower, q.upper, q.include_upper)
+    if isinstance(q, TermInSetQuery):
+        uniq = sorted(set(q.terms))
+        if not uniq:
+            return _TermRule(upper="", include_upper=False)  # no term < ""
+        return _TermRule(uniq[0], True, uniq[-1], True, tuple(uniq))
+    raise TypeError(f"no dictionary walk for {type(q).__name__}")
+
+
 class IndexSearcher:
     """Searcher over a built+merged index directory."""
 
@@ -246,8 +369,10 @@ class IndexSearcher:
         #: readers see exactly the manifest's commit point (the
         #: SegmentInfos contract; segment ids are assigned sequentially)
         self.max_segment_id = max(int(k) for k in manifest["completed"])
+        # an explicit schema: inferring it runs a Spark job
         self.postings = (
-            spark.read.parquet(os.path.join(index_dir, "postings"))
+            spark.read.schema(POSTINGS_SCHEMA + ", term_bucket int")
+            .parquet(os.path.join(index_dir, "postings"))
             .filter(F.col("segment_id") <= self.max_segment_id))
         #: the term statistics of the committed segments
         self.term_dict = read_term_dict(spark, index_dir, manifest)
@@ -362,52 +487,19 @@ class IndexSearcher:
         return out
 
     def _dict_terms(self, q: Query, limit: int) -> list[str]:
-        """The sorted committed terms a PrefixQuery, TermRangeQuery or
-        TermInSetQuery matches, at most ``limit`` of them (the first in
-        term order) — the reference's in-process term-dictionary walk
-        (``MultiTermQuery.java``, ``PrefixQuery.java:29``), with no Spark
-        job. One driver-side pyarrow scan (``merge.scan_term_dict``, as
-        ``_term_dict_rows`` reads): a range conjunct prunes the sorted
-        files' row groups, the exact predicate (``starts_with``, the
-        bounds with their inclusive flags, ``isin``) selects the terms,
-        and record batches stream, so the driver holds about ``limit``
-        terms and one batch. Arrow and Spark both compare strings by UTF-8
-        bytes, so this is the term set Spark's filter returns.
-
-        Wildcard, Regexp and Fuzzy expansions stay Spark filters: their
-        predicates are Java regexes and ``levenshtein``, whose semantics
-        the driver would have to re-implement."""
-        import pyarrow.compute as pc
-        import pyarrow.dataset as ds
-
-        term = ds.field("term")
-        if isinstance(q, PrefixQuery):
-            cond = (term >= q.prefix) & pc.starts_with(term, q.prefix)
-            # every term with the prefix sorts below the prefix with its
-            # last code point (past any trailing U+10FFFF) incremented
-            stem = q.prefix.rstrip("\U0010ffff")
-            if stem:
-                nxt = ord(stem[-1]) + 1
-                nxt = 0xE000 if 0xD800 <= nxt < 0xE000 else nxt
-                cond = cond & (term < stem[:-1] + chr(nxt))
-        elif isinstance(q, TermRangeQuery):
-            cond = pc.scalar(True)
-            if q.lower is not None:
-                cond = cond & (term >= q.lower if q.include_lower
-                               else term > q.lower)
-            if q.upper is not None:
-                cond = cond & (term <= q.upper if q.include_upper
-                               else term < q.upper)
-        elif isinstance(q, TermInSetQuery):
-            uniq = sorted(set(q.terms))
-            if not uniq:
-                return []
-            cond = (term >= uniq[0]) & (term <= uniq[-1]) & term.isin(uniq)
-        else:
-            raise TypeError(f"no dictionary walk for {type(q).__name__}")
+        """The sorted committed terms a Prefix, TermRange, TermInSet,
+        Wildcard or Regexp query matches, at most ``limit`` of them (the
+        first in term order) — the reference's in-process term-dictionary
+        walk (``MultiTermQuery.java``), with no Spark job. One driver-side
+        pyarrow scan (``merge.scan_term_dict``, as ``_term_dict_rows``
+        reads) evaluates the query's ``_term_rule``: its bounds prune the
+        sorted files' row groups, its RE2 patterns and automaton check
+        select the terms, and record batches stream, so the driver holds
+        about ``limit`` terms and one batch."""
+        rule = _term_rule(q)
         out: list[str] = []
-        for batch in scan_term_dict(self.index_dir, self.manifest, cond,
-                                    ["term"]):
+        for batch in rule.select(scan_term_dict(
+                self.index_dir, self.manifest, rule.expression(), ["term"])):
             out += batch.column(0).to_pylist()
             if len(out) > limit:
                 out = sorted(out)[:limit]
@@ -478,26 +570,26 @@ class IndexSearcher:
         the term-at-a-time scan. Both routes return identical rows.
 
         Bare multi-term queries (Prefix/Wildcard/Regexp/TermRange/TermInSet,
-        optionally Boost-wrapped) never raise TooManyClauses. A Prefix,
-        TermRange or TermInSet query is first expanded on the driver
-        (``_dict_terms``); when its terms fit ``max_clause_count`` and the
+        optionally Boost-wrapped) never raise TooManyClauses. Each is
+        first expanded on the driver (``_dict_terms``, the query's one
+        term rule); when its terms fit ``max_clause_count`` and the
         driver-local bound, their OR runs on the driver-local route
         (``_multi_term_rows``). Every other one runs through the JOIN-based
-        expansion (``_scored_expansion_join``): the term predicate is
-        pushed into the postings scan and the term statistics alike, and
-        no term list ever reaches the driver — result-identical to the
-        SHOULD-of-TermQueries rewrite but unbounded and fully
-        distributed. Every route weights terms with the statistics of this
-        searcher's commit point (``merge.read_term_dict``): a staged or
-        crashed update changes no score."""
+        expansion (``_scored_expansion_join``): the same rule selects the
+        terms inside Spark and no term list ever reaches the driver —
+        result-identical to the SHOULD-of-TermQueries rewrite but
+        unbounded and fully distributed. Every route weights terms with
+        the statistics of this searcher's commit point
+        (``merge.read_term_dict``): a staged or crashed update changes no
+        score."""
         q = rewrite_fixpoint(query)
-        jp = self._as_multi_term_cond(q)
-        if jp is not None:
-            rows = self._multi_term_rows(q)
+        mt = self._bare_multi_term(q)
+        if mt is not None:
+            rows = self._multi_term_rows(*mt)
             if rows is not None:
                 return local.hits_frame(
                     self.spark, *local.top_k(*local.combine_clauses(*rows), k))
-            scored = self._live(self._scored_expansion_join(*jp))
+            scored = self._live(self._scored_expansion_join(*mt))
             return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         q = self._expand_multi_term(q)
         q = rewrite_fixpoint(q)
@@ -2113,18 +2205,18 @@ class IndexSearcher:
         """EVERY matching (doc_id, score float) — no top-k cut. The same
         planning as ``search`` minus the collector: bare multi-term queries
         take the driver-local route when small (``_multi_term_rows``, a
-        local frame of every match), else the pushed-down expansion join;
+        local frame of every match), else the expansion join;
         everything else the exhaustive executor (the co-located layout is
         a top-k router, irrelevant when all hits flow into a downstream
         aggregate)."""
         q = rewrite_fixpoint(query)
-        jp = self._as_multi_term_cond(q)
-        if jp is not None:
-            rows = self._multi_term_rows(q)
+        mt = self._bare_multi_term(q)
+        if mt is not None:
+            rows = self._multi_term_rows(*mt)
             if rows is not None:
                 return local.hits_frame(self.spark,
                                         *local.combine_clauses(*rows))
-            return self._live(self._scored_expansion_join(*jp))
+            return self._live(self._scored_expansion_join(*mt))
         q = rewrite_fixpoint(self._expand_multi_term(q))
         return self._live(self._execute(q, np.float32(1.0)))
 
@@ -2252,25 +2344,17 @@ class IndexSearcher:
     ):
         """Multi-term interval source (``Intervals.prefix`` /
         ``Intervals.wildcard``, ``Intervals.java:64,158-170``): expand the
-        pattern against the term dictionary (the driver-side walk
-        ``_dict_terms`` for prefixes, a Spark filter for wildcards) into
+        pattern with the driver-side dictionary walk (``_dict_terms``) into
         an OR over term sources, capped at
         ``max_expansions`` = the reference's DEFAULT_MAX_EXPANSIONS — more
         matches raise, exactly the reference's IllegalStateException
-        contract. The collected expansion is at most 128 strings (driver-
-        bounded by the cap, unlike a naive collect)."""
+        contract. The walk holds at most ``max_expansions + 1`` terms."""
         from lucene_spark.query.intervals import or_
 
-        if kind == "prefix":
-            terms = self._dict_terms(PrefixQuery(pattern), max_expansions + 1)
-        elif kind == "wildcard":
-            terms = [r["term"] for r in (
-                self.term_dict.filter(
-                    self._multi_term_cond(WildcardQuery(pattern)))
-                .select("term").orderBy("term")
-                .limit(max_expansions + 1).collect())]
-        else:
+        if kind not in ("prefix", "wildcard"):
             raise ValueError(f"unknown expansion kind {kind!r}")
+        q = PrefixQuery(pattern) if kind == "prefix" else WildcardQuery(pattern)
+        terms = self._dict_terms(q, max_expansions + 1)
         if len(terms) > max_expansions:
             raise TooManyClauses(
                 f"{kind} {pattern!r} expands to more than {max_expansions} terms"
@@ -2281,18 +2365,13 @@ class IndexSearcher:
         self, term: str, max_edits: int = 2, max_expansions: int = 128
     ):
         """``Intervals.fuzzyTerm`` analog: OR over dictionary terms within
-        ``max_edits`` Levenshtein edits (length window pre-filter + JVM
-        levenshtein, the FuzzyQuery expansion's plan), capped at
-        ``max_expansions`` like the other multi-term interval sources."""
+        ``max_edits`` Levenshtein edits (``_fuzzy_candidates``, the
+        FuzzyQuery expansion's scan), capped at ``max_expansions`` like
+        the other multi-term interval sources."""
         from lucene_spark.query.intervals import or_
 
-        tl = F.lit(term)
-        cond = (
-            (F.abs(F.length("term") - F.lit(len(term))) <= max_edits)
-            & (F.levenshtein("term", tl) <= max_edits)
-        )
         rows = (
-            self.term_dict.filter(cond)
+            self._fuzzy_candidates(term, max_edits)
             .select("term")
             .orderBy("term")
             .limit(max_expansions + 1)
@@ -2750,15 +2829,12 @@ class IndexSearcher:
                 slots.append((p,))
                 continue
             budget = remaining // remaining_multi
-            cond = self._multi_term_cond(p)
-            if cond is None:
+            if not isinstance(p, _MULTI_TERM):
                 raise TypeError(
                     f"{type(p).__name__} is not a multi-term position")
-            rows = (self.term_dict.filter(cond).select("term")
-                    .orderBy("term").limit(max(budget, 0)).collect())
-            if not rows:
+            terms = self._dict_terms(p, max(budget, 0))
+            if not terms:
                 return self._empty_hits()
-            terms = sorted(r[0] for r in rows)
             remaining -= len(terms)
             remaining_multi -= 1
             slots.append(tuple(terms))
@@ -2970,133 +3046,28 @@ class IndexSearcher:
 
     # ------------------------------------------------------------ expansion
 
-    @staticmethod
-    def _multi_term_cond(q: Query):
-        """Term-column predicate for a multi-term query, or None. The same
-        expression serves the term_dict scan (collect rewrite) and the
-        postings scan (join path) — prefix/range push down to parquet
-        row-group min/max on the sorted term column."""
-        if isinstance(q, PrefixQuery):
-            return F.col("term").startswith(q.prefix)
-        if isinstance(q, WildcardQuery):
-            rx, lit = wildcard_regex(q.pattern)
-            cond = F.col("term").rlike(rx)
-            # the literal prefix prunes the sorted term column's row groups
-            return F.col("term").startswith(lit) & cond if lit else cond
-        if isinstance(q, RegexpQuery):
-            # Lucene RegExp SYNTAX (not Java regex): translate the grammar
-            # (predefined classes, <n-m> intervals, quoted strings, '#'/'@',
-            # iterative quantifiers) and AND the top-level intersection
-            # operands; anchored = whole-term match (query/regexp.py)
-            from lucene_spark.query.regexp import translate_regexp
-
-            pats = translate_regexp(q.pattern)
-            cond = F.col("term").rlike("^(?:" + pats[0] + ")$")
-            for p in pats[1:]:
-                cond = cond & F.col("term").rlike("^(?:" + p + ")$")
-            return cond
-        if isinstance(q, TermRangeQuery):
-            cond = F.lit(True)
-            if q.lower is not None:
-                cond = cond & (
-                    F.col("term") >= q.lower if q.include_lower else F.col("term") > q.lower
-                )
-            if q.upper is not None:
-                cond = cond & (
-                    F.col("term") <= q.upper if q.include_upper else F.col("term") < q.upper
-                )
-            return cond
-        if isinstance(q, TermInSetQuery):
-            return F.col("term").isin(list(q.terms))
-        return None
-
-    @staticmethod
-    def _regexp_plan(pattern: str):
-        """("regex", [bodies]) when the pattern has a lookahead-free regex
-        translation, ("automaton", ast) when it needs the derivative
-        automaton (nested intersection — ``query/automaton.py``). Named
-        automata / syntax errors raise from either parser, identically."""
-        from lucene_spark.query.automaton import parse_ast
-        from lucene_spark.query.regexp import (
-            UnsupportedRegexpError, translate_regexp,
-        )
-
-        try:
-            return ("regex", translate_regexp(pattern))
-        except UnsupportedRegexpError:
-            # nested intersection — parse_ast ACCEPTS it (and re-raises
-            # the same error for named automata / oversized repetitions)
-            return ("automaton", parse_ast(pattern))
-
-    def _automaton_term_filter(self, df: DataFrame, pattern: str) -> DataFrame:
-        """Exact automaton membership over a (small, distinct-term) frame —
-        the ``Terms.intersect`` analog: the reference walks the term dict
-        with a CompiledAutomaton (``core/index/Terms.java:60``); here the
-        dictionary batch streams through the lazy derivative DFA in one
-        Arrow stage. Never applied to the corpus row path."""
-        schema = df.schema
-
-        def verify(batches):
-            from lucene_spark.query.automaton import RegexpMatcher
-
-            m = RegexpMatcher(pattern)
-            for pdf in batches:
-                mask = np.fromiter(
-                    (m.matches(t) for t in pdf["term"]), bool, len(pdf)
-                )
-                out = pdf[mask]
-                if len(out):
-                    yield out
-
-        return df.mapInPandas(verify, schema=schema)
-
-    def _as_multi_term_cond(self, q: Query):
-        """(cond, boost, verify_pattern) when q is a bare (possibly
-        Boost-wrapped) multi-term query eligible for the join-based
-        expansion, else None. ``verify_pattern`` is non-None only for
-        Regexp patterns needing the automaton layer: ``cond`` is then a
-        sound SUPERSET pushdown (every ``&`` weakened to ``|``) and the
-        per-term frame is re-verified exactly before scoring."""
+    def _bare_multi_term(self, q: Query) -> tuple[Query, np.float32] | None:
+        """(query, boost) when q is a bare (optionally Boost-wrapped)
+        Prefix, TermRange, TermInSet, Wildcard or Regexp query, else None.
+        Stats-based similarities get None too: they need each expanded
+        term's totalTermFreq, which block metadata alone cannot supply, so
+        they take the driver-bounded SHOULD rewrite (TooManyClauses-capped,
+        full TermStatistics per clause)."""
         if hasattr(self.sim, "term_weight"):
-            # stats-based similarities need each expanded term's
-            # totalTermFreq, which block metadata alone cannot supply —
-            # route through the driver-bounded SHOULD rewrite instead
-            # (TooManyClauses-capped, full TermStatistics per clause)
             return None
         boost = np.float32(1.0)
         if isinstance(q, BoostQuery) and not isinstance(q.query, BoostQuery):
-            inner = q.query
-            boost = np.float32(q.boost)
-        else:
-            inner = q
-        if isinstance(inner, RegexpQuery):
-            kind, payload = self._regexp_plan(inner.pattern)
-            if kind == "automaton":
-                from lucene_spark.query.automaton import superset_regex
+            q, boost = q.query, np.float32(q.boost)
+        return (q, boost) if isinstance(q, _MULTI_TERM) else None
 
-                cond = F.col("term").rlike(
-                    "^(?:" + superset_regex(payload) + ")$"
-                )
-                return cond, boost, inner.pattern
-        cond = self._multi_term_cond(inner)
-        if cond is None:
-            return None
-        return cond, boost, None
-
-    def _multi_term_rows(self, q: Query) -> tuple | None:
-        """``local.combine_clauses`` arguments of a bare (optionally
-        Boost-wrapped) Prefix, TermRange or TermInSet query run as the OR
-        of its ``_dict_terms`` expansion on the driver-local route
-        (``_local_rows``), with df from the committed term statistics as
-        term queries and the join path take it. None — run the join path
-        instead — for other query types, when the expansion exceeds
-        ``max_clause_count``, or when ``_local_rows`` declines."""
-        boost = np.float32(q.boost if isinstance(q, BoostQuery) else 1.0)
-        inner = q.query if isinstance(q, BoostQuery) else q
-        if not isinstance(inner, (PrefixQuery, TermRangeQuery,
-                                  TermInSetQuery)):
-            return None
-        terms = self._dict_terms(inner, self.max_clause_count + 1)
+    def _multi_term_rows(self, q: Query, boost: np.float32) -> tuple | None:
+        """``local.combine_clauses`` arguments of a bare multi-term query
+        run as the OR of its ``_dict_terms`` expansion on the driver-local
+        route (``_local_rows``), with df from the committed term statistics
+        as term queries and the join path take it. None — run the join
+        path instead — when the expansion exceeds ``max_clause_count`` or
+        when ``_local_rows`` declines."""
+        terms = self._dict_terms(q, self.max_clause_count + 1)
         if len(terms) > self.max_clause_count:
             return None
         flat = BooleanQuery(should=[TermQuery(t) for t in terms],
@@ -3104,32 +3075,36 @@ class IndexSearcher:
         rows = self._local_rows({"": (flat, boost)})
         return None if rows is None else rows[""]
 
-    def _scored_expansion_join(
-        self, cond, boost: np.float32, verify_pattern: str | None = None
-    ) -> DataFrame:
+    def _scored_expansion_join(self, q: Query, boost: np.float32
+                               ) -> DataFrame:
         """Score a multi-term expansion WITHOUT materializing terms on the
         driver (VERDICT r1 item 3; reference contrast: Lucene's scoring
         rewrite materializes clauses and trips TooManyClauses,
         ``IndexSearcher.java:898`` — the join path is the distributed analog
         of its filter rewrites, which have no cap).
 
-        Plan: push ``cond`` into the postings scan (row-group pruning on the
-        sorted term column for prefix/range); per-term df from the committed
-        term statistics under the same predicate (no postings decode);
-        broadcast-join df back; decode+score each block with its term's
-        weight (idf computed in the UDF with the exact float32 op order);
-        one groupBy(doc_id) sums clause scores in double and casts to f32 —
-        bit-identical to the SHOULD-of-TermQueries rewrite."""
-        blocks = self.postings.filter(cond).select(
+        Plan: the query's ``_term_rule`` bounds prune the postings scan and
+        the committed term statistics alike (row groups of the sorted term
+        column); when the rule has regexes, one ``mapInArrow`` applies the
+        whole rule — the predicate ``_dict_terms`` evaluates on the driver
+        — to the statistics rows; they broadcast-join their df onto the
+        blocks, so blocks of non-matching terms drop out; decode+score
+        each block with its term's weight (idf computed in the UDF with
+        the exact float32 op order); one groupBy(doc_id) sums clause
+        scores in double and casts to f32 — bit-identical to the
+        SHOULD-of-TermQueries rewrite."""
+        rule = _term_rule(q)
+        prune = rule.bounds(F.col("term"), F.lit(True))
+        blocks = self.postings.filter(prune).select(
             "term", "num_docs", "first_doc", "data"
         )
-        df_by_term = self.term_dict.filter(cond).select(
+        df_by_term = self.term_dict.filter(prune).select(
             "term", F.col("doc_freq").alias("df"))
-        if verify_pattern is not None:
-            # cond was a superset pushdown; exact automaton verify on the
-            # distinct-term frame (vocabulary-sized) — the subsequent inner
-            # join drops the non-matching terms' blocks
-            df_by_term = self._automaton_term_filter(df_by_term, verify_pattern)
+        if rule.regexes:
+            # the bounds are only a superset (a Prefix, TermRange or
+            # TermInSet has no regex: its bounds are its rule)
+            df_by_term = df_by_term.mapInArrow(rule.select,
+                                               "term string, df long")
         scan = (
             blocks.join(F.broadcast(df_by_term), "term")
             .select("num_docs", "first_doc", "data", "df")
@@ -3263,44 +3238,38 @@ class IndexSearcher:
         return self.search(BooleanQuery(should=clauses), k)
 
     def _expand_multi_term(self, q: Query) -> Query:
-        """MultiTermQuery rewrite against term_dict with predicate pushdown
-        (PrefixQuery/WildcardQuery/TermRangeQuery/TermInSetQuery ->
-        OR-of-terms; MultiTermQuery.java rewrite framework analog). The
-        driver-side term list is bounded by ``max_clause_count``
-        (TooManyClauses, ``IndexSearcher.java:80,898``). Prefix, TermRange
-        and TermInSet terms come from the driver-side dictionary walk
-        (``_dict_terms``, no Spark job); Wildcard and Regexp terms from a
-        capped Spark collect of the filtered term_dict."""
-        verify_pattern = None
-        if isinstance(q, RegexpQuery):
-            kind, payload = self._regexp_plan(q.pattern)
-            if kind == "automaton":
-                # nested intersection: superset pushdown on the dictionary
-                # scan + exact derivative-DFA verify (distributed, before
-                # the capped collect)
-                from lucene_spark.query.automaton import superset_regex
-
-                cond = F.col("term").rlike(
-                    "^(?:" + superset_regex(payload) + ")$"
+        """MultiTermQuery rewrite against the term dictionary
+        (Prefix/Wildcard/Regexp/TermRange/TermInSet -> OR-of-terms, the
+        MultiTermQuery.java rewrite framework analog; Fuzzy ->
+        ``_expand_fuzzy``), through Boost, ConstantScore, DisMax and Boolean
+        nodes. The terms come from the driver-side dictionary walk
+        (``_dict_terms``, no Spark job), bounded by ``max_clause_count``
+        (TooManyClauses, ``IndexSearcher.java:80,898``)."""
+        if isinstance(q, _MULTI_TERM):
+            cap = self.max_clause_count
+            terms = self._dict_terms(q, cap + 1)
+            if len(terms) > cap:
+                raise TooManyClauses(
+                    f"{type(q).__name__} expands to more than {cap} terms "
+                    "(max_clause_count); use the join-based search() path"
                 )
-                verify_pattern = q.pattern
-            else:
-                cond = self._multi_term_cond(q)
-        else:
-            cond = self._multi_term_cond(q)
-        if cond is not None:
-            pass
-        elif isinstance(q, FuzzyQuery):
+            if not terms:
+                return MatchNoDocsQuery()
+            if len(terms) == 1:
+                return TermQuery(terms[0])
+            return BooleanQuery(should=[TermQuery(t) for t in terms],
+                                min_should_match=1)
+        if isinstance(q, FuzzyQuery):
             return self._expand_fuzzy(q)
-        elif isinstance(q, BoostQuery):
+        if isinstance(q, BoostQuery):
             return BoostQuery(self._expand_multi_term(q.query), q.boost)
-        elif isinstance(q, ConstantScoreQuery):
+        if isinstance(q, ConstantScoreQuery):
             return ConstantScoreQuery(self._expand_multi_term(q.query))
-        elif isinstance(q, DisjunctionMaxQuery):
+        if isinstance(q, DisjunctionMaxQuery):
             return DisjunctionMaxQuery(
                 tuple(self._expand_multi_term(c) for c in q.disjuncts), q.tie_breaker
             )
-        elif isinstance(q, BooleanQuery):
+        if isinstance(q, BooleanQuery):
             return BooleanQuery(
                 [self._expand_multi_term(c) for c in q.must],
                 [self._expand_multi_term(c) for c in q.should],
@@ -3308,49 +3277,40 @@ class IndexSearcher:
                 [self._expand_multi_term(c) for c in q.must_not],
                 q.min_should_match,
             )
-        else:
-            return q
-        cap = self.max_clause_count
-        if isinstance(q, (PrefixQuery, TermRangeQuery, TermInSetQuery)):
-            terms = self._dict_terms(q, cap + 1)
-        else:
-            matched = self.term_dict.filter(cond).select("term")
-            if verify_pattern is not None:
-                matched = self._automaton_term_filter(matched, verify_pattern)
-            terms = sorted(r[0] for r in matched.limit(cap + 1).collect())
-        if len(terms) > cap:
-            raise TooManyClauses(
-                f"{type(q).__name__} expands to more than {cap} terms "
-                "(max_clause_count); use the join-based search() path"
-            )
-        if not terms:
-            return MatchNoDocsQuery()
-        if len(terms) == 1:
-            return TermQuery(terms[0])
-        return BooleanQuery(should=[TermQuery(t) for t in terms], min_should_match=1)
+        return q
+
+    def _fuzzy_candidates(self, term: str, max_edits: int,
+                          prefix: str = "") -> DataFrame:
+        """DF(term, doc_freq, ed): the dictionary terms that start with
+        ``prefix`` and lie within ``max_edits`` classic Levenshtein edits
+        (``ed``) of ``term`` — a length-window pre-filter, then the JVM
+        ``levenshtein``. Every Fuzzy expansion scans through it and keeps
+        its own order, cap and error."""
+        cand = self.term_dict
+        if prefix:
+            cand = cand.filter(F.col("term").startswith(prefix))
+        return (
+            cand.filter(F.abs(F.length("term") - len(term)) <= max_edits)
+            .select("term", "doc_freq",
+                    F.levenshtein("term", F.lit(term)).alias("ed"))
+            .filter(F.col("ed") <= max_edits)
+        )
 
     def _expand_fuzzy(self, q: FuzzyQuery) -> Query:
         """FuzzyQuery -> SHOULD of boosted terms within max_edits Levenshtein
-        (term_dict scan with prefix pushdown + JVM levenshtein), with the
+        (``_fuzzy_candidates``, with prefix pushdown), with the
         reference's df BLENDING (``TopTermsBlendedFreqScoringRewrite`` /
         ``BlendedTermQuery.java:47``): every expanded term's idf uses the
         MAX doc_freq across the expansion set, so a rare misspelling cannot
         outscore the common spelling it resembles."""
-        cand = self.term_dict.select("term", "doc_freq")
-        if q.prefix_length > 0:
-            cand = cand.filter(F.col("term").startswith(q.term[: q.prefix_length]))
-        # cheap length pre-filter, then exact edit distance (both JVM-side)
-        tlen = len(q.term)
-        cand = cand.filter(
-            (F.length("term") >= tlen - q.max_edits)
-            & (F.length("term") <= tlen + q.max_edits)
-        ).withColumn("ed", F.levenshtein(F.col("term"), F.lit(q.term)))
         rows = (
-            cand.filter(F.col("ed") <= q.max_edits)
+            self._fuzzy_candidates(q.term, q.max_edits,
+                                   q.term[: q.prefix_length])
             .withColumn(
                 "boost",
                 F.lit(1.0)
-                - F.col("ed") / F.least(F.length("term"), F.lit(tlen)).cast("double"),
+                - F.col("ed") / F.least(F.length("term"),
+                                        F.lit(len(q.term))).cast("double"),
             )
             .orderBy(F.desc("boost"), F.asc("term"))
             .limit(q.max_expansions)

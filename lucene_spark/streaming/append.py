@@ -25,6 +25,7 @@ Reference semantics mirrored (public Apache Lucene source):
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 import numpy as np
@@ -103,12 +104,12 @@ def stage_batch_segment(
     ).withColumn("shard_id", F.lit(next_sid))
     meta = assigned.groupBy("shard_id").applyInPandas(
         _make_segment_builder(
-            index_dir, {next_sid: doc_base}, config.analyzer, config.positions,
+            index_dir, {next_sid: doc_base},
             # appended docIDs are arrival-ordered (index_sort=None; the
             # sorted-search path sees ordered=False and falls back), but
             # offsets/payloads columns must match the existing artifacts or
             # the merged positions read schema-splits
-            None, config.offsets, config.payloads,
+            dataclasses.replace(config, index_sort=None),
         ),
         schema=SEGMENT_META_SCHEMA,
     )

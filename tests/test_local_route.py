@@ -22,8 +22,8 @@ from lucene_spark.index.deletes import soft_delete_docs
 from lucene_spark.index.merge import merge_index
 from lucene_spark.index.update import update_docs
 from lucene_spark.query.ast import (
-    BooleanQuery, BoostQuery, PrefixQuery, TermInSetQuery, TermQuery,
-    TermRangeQuery, rewrite_fixpoint,
+    BooleanQuery, BoostQuery, PrefixQuery, RegexpQuery, TermInSetQuery,
+    TermQuery, TermRangeQuery, WildcardQuery, rewrite_fixpoint,
 )
 from lucene_spark.query.multi import MultiIndexSearcher
 from lucene_spark.query.search import IndexSearcher
@@ -242,7 +242,11 @@ def test_search_many_local_route_equals_search(spark, built_index):
 
 def _multi_term_shapes(vocab: list[str]):
     """Bare Prefix, Boost(Prefix), TermRange (both bounds, open ends,
-    exclusive ends) and TermInSet (absent terms too) queries."""
+    exclusive ends), TermInSet (absent terms too), Wildcard (``?`` and
+    ``*``, a leading ``*``, Boost-wrapped) and Regexp (a top-level ``&``
+    with an ``<n-m>`` interval, a nested intersection) queries, each
+    matching some term. The last one, a Wildcard whose escaped ``*`` is a
+    literal star, matches none: no term holds one."""
     hot, mid = vocab[0], vocab[13]
     lo, hi = sorted((vocab[1], vocab[14]))
     return [
@@ -255,6 +259,12 @@ def _multi_term_shapes(vocab: list[str]):
         TermRangeQuery(None, lo),
         TermRangeQuery(hi, None, include_lower=False),
         TermInSetQuery((hot, mid, ABSENT, "aaaa-absent")),
+        WildcardQuery(mid[0] + "?" + mid[2:] + "*"),
+        WildcardQuery("*" + hot[-1]),
+        BoostQuery(WildcardQuery(hot[0] + "*"), 1.5),
+        RegexpQuery(f'("{hot}"|"{mid}")(<1-20>)?&"{hot[0]}".*'),
+        RegexpQuery(f'(("{hot}".*&.*"{hot[-1]}")|"{mid}")'),
+        WildcardQuery(hot[:2] + "\\*"),
     ]
 
 
@@ -270,7 +280,8 @@ def test_multi_term_local_route_matches_join_path(spark, built_index):
     rather than raising."""
     loc, spk = _pair(spark, built_index)
     vocab = _vocab(loc)
-    for q in _multi_term_shapes(vocab):
+    *shapes, none = _multi_term_shapes(vocab)
+    for q in shapes:
         assert not _is_local(spk.search(q, 10)), q
         for k in (3, 1000):
             hits = _assert_same(loc, spk, q, k)
@@ -279,8 +290,9 @@ def test_multi_term_local_route_matches_join_path(spark, built_index):
         assert _is_local(every), q
         assert _all_rows(every) == _all_rows(spk._scored_all(q)), q
         assert loc.count(q) == len(hits), q
+    assert _assert_same(loc, spk, none, 10) == [] and loc.count(none) == 0
     loc.max_clause_count = 8
-    for q in (PrefixQuery(""), PrefixQuery(vocab[0][:1])):
+    for q in (PrefixQuery(""), PrefixQuery(vocab[0][:1]), WildcardQuery("?*")):
         assert len(loc._dict_terms(q, 9)) > 8
         got = loc.search(q, 10)
         assert not _is_local(got), q
@@ -300,9 +312,11 @@ def test_multi_term_local_route_with_deletes(spark, deleted_index,
     dead = set(loc._tombstones().tolist())
     assert dead
     vocab = _vocab(loc)
-    for q in _multi_term_shapes(vocab) + [PrefixQuery("qqupd")]:
+    *shapes, none = _multi_term_shapes(vocab)
+    for q in shapes + [PrefixQuery("qqupd")]:
         hits = _assert_same(loc, spk, q, 1000)
         assert hits and not {d for d, _ in hits} & dead, q
+    assert _assert_same(loc, spk, none, 1000) == []
     assert _assert_same(loc, spk, PrefixQuery("qqstag"), 1000) == []
 
     loc, spk = _pair(spark, updated_index,

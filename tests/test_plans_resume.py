@@ -96,6 +96,33 @@ def test_aligned_plan_and_resume(spark, aligned_corpus, tmp_path_factory):
     assert check_index(spark, idx)["ok"]
 
 
+def test_aligned_build_keeps_offsets(spark, aligned_corpus, tmp_path_factory):
+    """The file-aligned build honours the whole IndexConfig, as the shuffle
+    build does: an offsets build stores each occurrence's char offsets
+    (``starts``/``ends`` beside ``positions``), and a config no build can
+    honour raises ValueError before any Spark job runs."""
+    import pyarrow.dataset as ds
+
+    from tests.test_term_stats import _jobs_of
+
+    root = tmp_path_factory.mktemp("aligned-offsets")
+    idx = str(root / "idx")
+    build_index_files(spark, aligned_corpus, idx, IndexConfig(
+        term_buckets=4, hot_term_df=64, positions=True, offsets=True))
+    cols = ds.dataset(os.path.join(idx, "positions_local"),
+                      format="parquet").schema.names
+    assert {"positions", "starts", "ends"} <= set(cols), cols
+    merge_index(spark, idx)
+    tv = IndexSearcher(spark, idx).term_vector(0, with_offsets=True).collect()
+    assert tv and all(len(r["starts"]) == r["freq"] for r in tv)
+
+    def bad():
+        with pytest.raises(ValueError, match="positions"):
+            build_index_files(spark, aligned_corpus, str(root / "bad"),
+                              IndexConfig(positions=False, offsets=True))
+    assert _jobs_of(spark, bad) == 0
+
+
 def test_misaligned_input_falls_back(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("misaligned")
     out = str(root / "corpus")

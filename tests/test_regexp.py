@@ -1,7 +1,8 @@
 """Lucene RegExp syntax translation (query/regexp.py): semantics pinned
-against the reference grammar (RegExp.java), evaluated on BOTH production
-dialects — DuckDB RE2 (regexp_full_match) and Java regex via Spark rlike —
-which must agree case by case."""
+against the reference grammar (RegExp.java), evaluated by every engine
+that runs the translation — RE2 in DuckDB (regexp_full_match, the
+oracle) and in pyarrow (the engine's term rule), and Java regex via Spark
+rlike (the completion suggester) — which must agree case by case."""
 
 from __future__ import annotations
 
@@ -56,6 +57,14 @@ CASES = [
 
 
 def test_translation_semantics_re2():
+    """The table through both RE2 engines: DuckDB's regexp_full_match on
+    the translated bodies (the oracle) and pyarrow's
+    ``match_substring_regex`` in the engine's term rule."""
+    import pyarrow as pa
+
+    from lucene_spark.query.ast import RegexpQuery
+    from lucene_spark.query.search import _term_rule
+
     con = duckdb.connect()
     for pat, s, exp in CASES:
         pats = translate_regexp(pat)
@@ -63,6 +72,10 @@ def test_translation_semantics_re2():
             con.execute("SELECT regexp_full_match(?, ?)", [s, p]).fetchone()[0]
             for p in pats)
         assert got == exp, (pat, s, pats)
+        batch = pa.record_batch({"term": pa.array([s], pa.string())})
+        got = [t for b in _term_rule(RegexpQuery(pat)).select([batch])
+               for t in b.column("term").to_pylist()]
+        assert got == ([s] if exp else []), (pat, s, pats)
 
 
 def test_translation_semantics_java_via_spark(spark):

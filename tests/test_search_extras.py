@@ -268,7 +268,7 @@ def test_join_expansion_empty_match_spark_route(spark_route):
     q = PrefixQuery("zzzz-not-a-prefix")
     assert spark_route.search(q, 5).count() == 0
     join = spark_route._scored_expansion_join(
-        *spark_route._as_multi_term_cond(q))
+        *spark_route._bare_multi_term(q))
     assert spark_route._live(join).count() == 0
 
 
@@ -511,9 +511,10 @@ def test_predicate_pushdown_reaches_parquet(spark, built_index, searcher,
     spark_route.LOCAL_POSTINGS_MAX = 0
     t = common_terms[0][0]
     assert f"EqualTo(term,{t})" in pushed(spark_route.search(TermQuery(t), 3))
-    assert "StringStartsWith(term," in pushed(
-        spark_route.search(PrefixQuery(t[:2]), 3)
-    )
+    # a prefix reaches parquet as its term range [prefix, next prefix)
+    prefix_plan = pushed(spark_route.search(PrefixQuery(t[:2]), 3))
+    assert f"GreaterThanOrEqual(term,{t[:2]})" in prefix_plan
+    assert f"LessThan(term,{t[0]}{chr(ord(t[1]) + 1)})" in prefix_plan
     t2 = common_terms[1][0]
     q = BooleanQuery(must=[TermQuery(t), TermQuery(t2)])
     assert "In(term" in pushed(spark_route.search(q, 3))
@@ -1255,12 +1256,16 @@ def _check_profile(s):
         s.profile(rewrite_fixpoint(parse_query('{"phrase": ["ba", "be"]}')))
 
 
-def test_wildcard_follows_lucene_grammar(spark):
-    """WildcardQuery patterns follow Lucene's grammar in the Spark
-    expansion (a Java regex) and in the Python oracle alike: ``*`` is any
-    string, ``?`` one code point, a backslash escapes the next character
-    (a trailing one is literal), and ``[``, ``]`` and ``!`` are literal."""
+def test_wildcard_follows_lucene_grammar():
+    """WildcardQuery patterns follow Lucene's grammar in the engine's term
+    rule (RE2 through pyarrow, on the driver and inside Spark alike) and
+    in the Python oracle: ``*`` is any string, ``?`` one code point, a
+    backslash escapes the next character (a trailing one is literal), and
+    ``[``, ``]`` and ``!`` are literal."""
+    import pyarrow as pa
+
     from lucene_spark.query.ast import WildcardQuery, expand_multi_term
+    from lucene_spark.query.search import _term_rule
 
     vocab = ["a[bc]", "a[bc]d", "a[b", "ab", "ac", "abd", "fo", "fo*",
              "fo*o", "foo", "fo\\", "x!y", "xy", "é\U0001d11ez", "éz"]
@@ -1273,11 +1278,11 @@ def test_wildcard_follows_lucene_grammar(spark):
         "x!y": {"x!y"},
         "é?z": {"é\U0001d11ez"},
     }
-    frame = spark.createDataFrame([(t,) for t in vocab], "term string")
+    batch = pa.record_batch({"term": pa.array(vocab, pa.string())})
     for pattern, want in cases.items():
-        cond = IndexSearcher._multi_term_cond(WildcardQuery(pattern))
-        assert {r["term"] for r in frame.filter(cond).collect()} == want, \
-            pattern
+        rule = _term_rule(WildcardQuery(pattern))
+        assert {t for b in rule.select([batch])
+                for t in b.column("term").to_pylist()} == want, pattern
         got = expand_multi_term(WildcardQuery(pattern), vocab)
         terms = ({c.term for c in got.should} if isinstance(got, BooleanQuery)
                  else {got.term})

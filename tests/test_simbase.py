@@ -247,7 +247,7 @@ def test_prefix_routes_through_bounded_rewrite(built_index, spark):  # noqa: F81
     SHOULD rewrite must produce the same docs as BM25's pushdown path
     and score each term with full TermStatistics."""
     s_lm = IndexSearcher(spark, built_index, similarity="lm_dirichlet")
-    assert s_lm._as_multi_term_cond(PrefixQuery("bo")) is None
+    assert s_lm._bare_multi_term(PrefixQuery("bo")) is None
     got = s_lm.search(PrefixQuery("bo"), 500).collect()
     assert got
     s_bm = IndexSearcher(spark, built_index)

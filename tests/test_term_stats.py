@@ -22,7 +22,9 @@ from lucene_spark.index.build import (
 )
 from lucene_spark.index.merge import merge_index, read_term_dict
 from lucene_spark.index.update import update_docs
-from lucene_spark.query.ast import BooleanQuery, PrefixQuery, TermQuery
+from lucene_spark.query.ast import (
+    BooleanQuery, PrefixQuery, RegexpQuery, TermQuery, WildcardQuery,
+)
 from lucene_spark.query.search import IndexSearcher
 from lucene_spark.sources.transcripts import generate_pandas
 
@@ -159,26 +161,50 @@ def test_empty_results_run_no_job(spark, built_index):
         assert hits.schema.simpleString() == "struct<doc_id:bigint,score:float>"
 
 
+def _bare_multi_term_queries(t: str):
+    """A bare Prefix, Wildcard, Regexp (top-level intersection) and nested
+    intersection Regexp query, each matching ``t``."""
+    return [PrefixQuery(t[:3]), WildcardQuery(t[:2] + "?*"),
+            RegexpQuery(t[:2] + "[a-z]*&.*" + t[-1] + ".*"),
+            RegexpQuery("(" + t[:2] + ".*&.*" + t[-1] + ")")]
+
+
 def test_small_multi_term_queries_run_no_job(spark, built_index, pin_terms):
-    """Below LOCAL_POSTINGS_MAX a bare prefix query expands from the term
-    dictionary and runs on the driver: zero Spark jobs for search(),
-    count() and a search_many batch holding it."""
+    """Below LOCAL_POSTINGS_MAX a bare Prefix, Wildcard or Regexp query
+    expands from the term dictionary and runs on the driver: zero Spark
+    jobs for search(), count() and a search_many batch holding it."""
     s = IndexSearcher(spark, built_index)
-    q = PrefixQuery(pin_terms[-1][:3])
-    assert _jobs_of(spark, lambda: s.search(q, 10).collect()) == 0
-    n = []
-    assert _jobs_of(spark, lambda: n.append(s.count(q))) == 0
-    assert n[0] > 0
-    batch = {"prefix": q, "term": TermQuery(pin_terms[0])}
-    assert _jobs_of(spark, lambda: s.search_many(batch, 10).collect()) == 0
+    for q in _bare_multi_term_queries(pin_terms[-1]):
+        assert _jobs_of(spark, lambda: s.search(q, 10).collect()) == 0, q
+        n = []
+        assert _jobs_of(spark, lambda: n.append(s.count(q))) == 0, q
+        assert n[0] > 0, q
+        batch = {"multi": q, "term": TermQuery(pin_terms[0])}
+        assert _jobs_of(
+            spark, lambda: s.search_many(batch, 10).collect()) == 0, q
+
+
+def test_wildcard_conjunction_runs_as_prefix_conjunction(spark, built_index,
+                                                         pin_terms):
+    """A Wildcard expands like a Prefix, so must=[Wildcard, Term] runs as
+    many jobs as must=[Prefix, Term]."""
+    s = IndexSearcher(spark, built_index)
+    t, hot = pin_terms[-1], TermQuery(pin_terms[0])
+    jobs = [_jobs_of(spark, lambda: s.search(
+        BooleanQuery(must=[q, hot]), 10).collect())
+        for q in (PrefixQuery(t[:2]), WildcardQuery(t[:2] + "*"))]
+    assert jobs[0] == jobs[1], jobs
 
 
 def test_bare_prefix_join_path_job_count(spark, built_index, pin_terms):
     """Above the bound a bare prefix keeps the expansion join's plan; its
-    df comes from the committed term statistics, with no aggregation."""
+    df comes from the committed term statistics, with no aggregation. A
+    Wildcard or Regexp expansion join runs no more jobs."""
     s = _spark_route(spark, built_index)
-    q = PrefixQuery(pin_terms[-1][:3])
-    assert _jobs_of(spark, lambda: s.search(q, 10).collect()) == 4
+    queries = _bare_multi_term_queries(pin_terms[-1])
+    assert _jobs_of(spark, lambda: s.search(queries[0], 10).collect()) == 4
+    for q in queries[1:]:
+        assert _jobs_of(spark, lambda: s.search(q, 10).collect()) <= 4, q
 
 
 @pytest.mark.parametrize("positions,build_jobs,merge_jobs", [
@@ -235,10 +261,10 @@ def test_small_update_docs_job_count(small_update):
     assert small_update[1] == 20
 
 
-def test_searcher_open_runs_one_job(spark, small_update):
-    """Opening a searcher infers the postings schema (one job); the term
-    statistics are read with an explicit schema."""
-    assert _jobs_of(spark, lambda: IndexSearcher(spark, small_update[0])) == 1
+def test_searcher_open_runs_no_job(spark, small_update):
+    """Opening a searcher reads postings and term statistics with explicit
+    schemas: no schema-inference job."""
+    assert _jobs_of(spark, lambda: IndexSearcher(spark, small_update[0])) == 0
 
 
 def test_explain_runs_no_job(spark, built_index, small_update, pin_terms):
